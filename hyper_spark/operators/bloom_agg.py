@@ -3,7 +3,8 @@
 Build mirrors hll_agg's ``explode`` strategy: k JVM-native md5 positions →
 ``posexplode`` → ``distinct`` (partial aggregation dedups map-side, so the
 shuffle is bounded by the number of *set bits* ≤ m per group, not input
-rows) → one ``applyInPandas`` packs the bitmap.
+rows) → one bitmap pack per group, streamed through the shared
+``grouped_apply`` (operators/util.py).
 
 ``bloom_prune`` is the runtime-filter use: membership test with JVM-side
 position computation and an Arrow-batched bit probe against the broadcast
@@ -26,11 +27,11 @@ from pyspark.sql.types import (
     LongType,
     StringType,
     StructField,
-    StructType,
 )
 
 from hyper_spark.kernel.bloom import BloomFilter
 from hyper_spark.operators.cms_agg import cms_bucket_col
+from hyper_spark.operators.util import grouped_apply
 
 __all__ = ["bloom_by", "bloom_collect", "bloom_might_contain", "bloom_prune"]
 
@@ -44,8 +45,6 @@ BLOOM_FIELDS = [
     # bloom_prune), so probes validate against this column
     StructField("hash_fn", StringType(), False),
 ]
-
-_GROUP_COL = "__bloom_group"
 
 
 def bloom_by(
@@ -72,17 +71,12 @@ def bloom_by(
     # matching sketch_by's null contract
     nn = df.filter(col.isNotNull())
     # approximate insert count per group (for FPR introspection)
-    counts = (
-        nn.groupBy(*keys).agg(F.count(F.lit(1)).alias("__n"))
-        if keys
-        else nn.agg(F.count(F.lit(1)).alias("__n")).withColumn(_GROUP_COL, F.lit(0))
-    )
+    counts = nn.groupBy(*keys).agg(F.count(F.lit(1)).alias("n"))
     bits_df = (
         nn.select(*keys, positions.alias("__row", "pos"))
         .select(*keys, "pos")
         .distinct()
     )
-    out_schema = StructType([df.schema[kk] for kk in keys] + BLOOM_FIELDS)
 
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:
         bits = np.zeros((m_bits + 7) // 8, dtype=np.uint8)
@@ -95,18 +89,12 @@ def bloom_by(
         )
         return pd.DataFrame(out)
 
-    if keys:
-        packed = bits_df.groupBy(*keys).applyInPandas(pack, out_schema)
-        return packed.drop("n").join(
-            counts.withColumnRenamed("__n", "n"), on=keys, how="left"
-        ).select(*keys, "m_bits", "k", "n", "bits", "hash_fn")
-    grouped = bits_df.withColumn(_GROUP_COL, F.lit(0))
-    packed = grouped.groupBy(_GROUP_COL).applyInPandas(
-        pack, StructType(BLOOM_FIELDS)
+    packed = grouped_apply(bits_df, keys, pack, BLOOM_FIELDS).drop("n")
+    joined = (
+        packed.join(counts, on=keys, how="left") if keys
+        else packed.crossJoin(counts)
     )
-    return packed.drop("n").crossJoin(
-        counts.select(F.col("__n").alias("n"))
-    ).select("m_bits", "k", "n", "bits", "hash_fn")
+    return joined.select(*keys, "m_bits", "k", "n", "bits", "hash_fn")
 
 
 def bloom_collect(

@@ -3,8 +3,9 @@
 Physical plan (same doctrine as hll_agg): the per-row hot path is pure
 JVM — d md5-derived bucket columns → ``posexplode`` → ``groupBy(keys,
 row, bucket).count()`` (Catalyst's partial aggregation caps the shuffle at
-d·w rows per partition regardless of input size) → one ``applyInPandas``
-densify into the d×w int64 counter blob per group.
+d·w rows per partition regardless of input size) → one densify per group
+into the d×w int64 counter blob, streamed through the shared
+``grouped_apply`` (operators/util.py).
 
 Heavy hitters use the standard scalable two-phase shape: candidate
 generation via *per-partition local top-k* (JVM groupBy(partition_id,
@@ -34,6 +35,7 @@ from pyspark.sql.types import (
 )
 
 from hyper_spark.kernel.cms import CountMinSketch
+from hyper_spark.operators.util import grouped_apply
 
 __all__ = [
     "cms_by",
@@ -54,8 +56,6 @@ CMS_FIELDS = [
     # silently corrupt estimates, so probes validate against this column
     StructField("hash_fn", StringType(), False),
 ]
-
-_GROUP_COL = "__cms_group"
 
 
 def md5_bucket_col(col: Column, row: int, modulus: int) -> Column:
@@ -122,7 +122,6 @@ def cms_by(
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
 
-    out_schema = StructType([df.schema[k] for k in keys] + CMS_FIELDS)
 
     def densify(pdf: pd.DataFrame) -> pd.DataFrame:
         counters = np.zeros((depth, width), dtype=np.int64)
@@ -140,12 +139,7 @@ def cms_by(
         )
         return pd.DataFrame(out)
 
-    if keys:
-        return cells.groupBy(*keys).applyInPandas(densify, out_schema)
-    grouped = cells.withColumn(_GROUP_COL, F.lit(0))
-    return grouped.groupBy(_GROUP_COL).applyInPandas(
-        densify, StructType(CMS_FIELDS)
-    )
+    return grouped_apply(cells, keys, densify, CMS_FIELDS)
 
 
 def cms_merge(cms_df: DataFrame, keys: Sequence[str]) -> DataFrame:
@@ -178,11 +172,7 @@ def cms_merge(cms_df: DataFrame, keys: Sequence[str]) -> DataFrame:
         )
         return pd.DataFrame(out)
 
-    if keys:
-        schema = StructType([cms_df.schema[k] for k in keys] + CMS_FIELDS)
-        return cms_df.groupBy(*keys).applyInPandas(merge, schema)
-    grouped = cms_df.withColumn(_GROUP_COL, F.lit(0))
-    return grouped.groupBy(_GROUP_COL).applyInPandas(merge, StructType(CMS_FIELDS))
+    return grouped_apply(cms_df, keys, merge, CMS_FIELDS)
 
 
 def _collect_cms_rows(cms_df: DataFrame, expect_hash_fn: str | None) -> list:

@@ -25,11 +25,12 @@ the standard skew diagnostic — from the sketch alone.
 Physical plan (the cms_by doctrine): per-row hot path is pure JVM —
 d bucket columns + d sign columns -> posexplode -> groupBy(keys, row,
 bucket).sum(sign) (map-side partial aggregation caps the shuffle at
-d*w rows per partition) -> one applyInPandas densify into the d x w
-int64 blob per group. Merge is element-wise addition, so the state is
-associative/commutative and DELETION-TOLERANT: inserting with weight
--1 removes an item, which neither count-min (min breaks) nor the HLL
-family (max breaks) supports.
+d*w rows per partition) -> one densify per group into the d x w int64
+blob, streamed through the shared grouped_apply (operators/util.py).
+Merge is element-wise addition, so the state is associative/commutative
+and DELETION-TOLERANT: inserting with weight -1 removes an item, which
+neither count-min (min breaks) nor the HLL family (max breaks)
+supports.
 """
 
 from __future__ import annotations
@@ -50,6 +51,7 @@ from pyspark.sql.types import (
 )
 
 from hyper_spark.operators.cms_agg import cms_bucket_col
+from hyper_spark.operators.util import grouped_apply
 
 __all__ = [
     "cs_sign_col",
@@ -70,8 +72,6 @@ CS_FIELDS = [
     StructField("counters", BinaryType(), False),
     StructField("hash_fn", StringType(), False),
 ]
-
-_GROUP_COL = "__cs_group"
 
 
 def cs_sign_col(col: Column, row: int, hash_fn: str = "xxhash64") -> Column:
@@ -174,9 +174,6 @@ def cs_from_cells(
     densify, which is exactly ``cs_merge`` of the per-bucket states.
     ``n`` recovers as the wsum total of sketch row 0."""
     keys = list(keys)
-    out_schema = StructType(
-        ([cells.schema[k] for k in keys] if keys else []) + CS_FIELDS
-    )
 
     def densify(pdf: pd.DataFrame) -> pd.DataFrame:
         counters = np.zeros((depth, width), dtype=np.int64)
@@ -197,12 +194,7 @@ def cs_from_cells(
         )
         return pd.DataFrame(out)
 
-    if keys:
-        return cells.groupBy(*keys).applyInPandas(densify, out_schema)
-    grouped = cells.withColumn(_GROUP_COL, F.lit(0))
-    return grouped.groupBy(_GROUP_COL).applyInPandas(
-        densify, StructType(CS_FIELDS)
-    )
+    return grouped_apply(cells, keys, densify, CS_FIELDS)
 
 
 def _check_meta(pdf: pd.DataFrame) -> tuple[int, int, str]:
@@ -234,11 +226,7 @@ def cs_merge(cs_df: DataFrame, keys: Sequence[str]) -> DataFrame:
         )
         return pd.DataFrame(out)
 
-    if keys:
-        schema = StructType([cs_df.schema[k] for k in keys] + CS_FIELDS)
-        return cs_df.groupBy(*keys).applyInPandas(merge, schema)
-    grouped = cs_df.withColumn(_GROUP_COL, F.lit(0))
-    return grouped.groupBy(_GROUP_COL).applyInPandas(merge, StructType(CS_FIELDS))
+    return grouped_apply(cs_df, keys, merge, CS_FIELDS)
 
 
 def _collect_counters(cs_df: DataFrame, expect_hash_fn: str | None):

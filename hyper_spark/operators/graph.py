@@ -685,8 +685,6 @@ def hyperball(
         raise ValueError(f"max_hops must be >= 0, got {max_hops}")
     if estimator not in ("hllpp", "beta"):
         raise ValueError(f"unknown estimator {estimator!r}")
-    from pyspark.sql.types import StringType, StructField, StructType
-
     from hyper_spark.functions.hashing import hll_prepare
     from hyper_spark.operators.hll_agg import (
         SKETCH_FIELDS,
@@ -694,6 +692,7 @@ def hyperball(
         beta_estimate_agg,
         cardinality_col,
     )
+    from hyper_spark.operators.util import grouped_apply
 
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     canon = _star_edges(e)
@@ -716,15 +715,7 @@ def hyperball(
         if estimator == "beta":
             est = st.groupBy("id").agg(beta_estimate_agg(p).alias("estimate"))
         else:
-            schema = StructType(
-                [st.schema["id"]]
-                + [StructField("__hop", StringType(), False)]
-                + list(SKETCH_FIELDS)
-            )
-            tagged = st.withColumn("__hop", F.lit(str(hop)))
-            sk = tagged.groupBy("id", "__hop").applyInPandas(
-                _densify_fn(p, ["id", "__hop"]), schema
-            )
+            sk = grouped_apply(st, ["id"], _densify_fn(p, ["id"]), SKETCH_FIELDS)
             est = sk.select(
                 "id",
                 cardinality_col(F.col("p"), F.col("registers")).alias(

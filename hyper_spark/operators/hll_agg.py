@@ -13,12 +13,13 @@ Two physical strategies, both ending in identical sketch bytes:
     (Catalyst inserts the map-side partial aggregate; shuffle volume is
     bounded by Σ_g min(n_g, 2^p) small int rows, and the 2^p idx values
     act as a built-in salt that spreads any hot group key over the whole
-    cluster) → one ``applyInPandas`` densify per group.
+    cluster) → one densify per group, streamed through the shared
+    ``grouped_apply`` (operators/util.py).
 
 ``partial`` (default for global / few-group sketches)
     rows → JVM-native (idx, rho) → ``mapInPandas`` builds *per-partition*
     dense partial sketches (map-side combine; nothing raw is shuffled)
-    → ``groupBy(keys)`` merge of 2^p-byte blobs with
+    → ``grouped_apply`` merge of 2^p-byte blobs per group with
     ``np.maximum.reduce``. This is the treeAggregate shape: shuffle
     carries only num_partitions × num_groups blobs.
 
@@ -57,6 +58,7 @@ from hyper_spark.kernel.hll import (
     estimate_beta,
     estimate_from_registers,
 )
+from hyper_spark.operators.util import grouped_apply
 
 __all__ = [
     "sketch_by",
@@ -79,13 +81,6 @@ SKETCH_FIELDS = [
     StructField("registers", BinaryType(), False),
 ]
 
-_GROUP_COL = "__hll_group"
-
-
-def _sketch_schema(df: DataFrame, keys: Sequence[str]) -> StructType:
-    key_fields = [df.schema[k] for k in keys]
-    return StructType(list(key_fields) + SKETCH_FIELDS)
-
 
 def _densify_fn(p: int, keys: Sequence[str], encoding: str = "dense"):
     m = 1 << p
@@ -103,60 +98,6 @@ def _densify_fn(p: int, keys: Sequence[str], encoding: str = "dense"):
         return pd.DataFrame(out)
 
     return densify
-
-
-def _stream_groups(per_group_fn, keys: Sequence[str]):
-    """mapInPandas wrapper that applies a per-group pandas function to
-    key-CLUSTERED, key-SORTED partitions: one Python/Arrow round trip
-    per partition instead of one per group. applyInPandas paid ~2.8 ms
-    of per-group overhead — 2.3 s of a 2.8 s hourly-rollup build was
-    744 tiny-group round trips (profiled r6; guide §4.1). The trailing
-    (possibly incomplete) group of every batch is carried into the
-    next; outputs are batched into one frame per input batch."""
-    keys = list(keys)
-
-    def _neq_prev(pdf: pd.DataFrame):
-        neq = None
-        for k in keys:
-            col, prev = pdf[k], pdf[k].shift()
-            both_na = col.isna() & prev.isna()
-            d = col.ne(prev) & ~both_na
-            neq = d if neq is None else (neq | d)
-        return neq
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        tail = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if tail is not None:
-                pdf = pd.concat([tail, pdf], ignore_index=True)
-                tail = None
-            seg = _neq_prev(pdf).cumsum()
-            last = seg.iloc[-1]
-            tail = pdf[seg == last]
-            done = pdf[seg < last]
-            if len(done):
-                outs = [
-                    per_group_fn(g)
-                    for _, g in done.groupby(seg[seg < last], sort=False)
-                ]
-                yield pd.concat(outs, ignore_index=True)
-        if tail is not None and len(tail):
-            yield per_group_fn(tail)
-
-    return run
-
-
-def _grouped_apply(df: DataFrame, keys: Sequence[str], per_group_fn, schema):
-    """Cluster by ``keys`` + sort within partitions, then stream groups
-    through ``per_group_fn`` (see _stream_groups)."""
-    keys = list(keys)
-    return (
-        df.repartition(*keys)
-        .sortWithinPartitions(*keys)
-        .mapInPandas(_stream_groups(per_group_fn, keys), schema)
-    )
 
 
 def _merge_fn(keys: Sequence[str], encoding: str = "dense", decode_encoding: str = "auto"):
@@ -283,32 +224,18 @@ def sketch_by(
     prepared = df.filter(col.isNotNull()).select(
         *keys, idx.alias("idx"), rho.alias("rho")
     )
-    schema = _sketch_schema(df, keys)
+    schema = StructType([df.schema[k] for k in keys] + SKETCH_FIELDS)
 
     if strategy == "partial":
         partials = prepared.mapInPandas(
             _partials_fn(p, keys, encoding), schema=schema
         )
-        if keys:
-            return partials.groupBy(*keys).applyInPandas(
-                _merge_fn(keys, encoding), schema
-            )
-        grouped = partials.withColumn(_GROUP_COL, F.lit(0))
-        return (
-            grouped.groupBy(_GROUP_COL)
-            .applyInPandas(_merge_fn([], encoding), StructType(SKETCH_FIELDS))
-        )
+        return grouped_apply(partials, keys, _merge_fn(keys, encoding), SKETCH_FIELDS)
 
     if strategy == "explode":
         reg_table = prepared.groupBy(*keys, "idx").agg(F.max("rho").alias("rho"))
-        if keys:
-            return _grouped_apply(
-                reg_table, keys, _densify_fn(p, keys, encoding), schema
-            )
-        grouped = reg_table.withColumn(_GROUP_COL, F.lit(0))
-        return (
-            grouped.groupBy(_GROUP_COL)
-            .applyInPandas(_densify_fn(p, [], encoding), StructType(SKETCH_FIELDS))
+        return grouped_apply(
+            reg_table, keys, _densify_fn(p, keys, encoding), SKETCH_FIELDS
         )
 
     raise ValueError(f"unknown strategy {strategy!r}")
@@ -335,8 +262,6 @@ def multi_sketch_by(
     tiny aggregates, not N reads.
 
     Returns DataFrame[metric string, *keys, p, registers]."""
-    from pyspark.sql.types import StringType
-
     keys = list(keys)
     if encoding == "packed6":
         raise ValueError(
@@ -363,13 +288,8 @@ def multi_sketch_by(
         .filter(F.col("idx").isNotNull())
     )
     reg = exploded.groupBy("metric", *keys, "idx").agg(F.max("rho").alias("rho"))
-    schema = StructType(
-        [StructField("metric", StringType(), False)]
-        + [df.schema[k] for k in keys]
-        + SKETCH_FIELDS
-    )
-    return _grouped_apply(
-        reg, ["metric"] + keys, _densify_fn(p, ["metric"] + keys, encoding), schema
+    return grouped_apply(
+        reg, ["metric"] + keys, _densify_fn(p, ["metric"] + keys, encoding), SKETCH_FIELDS
     )
 
 
@@ -442,14 +362,8 @@ def union_sketches(
             "checkpointed_sketch_build (the decode hint must travel with "
             "the blobs); use dense/auto/sparse here"
         )
-    if keys:
-        schema = StructType([sketch_df.schema[k] for k in keys] + SKETCH_FIELDS)
-        return _grouped_apply(
-            sketch_df, keys, _merge_fn(keys, encoding, decode_encoding), schema
-        )
-    grouped = sketch_df.withColumn(_GROUP_COL, F.lit(0))
-    return grouped.groupBy(_GROUP_COL).applyInPandas(
-        _merge_fn([], encoding, decode_encoding), StructType(SKETCH_FIELDS)
+    return grouped_apply(
+        sketch_df, keys, _merge_fn(keys, encoding, decode_encoding), SKETCH_FIELDS
     )
 
 

@@ -3,7 +3,8 @@
 Shape matches the package's other sketches (quantiles.py, hll_agg.py):
 per-partition FD build inside ``mapInPandas`` (the map-side combine —
 Arrow batches of the embedding column stacked into one numpy matmul-
-friendly matrix), then ``groupBy(keys)`` merge of serialized sketches.
+friendly matrix), then a per-group merge of serialized sketches through
+the shared ``grouped_apply`` (operators/util.py).
 The shuffle carries partitions x groups blobs of at most
 ``(ell-1) * dim`` float64s plus four stats — never raw vectors — so a
 100-TB embedding table ships kilobytes per group to the reducer, the
@@ -43,6 +44,7 @@ from pyspark.sql.types import (
 )
 
 from hyper_spark.kernel.fd import FrequentDirections
+from hyper_spark.operators.util import grouped_apply
 
 __all__ = [
     "fd_sketch_by",
@@ -56,8 +58,6 @@ __all__ = [
     "gram_covariance",
     "gram_components",
 ]
-
-_GROUP_COL = "__fd_group"
 
 FD_STATE_FIELDS = [
     StructField("ell", IntegerType(), False),
@@ -220,14 +220,9 @@ def fd_sketch_by(
         partials = selected.mapInPandas(
             _build_fn(ell, int(dim), keys, col_name), schema
         )
-        return partials.groupBy(*keys).applyInPandas(_merge_fn(keys), schema)
-    partials = selected.mapInArrow(
-        _build_arrow_fn(ell, int(dim)), StructType(FD_STATE_FIELDS)
-    )
-    grouped = partials.withColumn(_GROUP_COL, F.lit(0))
-    return grouped.groupBy(_GROUP_COL).applyInPandas(
-        _merge_fn([]), StructType(FD_STATE_FIELDS)
-    )
+    else:
+        partials = selected.mapInArrow(_build_arrow_fn(ell, int(dim)), schema)
+    return grouped_apply(partials, keys, _merge_fn(keys), FD_STATE_FIELDS)
 
 
 def fd_merge(sketch_df: DataFrame, keys: Sequence[str]) -> DataFrame:
@@ -235,15 +230,7 @@ def fd_merge(sketch_df: DataFrame, keys: Sequence[str]) -> DataFrame:
     grouping column from a finer sketch table): same merge the builder
     uses, so a rollup never rescans raw vectors."""
     keys = list(keys)
-    if keys:
-        out_schema = StructType(
-            [sketch_df.schema[k] for k in keys] + FD_STATE_FIELDS
-        )
-        return sketch_df.groupBy(*keys).applyInPandas(_merge_fn(keys), out_schema)
-    grouped = sketch_df.withColumn(_GROUP_COL, F.lit(0))
-    return grouped.groupBy(_GROUP_COL).applyInPandas(
-        _merge_fn([]), StructType(FD_STATE_FIELDS)
-    )
+    return grouped_apply(sketch_df, keys, _merge_fn(keys), FD_STATE_FIELDS)
 
 
 def fd_components(state: bytes, k: int) -> tuple[np.ndarray, np.ndarray]:
@@ -432,36 +419,21 @@ def gram_by(
         if first is None:
             raise ValueError("cannot infer dim from an all-NULL column")
         dim = len(first[0])
+    schema = StructType([selected.schema[k] for k in keys] + GRAM_STATE_FIELDS)
     if keys:
-        schema = StructType([selected.schema[k] for k in keys] + GRAM_STATE_FIELDS)
         partials = selected.mapInPandas(
             _gram_build_fn(int(dim), keys, col_name), schema
         )
-        return partials.groupBy(*keys).applyInPandas(_gram_merge_fn(keys), schema)
-    partials = selected.mapInArrow(
-        _gram_build_arrow_fn(int(dim)), StructType(GRAM_STATE_FIELDS)
-    )
-    grouped = partials.withColumn(_GROUP_COL, F.lit(0))
-    return grouped.groupBy(_GROUP_COL).applyInPandas(
-        _gram_merge_fn([]), StructType(GRAM_STATE_FIELDS)
-    )
+    else:
+        partials = selected.mapInArrow(_gram_build_arrow_fn(int(dim)), schema)
+    return grouped_apply(partials, keys, _gram_merge_fn(keys), GRAM_STATE_FIELDS)
 
 
 def gram_merge(gram_df: DataFrame, keys: Sequence[str]) -> DataFrame:
     """Roll a gram table up to coarser keys by blob addition — exact,
     no raw-vector rescan (the FD ``fd_merge`` counterpart)."""
     keys = list(keys)
-    if keys:
-        out_schema = StructType(
-            [gram_df.schema[k] for k in keys] + GRAM_STATE_FIELDS
-        )
-        return gram_df.groupBy(*keys).applyInPandas(
-            _gram_merge_fn(keys), out_schema
-        )
-    grouped = gram_df.withColumn(_GROUP_COL, F.lit(0))
-    return grouped.groupBy(_GROUP_COL).applyInPandas(
-        _gram_merge_fn([]), StructType(GRAM_STATE_FIELDS)
-    )
+    return grouped_apply(gram_df, keys, _gram_merge_fn(keys), GRAM_STATE_FIELDS)
 
 
 def gram_matrix(row) -> np.ndarray:

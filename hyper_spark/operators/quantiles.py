@@ -1,8 +1,9 @@
 """Distributed quantile sketches: KLL and t-digest.
 
 Shape: per-partition sketch build inside ``mapInPandas`` (Arrow batches of
-the numeric column only — the map-side combine), then ``groupBy(keys)``
-merge of serialized sketches. Shuffle carries partitions × groups small
+the numeric column only — the map-side combine), then a per-group merge
+of serialized sketches through the shared ``grouped_apply``
+(operators/util.py). Shuffle carries partitions × groups small
 JSON states, never raw values. This is the treeAggregate shape the north
 rule asks for, and it is what survives 100 TB: the raw column never
 crosses the network.
@@ -33,6 +34,7 @@ from pyspark.sql.types import (
 from hyper_spark.kernel.kll import KllSketch
 from hyper_spark.kernel.req import ReqSketch
 from hyper_spark.kernel.tdigest import TDigest
+from hyper_spark.operators.util import grouped_apply
 
 __all__ = [
     "kll_by",
@@ -50,8 +52,6 @@ _KINDS = {
     "req": lambda p: ReqSketch(int(p)),
 }
 _CLASSES = {"kll": KllSketch, "tdigest": TDigest, "req": ReqSketch}
-
-_GROUP_COL = "__q_group"
 
 SKETCH_STATE_FIELDS = [
     StructField("kind", StringType(), False),
@@ -117,12 +117,7 @@ def _sketch_by(df, keys, col, kind, param) -> DataFrame:
         [selected.schema[k] for k in keys] + SKETCH_STATE_FIELDS
     )
     partials = selected.mapInPandas(_build_fn(kind, param, keys, col_name), schema)
-    if keys:
-        return partials.groupBy(*keys).applyInPandas(_merge_fn(kind, keys), schema)
-    grouped = partials.withColumn(_GROUP_COL, F.lit(0))
-    return grouped.groupBy(_GROUP_COL).applyInPandas(
-        _merge_fn(kind, []), StructType(SKETCH_STATE_FIELDS)
-    )
+    return grouped_apply(partials, keys, _merge_fn(kind, keys), SKETCH_STATE_FIELDS)
 
 
 def kll_by(df: DataFrame, keys: Sequence[str], col: str | Column, k: int = 200) -> DataFrame:
@@ -173,9 +168,6 @@ def sketch_quantiles(
     fields = [StructField(_q_name(q), DoubleType(), True) for q in qs]
     if len({f.name for f in fields}) != len(fields):
         raise ValueError(f"duplicate quantile probes: {qs}")
-    schema = StructType(
-        ([sketch_df.schema[k] for k in keys] if keys else []) + fields
-    )
 
     def evaluate(pdf: pd.DataFrame) -> pd.DataFrame:
         kind = pdf["kind"].iloc[0]
@@ -188,10 +180,7 @@ def sketch_quantiles(
             out[f.name] = [float(sk.quantile(q))]
         return pd.DataFrame(out)
 
-    if keys:
-        return sketch_df.groupBy(*keys).applyInPandas(evaluate, schema)
-    grouped = sketch_df.withColumn(_GROUP_COL, F.lit(0))
-    return grouped.groupBy(_GROUP_COL).applyInPandas(evaluate, schema)
+    return grouped_apply(sketch_df, keys, evaluate, fields)
 
 
 def sketch_ranks(
@@ -213,13 +202,10 @@ def sketch_ranks(
     values = [float(v) for v in values]
     if not values:
         raise ValueError("no probe values")
-    schema = StructType(
-        ([sketch_df.schema[k] for k in keys] if keys else [])
-        + [
-            StructField("value", DoubleType(), False),
-            StructField("rank", DoubleType(), False),
-        ]
-    )
+    fields = [
+        StructField("value", DoubleType(), False),
+        StructField("rank", DoubleType(), False),
+    ]
 
     def evaluate(pdf: pd.DataFrame) -> pd.DataFrame:
         kind = pdf["kind"].iloc[0]
@@ -237,10 +223,7 @@ def sketch_ranks(
         out["rank"] = [float(sk.rank(v)) for v in values]
         return pd.DataFrame(out)
 
-    if keys:
-        return sketch_df.groupBy(*keys).applyInPandas(evaluate, schema)
-    grouped = sketch_df.withColumn(_GROUP_COL, F.lit(0))
-    return grouped.groupBy(_GROUP_COL).applyInPandas(evaluate, schema)
+    return grouped_apply(sketch_df, keys, evaluate, fields)
 
 
 def ranks_by(

@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, BooleanType
 
 from hyper_spark.operators.cms_agg import cms_bucket_col
+from hyper_spark.operators.util import grouped_apply
 
 __all__ = [
     "build_file_index",
@@ -139,8 +140,8 @@ def _file_blooms(
             }
         )
 
-    return partials.groupBy("__file").applyInPandas(
-        or_merge, _BLOOM_PARTIAL_FIELDS
+    return grouped_apply(
+        partials, ["__file"], or_merge, [partials.schema["n"], partials.schema["bits"]]
     )
 
 

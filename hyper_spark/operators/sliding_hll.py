@@ -50,11 +50,11 @@ from typing import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType
 from pyspark.sql.window import Window
 
 from hyper_spark.functions.hashing import hll_prepare
 from hyper_spark.operators.hll_agg import SKETCH_FIELDS, _densify_fn, cardinality_col
+from hyper_spark.operators.util import grouped_apply
 
 __all__ = [
     "sliding_register_table",
@@ -236,12 +236,7 @@ def sliding_estimates(
         return stacked.groupBy(*gkeys).agg(
             beta_estimate_agg(p).alias("estimate")
         )
-    schema = StructType(
-        [state.schema[k] for k in keys]
-        + [StructField("window", StringType(), False)]
-        + list(SKETCH_FIELDS)
-    )
-    sk = stacked.groupBy(*gkeys).applyInPandas(_densify_fn(p, gkeys), schema)
+    sk = grouped_apply(stacked, gkeys, _densify_fn(p, gkeys), SKETCH_FIELDS)
     return sk.select(
         *keys,
         "window",

@@ -19,9 +19,10 @@ Physical plan (the hll_agg 'partial' doctrine):
    smallest distinct hashes (numpy unique + slice) — the map-side
    combine. Shuffle is bounded by |batches| × k longs per group,
    independent of input rows.
-3. ``applyInPandas`` merge per group: union the entry arrays, re-trim
-   to k. Associative/commutative/idempotent (kernel property tests),
-   so the same rows checkpoint/resume and tree-merge like HLL rows.
+3. Merge per group through the shared ``grouped_apply``
+   (operators/util.py): union the entry arrays, re-trim to k.
+   Associative/commutative/idempotent (kernel property tests), so the
+   same rows checkpoint/resume and tree-merge like HLL rows.
 
 Sketch rows: ``(keys..., k, n_entries, entries, hash_fn)`` with
 ``entries`` the canonical big-endian uint64 blob — plain parquet
@@ -46,6 +47,7 @@ from pyspark.sql.types import (
 )
 
 from hyper_spark.kernel.theta import ThetaSketch, theta_rse
+from hyper_spark.operators.util import grouped_apply
 
 __all__ = [
     "theta_by",
@@ -67,13 +69,6 @@ THETA_FIELDS = [
     # build/probe hash provenance, same contract as cms/bloom rows
     StructField("hash_fn", StringType(), False),
 ]
-
-_GROUP_COL = "__theta_group"
-
-
-def _schema(df: DataFrame, keys: Sequence[str]) -> StructType:
-    key_fields = [df.schema[k] for k in keys]
-    return StructType(list(key_fields) + THETA_FIELDS)
 
 
 def _row(keys: Sequence[str], key_vals, sk: ThetaSketch, hash_fn: str) -> dict:
@@ -163,39 +158,22 @@ def theta_by(
             "theta sketches hash with xxhash64 (no kernel-parity "
             f"obligation exists for this family); got {hash_fn!r}"
         )
+    keys = list(keys)
     c = F.col(col) if isinstance(col, str) else col
     prepared = (
         df.filter(c.isNotNull())
         .select(*keys, F.xxhash64(c).alias("__h"))
     )
-    partials = prepared.mapInPandas(
-        _partials_fn(k, list(keys), hash_fn), _schema(prepared, keys)
-    )
-    if keys:
-        return partials.groupBy(*keys).applyInPandas(
-            _merge_fn(list(keys)), _schema(prepared, keys)
-        )
-    return (
-        partials.withColumn(_GROUP_COL, F.lit(0))
-        .groupBy(_GROUP_COL)
-        .applyInPandas(_merge_fn([]), StructType(THETA_FIELDS))
-    )
+    schema = StructType([prepared.schema[kk] for kk in keys] + THETA_FIELDS)
+    partials = prepared.mapInPandas(_partials_fn(k, keys, hash_fn), schema)
+    return grouped_apply(partials, keys, _merge_fn(keys), THETA_FIELDS)
 
 
 def theta_union(sketch_df: DataFrame, keys: Sequence[str] = ()) -> DataFrame:
     """Lossless re-merge of sketch rows (e.g. hourly rows → daily):
     one row per remaining ``keys`` group."""
     keys = list(keys)
-    if keys:
-        return sketch_df.groupBy(*keys).applyInPandas(
-            _merge_fn(keys),
-            StructType([sketch_df.schema[k] for k in keys] + THETA_FIELDS),
-        )
-    return (
-        sketch_df.withColumn(_GROUP_COL, F.lit(0))
-        .groupBy(_GROUP_COL)
-        .applyInPandas(_merge_fn([]), StructType(THETA_FIELDS))
-    )
+    return grouped_apply(sketch_df, keys, _merge_fn(keys), THETA_FIELDS)
 
 
 @F.pandas_udf(DoubleType())

@@ -2,7 +2,14 @@
 
 from __future__ import annotations
 
+from typing import Callable, Iterator, Sequence
+
+import numpy as np
+import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
+from pyspark.sql.types import StructField, StructType
 
 __all__ = ["spread", "widen_for_explosion"]
 
@@ -40,3 +47,168 @@ def widen_for_explosion(df: DataFrame, *cols: str, factor: int = 1) -> DataFrame
     construction (no constant tuned to local mode)."""
     want = df.sparkSession.sparkContext.defaultParallelism * factor
     return df.repartition(want, *cols)
+
+
+def grouped_apply(
+    df: DataFrame,
+    keys: Sequence[str],
+    per_group_fn: Callable[[pd.DataFrame], pd.DataFrame],
+    fields: Sequence[StructField],
+) -> DataFrame:
+    """The reduce step every sketch family shares: apply
+    ``per_group_fn`` once per ``keys`` group (once in all when ``keys``
+    is empty) and emit what it returns as rows of ``keys`` followed by
+    ``fields``.
+
+    Keyed: cluster by ``keys``, sort within partitions and stream the
+    groups through one ``mapInArrow`` — one Python/Arrow round trip
+    per partition instead of the ~2.8 ms per group ``applyInPandas``
+    pays (2.3 s of a 2.8 s hourly-rollup build was 744 tiny-group
+    round trips). Global: one ``SinglePartition`` exchange and one call
+    over the partition's rows. Empty input yields no rows either way,
+    like ``groupBy().applyInPandas``. NULL keys form one group.
+
+    Groups are split on the Arrow key columns, before any pandas
+    conversion, and each group reaches ``per_group_fn`` with the
+    dtypes ``applyInPandas`` would give it: an integral column holding
+    a NULL turns float64 only in the groups that hold the NULL, so a
+    bigint key above 2^53 is never rounded by a neighbouring group. A
+    keyed group may arrive as a slice whose index need not start at 0,
+    so ``per_group_fn`` reads rows by position (``iloc``), not by
+    label."""
+    keys = list(keys)
+    schema = StructType([df.schema[k] for k in keys] + list(fields))
+    frames = _GroupFrames(df.sparkSession, schema)
+    if not keys:
+        return df.repartition(1).mapInArrow(_apply_once(per_group_fn, frames), schema)
+    return (
+        df.repartition(*keys)
+        .sortWithinPartitions(*keys)
+        .mapInArrow(_stream_groups(per_group_fn, keys, frames), schema)
+    )
+
+
+class _GroupFrames:
+    """Arrow <-> pandas with the conversions of Spark's grouped-map
+    pandas UDFs (pyspark's ``GroupPandasUDFSerializer``), configured
+    from the session the way the Python worker configures it."""
+
+    def __init__(self, spark, schema: StructType):
+        from pyspark.sql.pandas.serializers import GroupPandasUDFSerializer
+        from pyspark.sql.pandas.types import to_arrow_type
+
+        def flag(key: str, default: str) -> bool:
+            return spark.conf.get(key, default).lower() == "true"
+
+        self._ser = GroupPandasUDFSerializer(
+            spark.conf.get("spark.sql.session.timeZone"),
+            flag("spark.sql.execution.pandas.convertToArrowArraySafely", "false"),
+            flag("spark.sql.legacy.execution.pandas.groupedMap.assignColumnsByName", "true"),
+            flag("spark.sql.execution.pythonUDF.pandas.intToDecimalCoercionEnabled", "false"),
+        )
+        self._out_type = to_arrow_type(
+            schema,
+            prefers_large_types=flag("spark.sql.execution.arrow.useLargeVarTypes", "false"),
+        )
+
+    def to_pandas(self, table: pa.Table) -> pd.DataFrame:
+        cols = [self._ser.arrow_to_pandas(c, i) for i, c in enumerate(table.itercolumns())]
+        return pd.concat(cols, axis=1)
+
+    def groups(self, table: pa.Table, starts: np.ndarray) -> Iterator[pd.DataFrame]:
+        """Each group of ``table`` (groups begin at the row offsets
+        ``starts``) as its own frame. Only integral and boolean columns
+        change dtype with a NULL present; when none holds a NULL the
+        table converts once and the groups are row slices of it."""
+        ends = [*starts[1:], table.num_rows]
+        if any(
+            (pa.types.is_integer(c.type) or pa.types.is_boolean(c.type)) and c.null_count
+            for c in table.itercolumns()
+        ):
+            for a, b in zip(starts, ends):
+                yield self.to_pandas(table.slice(a, b - a))
+            return
+        pdf = self.to_pandas(table)
+        for a, b in zip(starts, ends):
+            yield pdf.iloc[a:b]
+
+    def to_arrow(self, pdf: pd.DataFrame) -> pa.RecordBatch:
+        batch = self._ser._create_batch([(pdf, self._out_type)])
+        return pa.RecordBatch.from_struct_array(batch.column(0))
+
+    def outputs_to_arrow(self, outs: list[pd.DataFrame]) -> Iterator[pa.RecordBatch]:
+        """The groups' outputs as Arrow, each converted as if alone:
+        they are concatenated in pandas only when their dtypes agree,
+        so one group's NaN key cannot turn the others' keys float64."""
+        if all(o.dtypes.equals(outs[0].dtypes) for o in outs[1:]):
+            yield self.to_arrow(pd.concat(outs, ignore_index=True))
+        else:
+            yield from map(self.to_arrow, outs)
+
+
+def _apply_once(per_group_fn, frames: _GroupFrames):
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        parts = [b for b in batches if b.num_rows]
+        if parts:
+            table = pa.Table.from_batches(parts)
+            yield frames.to_arrow(per_group_fn(frames.to_pandas(table)))
+
+    return run
+
+
+def _same_group(a, b) -> np.ndarray:
+    """Row-wise: do the key values ``a[i]`` and ``b[i]`` fall in one
+    group? NULLs group together, and so do NaNs."""
+    same = pc.or_(
+        pc.fill_null(pc.equal(a, b), False),
+        pc.and_(pc.is_null(a), pc.is_null(b)),
+    )
+    if pa.types.is_floating(a.type):
+        both_nan = pc.fill_null(pc.and_(pc.is_nan(a), pc.is_nan(b)), False)
+        same = pc.or_(same, both_nan)
+    return same.to_numpy(zero_copy_only=False)
+
+
+def _group_starts(table: pa.Table, keys: list[str]) -> np.ndarray:
+    """Row offsets at which a key-sorted table starts a new group."""
+    n = table.num_rows
+    new = np.ones(n, dtype=bool)
+    same = np.ones(n - 1, dtype=bool)
+    for k in keys:
+        col = table.column(k)
+        same &= _same_group(col.slice(1), col.slice(0, n - 1))
+    new[1:] = ~same
+    return np.flatnonzero(new)
+
+
+def _stream_groups(per_group_fn, keys: list[str], frames: _GroupFrames):
+    """Split key-sorted batches into groups. The trailing (possibly
+    incomplete) group of every batch is carried into the next; outputs
+    are batched into one record batch per input batch where their
+    dtypes allow."""
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        tail = None
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            table = pa.Table.from_batches([batch])
+            if tail is None:
+                starts = _group_starts(table, keys)
+            else:
+                # the carried group's last row decides whether the
+                # batch's first row opens a new group
+                edge = pa.concat_tables([tail.slice(tail.num_rows - 1), table])
+                starts = np.concatenate(
+                    [[0], _group_starts(edge, keys)[1:] + tail.num_rows - 1]
+                )
+                table = pa.concat_tables([tail, table])
+            last = int(starts[-1])
+            tail = table.slice(last)
+            if last:
+                done = frames.groups(table.slice(0, last), starts[:-1])
+                yield from frames.outputs_to_arrow([per_group_fn(g) for g in done])
+        if tail is not None:
+            yield frames.to_arrow(per_group_fn(frames.to_pandas(tail)))
+
+    return run

@@ -11,7 +11,9 @@ README.md:10-15, made explicit and restartable):
               partial; register max reassembles the exact sketch) and
               spreads any hot group key over num_salts reducers.
     level k   fold salts by ``fanout``: salt' = salt mod ceil(cur/fanout),
-              merge with register max.
+              merge with register max, one (keys, salt') group at a
+              time through the shared ``grouped_apply``
+              (operators/util.py).
     ...       until one sketch per keys group remains.
 
 Every level is persisted as parquet under ``checkpoint_dir/level_NN``
@@ -51,6 +53,7 @@ from pyspark.sql.types import (
 from hyper_spark.functions.hashing import hll_prepare
 from hyper_spark.kernel.hll import encode_registers
 from hyper_spark.operators.hll_agg import SKETCH_FIELDS, _merge_fn
+from hyper_spark.operators.util import grouped_apply
 
 __all__ = ["checkpointed_sketch_build", "resume_info"]
 
@@ -210,16 +213,16 @@ def checkpointed_sketch_build(
                 "__salt", F.pmod(F.col("__salt"), F.lit(next_salts))
             ).select(*keys, "__salt", "p", "registers")
             merge_keys = keys + ["__salt"]
-            schema = StructType(
-                [folded.schema[k] for k in merge_keys] + SKETCH_FIELDS
-            )
             # intermediate levels keep the chosen encoding; the last level
             # (next_salts == 1) emits canonical dense output blobs. The
             # decode hint mirrors the writer's encoding — mandatory for
             # 'packed6', whose blob length is ambiguous with sparse.
             lvl_enc = "dense" if next_salts == 1 else encoding
-            merged = folded.groupBy(*merge_keys).applyInPandas(
-                _merge_fn(merge_keys, lvl_enc, decode_encoding=encoding), schema
+            merged = grouped_apply(
+                folded,
+                merge_keys,
+                _merge_fn(merge_keys, lvl_enc, decode_encoding=encoding),
+                SKETCH_FIELDS,
             )
             merged.write.mode("overwrite").parquet(path)
             _write_metrics(spark, checkpoint_dir, level, path, t0)

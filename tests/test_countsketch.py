@@ -146,8 +146,13 @@ def test_mismatch_guards(spark):
 
 def test_build_plan_is_jvm_until_densify(spark):
     """The per-row hot path (bucket+sign+explode+partial agg) contains
-    no Python; the only pandas stage is the per-group densify."""
+    no Python; the only Python stage is the streamed per-group densify
+    (one ``MapInArrow`` that hands each group to pandas), which sits
+    above the JVM aggregate."""
     df = spark.createDataFrame(zipf_rows(500))
     plan = cs_by(df, ["g"], "item")._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    assert plan.count("FlatMapGroupsInPandas") == 1
+    assert "FlatMapGroupsInPandas" not in plan and "MapInPandas" not in plan
+    assert plan.count("MapInArrow") == 1
+    # executedPlan renders the root first: the aggregate is below it
+    assert plan.index("MapInArrow") < plan.index("HashAggregate")
