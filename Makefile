@@ -3,7 +3,8 @@ PY ?= python
 .PHONY: test bench dist scaling correctness clean
 
 test:
-	$(PY) -m pytest tests/ -x -q
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
+	timeout -k 10 2670 $(PY) -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
 bench:
 	$(PY) bench.py

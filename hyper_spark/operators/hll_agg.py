@@ -8,7 +8,7 @@ reference README itself sketches the map/reduce deployment
 
 Two physical strategies, both ending in identical sketch bytes:
 
-``explode`` (default for grouped sketches)
+``explode`` (the default)
     rows → JVM-native (idx, rho) columns → ``groupBy(keys, idx).max(rho)``
     (Catalyst inserts the map-side partial aggregate; shuffle volume is
     bounded by Σ_g min(n_g, 2^p) small int rows, and the 2^p idx values
@@ -16,18 +16,21 @@ Two physical strategies, both ending in identical sketch bytes:
     cluster) → one densify per group, streamed through the shared
     ``grouped_apply`` (operators/util.py).
 
-``partial`` (default for global / few-group sketches)
-    rows → JVM-native (idx, rho) → ``mapInPandas`` builds *per-partition*
-    dense partial sketches (map-side combine; nothing raw is shuffled)
-    → ``grouped_apply`` merge of 2^p-byte blobs per group with
-    ``np.maximum.reduce``. This is the treeAggregate shape: shuffle
-    carries only num_partitions × num_groups blobs.
+``partial``
+    rows → JVM-native (idx, rho) → the shared ``mapInArrow``
+    register-partial builder (``_register_partials``, also checkpoint
+    level 0) builds *per-partition* partial sketches in Arrow and numpy
+    (map-side combine; nothing raw is shuffled) → ``grouped_apply``
+    merge of the blobs per group with ``np.maximum.reduce``. This is
+    the treeAggregate shape: shuffle carries only num_partitions ×
+    num_groups blobs.
 
 At 100 TB: ``explode`` keeps the shuffle proportional to distinct
 (group, idx) pairs — at most 2^p rows per group no matter how many input
 rows — and ``partial`` keeps it proportional to partitions × groups.
-Pick ``partial`` when groups ≪ rows/partition, ``explode`` otherwise;
-``auto`` does exactly that.
+``partial`` can win when groups ≪ rows/partition, but it ships every
+raw (idx, rho) row through Arrow, so ``auto`` always picks ``explode``
+(measured in ``sketch_by``).
 
 Mixed-precision merge folds to the minimum P first, matching union/1
 (``src/hyper.erl:67-88``).
@@ -35,16 +38,22 @@ Mixed-precision merge folds to the minimum P first, matching union/1
 
 from __future__ import annotations
 
+import time
 from typing import Iterator, Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark import TaskContext
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     BinaryType,
     DoubleType,
     IntegerType,
+    LongType,
     StructField,
     StructType,
 )
@@ -79,6 +88,14 @@ __all__ = [
 SKETCH_FIELDS = [
     StructField("p", IntegerType(), False),
     StructField("registers", BinaryType(), False),
+]
+
+# what a map-side partial records about its build (_register_partials)
+LINEAGE_FIELDS = [
+    StructField("partition_id", IntegerType(), False),
+    StructField("rows_in", LongType(), False),
+    StructField("sketch_bytes", LongType(), False),
+    StructField("build_ms", DoubleType(), False),
 ]
 
 
@@ -122,49 +139,101 @@ def _merge_fn(keys: Sequence[str], encoding: str = "dense", decode_encoding: str
     return merge
 
 
-def _partials_fn(p: int, keys: Sequence[str], encoding: str = "dense"):
-    """mapInPandas worker: per Arrow batch, per group, build a dense partial
-    sketch (the map-side combine of the `partial` strategy)."""
+def _group_codes(batch: pa.RecordBatch, cols: Sequence[str]) -> tuple[np.ndarray, np.ndarray]:
+    """Number the distinct ``cols`` value tuples of a non-empty batch:
+    the first row holding each tuple, and each row's tuple number.
+    NULL is a value of its own; no ``cols`` is one tuple."""
+    first = np.zeros(1, dtype=np.int64)
+    code = np.zeros(batch.num_rows, dtype=np.int64)
+    for c in cols:
+        enc = pc.dictionary_encode(batch.column(c), null_encoding="encode")
+        # renumbering after each column keeps the codes below rows^2
+        _, first, code = np.unique(
+            code * len(enc.dictionary) + enc.indices.to_numpy(),
+            return_index=True,
+            return_inverse=True,
+        )
+    return first, code
+
+
+def _grow(a: np.ndarray, n: int) -> np.ndarray:
+    """``a`` with room for at least ``n`` rows; new rows are zero."""
+    if n <= len(a):
+        return a
+    out = np.zeros((max(n, 2 * len(a)),) + a.shape[1:], dtype=a.dtype)
+    out[: len(a)] = a
+    return out
+
+
+def _register_partials(
+    prepared: DataFrame, group_cols: Sequence[str], p: int, encoding: str
+) -> DataFrame:
+    """The map-side combine of every ``partial`` plan (``sketch_by``'s
+    ``partial`` strategy and checkpoint level 0): per task partition,
+    one sketch per distinct ``group_cols`` tuple plus its lineage.
+
+    ``prepared`` holds ``group_cols`` and the JVM-computed ``idx`` and
+    ``rho``. Batches stay in Arrow and numpy: each row gets a group
+    code from the Arrow key columns, a partition-wide slot per group,
+    and one ``np.maximum.at`` per batch folds the batch into a
+    slots × 2^p register matrix. Keys are emitted as the Arrow values
+    that arrived, so a bigint key above 2^53 keeps its exact value
+    whatever shares its batch."""
+    group_cols = list(group_cols)
     m = 1 << p
+    schema = StructType(
+        [prepared.schema[c] for c in group_cols] + SKETCH_FIELDS + LINEAGE_FIELDS
+    )
+    large = prepared.sparkSession.conf.get(
+        "spark.sql.execution.arrow.useLargeVarTypes", "false"
+    ).lower() == "true"
+    out_schema = to_arrow_schema(schema, prefers_large_types=large)
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # accumulate across all batches of the partition: one blob per group
-        acc: dict[tuple, np.ndarray] = {}
-        for pdf in batches:
-            if len(pdf) == 0:
+    def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        t0 = time.perf_counter()
+        slots: dict[tuple, int] = {}
+        heads: list[list[pa.Array]] = []  # key values of the slots each batch opened
+        regs = np.zeros((0, m), dtype=np.uint8)
+        rows_in = np.zeros(0, dtype=np.int64)
+        for batch in batches:
+            if batch.num_rows == 0:
                 continue
-            if keys:
-                grouped = pdf.groupby(list(keys), sort=False, dropna=False)
-                for gkey, sub in grouped:
-                    gkey = gkey if isinstance(gkey, tuple) else (gkey,)
-                    regs = acc.get(gkey)
-                    if regs is None:
-                        regs = acc.setdefault(gkey, np.zeros(m, dtype=np.uint8))
-                    np.maximum.at(
-                        regs,
-                        sub["idx"].to_numpy(dtype=np.int64),
-                        sub["rho"].to_numpy(dtype=np.uint8),
-                    )
-            else:
-                regs = acc.get(())
-                if regs is None:
-                    regs = acc.setdefault((), np.zeros(m, dtype=np.uint8))
-                np.maximum.at(
-                    regs,
-                    pdf["idx"].to_numpy(dtype=np.int64),
-                    pdf["rho"].to_numpy(dtype=np.uint8),
-                )
-        if acc:
-            rows = {
-                k: [gkey[i] for gkey in acc] for i, k in enumerate(keys)
-            }
-            rows["p"] = [p] * len(acc)
-            rows["registers"] = [
-                encode_registers(regs, encoding) for regs in acc.values()
-            ]
-            yield pd.DataFrame(rows)
+            first, code = _group_codes(batch, group_cols)
+            key_cols = [batch.column(c).take(first) for c in group_cols]
+            # with no group_cols the batch is one group, keyed ()
+            tuples = list(zip(*(c.to_pylist() for c in key_cols))) or [()]
+            new = [i for i, t in enumerate(tuples) if t not in slots]
+            for i in new:
+                slots[tuples[i]] = len(slots)
+            if new:
+                heads.append([c.take(new) for c in key_cols])
+            slot = np.fromiter((slots[t] for t in tuples), np.int64, len(tuples))[code]
+            regs, rows_in = _grow(regs, len(slots)), _grow(rows_in, len(slots))
+            np.maximum.at(
+                regs.reshape(-1),
+                slot * m + batch.column("idx").to_numpy(),
+                batch.column("rho").to_numpy().astype(np.uint8),
+            )
+            rows_in += np.bincount(slot, minlength=len(rows_in))
+        n = len(slots)
+        if not n:
+            return
+        blobs = [encode_registers(r, encoding) for r in regs[:n]]
+        build_ms = (time.perf_counter() - t0) * 1000.0 / n
+        cols = [pa.concat_arrays([h[i] for h in heads]) for i in range(len(group_cols))]
+        cols += [
+            pa.array(np.full(n, p)),
+            pa.array(blobs),
+            pa.array(np.full(n, TaskContext.get().partitionId())),
+            pa.array(rows_in[:n]),
+            pa.array(np.fromiter(map(len, blobs), np.int64, n)),
+            pa.array(np.full(n, build_ms)),
+        ]
+        yield pa.RecordBatch.from_arrays(
+            [c.cast(f.type) for c, f in zip(cols, out_schema)], schema=out_schema
+        )
 
-    return build
+    return prepared.mapInArrow(build, schema)
 
 
 def sketch_by(
@@ -224,11 +293,10 @@ def sketch_by(
     prepared = df.filter(col.isNotNull()).select(
         *keys, idx.alias("idx"), rho.alias("rho")
     )
-    schema = StructType([df.schema[k] for k in keys] + SKETCH_FIELDS)
 
     if strategy == "partial":
-        partials = prepared.mapInPandas(
-            _partials_fn(p, keys, encoding), schema=schema
+        partials = _register_partials(prepared, keys, p, encoding).drop(
+            *(f.name for f in LINEAGE_FIELDS)
         )
         return grouped_apply(partials, keys, _merge_fn(keys, encoding), SKETCH_FIELDS)
 

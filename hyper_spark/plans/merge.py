@@ -9,7 +9,11 @@ README.md:10-15, made explicit and restartable):
               salt = xxhash64(value) mod num_salts — salting by *value*
               keeps the union lossless (every value lands in exactly one
               partial; register max reassembles the exact sketch) and
-              spreads any hot group key over num_salts reducers.
+              spreads any hot group key over num_salts reducers. Built
+              in Arrow and numpy by the register-partial builder
+              ``sketch_by(strategy="partial")`` also uses
+              (operators/hll_agg.py::_register_partials), so keys keep
+              their exact values.
     level k   fold salts by ``fanout``: salt' = salt mod ceil(cur/fanout),
               merge with register max, one (keys, salt') group at a
               time through the shared ``grouped_apply``
@@ -18,10 +22,16 @@ README.md:10-15, made explicit and restartable):
 
 Every level is persisted as parquet under ``checkpoint_dir/level_NN``
 before the next starts; a restart skips levels whose ``_SUCCESS`` marker
-exists — resume = rerun the same call. Each level also writes a
-``metrics_NN.json`` (rows, wall ms) and level 0 writes a lineage table
-(spark partition id → rows_in, sketch bytes, build ms per partial) —
-the per-partition observability the north rule asks for.
+exists — resume = rerun the same call. Each level is one Spark write
+query, and every read (the previous level, the result) declares the
+schema the level was written with, so no read launches a
+footer-inference job and a resumed call on a complete directory
+launches no job until its result is read. Each level also writes a
+``metrics_NN.json``: ``rows`` is the count observed during the write
+(``DataFrame.observe``), ``wall_ms`` is the write alone, with no
+re-read. Level 0 writes a lineage table (spark partition id → rows_in,
+sketch bytes, build ms per partial) — the per-partition observability
+the north rule asks for.
 
 Why explicit levels instead of one big groupBy: at 10^12 rows a single
 final merge funnels every partial through one shuffle; the level
@@ -38,31 +48,15 @@ import os
 import time
 from typing import Sequence
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DoubleType,
-    IntegerType,
-    LongType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import LongType, StructField, StructType
 
 from hyper_spark.functions.hashing import hll_prepare
-from hyper_spark.kernel.hll import encode_registers
-from hyper_spark.operators.hll_agg import SKETCH_FIELDS, _merge_fn
+from hyper_spark.operators.hll_agg import SKETCH_FIELDS, _merge_fn, _register_partials
 from hyper_spark.operators.util import grouped_apply
 
 __all__ = ["checkpointed_sketch_build", "resume_info"]
-
-LINEAGE_FIELDS = [
-    StructField("partition_id", IntegerType(), False),
-    StructField("rows_in", LongType(), False),
-    StructField("sketch_bytes", LongType(), False),
-    StructField("build_ms", DoubleType(), False),
-]
 
 
 def _level_path(checkpoint_dir: str, level: int) -> str:
@@ -94,66 +88,24 @@ def _partials_with_lineage(
     encoding: str = "auto",
     hash_fn: str = "sha1",
 ):
-    """Level-0 worker: per task partition, build one partial sketch per
-    (keys, salt) plus lineage columns. JVM hashing feeds it; Python sees
-    only (keys, salt, idx, rho) rows. NULL values are skipped (the
-    reference only accepts binaries, src/hyper.erl:20; a NULL would
-    otherwise produce NULL idx/rho and poison the densify).
+    """Level 0: per task partition, one partial sketch per (keys, salt)
+    plus lineage columns, from the shared ``_register_partials``. JVM
+    hashing feeds it; Python sees only (keys, salt, idx, rho) rows.
+    NULL values are skipped (the reference only accepts binaries,
+    src/hyper.erl:20; a NULL would otherwise produce NULL idx/rho and
+    poison the densify).
 
     ``encoding='auto'`` stores low-fill partials as ⟨idx:16, rho:8⟩ pairs
     (src/hyper_bisect.erl:18-29): a salted partial covers ~1/num_salts of
     a group's values, so early levels are exactly the low-fill case and
     the checkpoint/shuffle bytes drop from 2^p to 3·nnz per partial."""
-    m = 1 << p
     value = F.col(col) if isinstance(col, str) else col
     idx, rho = hll_prepare(value, p, hash_fn)
     salt = F.pmod(F.xxhash64(value), F.lit(num_salts))
     prepared = df.filter(value.isNotNull()).select(
-        *keys, salt.alias("__salt"), idx.alias("idx"), rho.alias("rho"),
-        F.spark_partition_id().alias("__pid"),
+        *keys, salt.alias("__salt"), idx.alias("idx"), rho.alias("rho")
     )
-    group_cols = list(keys) + ["__salt"]
-    schema = StructType(
-        [df.schema[k] for k in keys]
-        + [StructField("__salt", LongType(), False)]
-        + SKETCH_FIELDS
-        + LINEAGE_FIELDS
-    )
-
-    def build(batches):
-        acc: dict[tuple, np.ndarray] = {}
-        rows_in: dict[tuple, int] = {}
-        pid = -1
-        t0 = time.perf_counter()
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            pid = int(pdf["__pid"].iloc[0])
-            for gkey, sub in pdf.groupby(group_cols, sort=False, dropna=False):
-                gkey = gkey if isinstance(gkey, tuple) else (gkey,)
-                regs = acc.get(gkey)
-                if regs is None:
-                    regs = acc.setdefault(gkey, np.zeros(m, dtype=np.uint8))
-                np.maximum.at(
-                    regs,
-                    sub["idx"].to_numpy(dtype=np.int64),
-                    sub["rho"].to_numpy(dtype=np.uint8),
-                )
-                rows_in[gkey] = rows_in.get(gkey, 0) + len(sub)
-        if acc:
-            build_ms = (time.perf_counter() - t0) * 1000.0
-            blobs = [encode_registers(r, encoding) for r in acc.values()]
-            out = {k: [g[i] for g in acc] for i, k in enumerate(keys)}
-            out["__salt"] = [g[len(keys)] for g in acc]
-            out["p"] = [p] * len(acc)
-            out["registers"] = blobs
-            out["partition_id"] = [pid] * len(acc)
-            out["rows_in"] = [rows_in[g] for g in acc]
-            out["sketch_bytes"] = [len(b) for b in blobs]
-            out["build_ms"] = [build_ms / len(acc)] * len(acc)
-            yield pd.DataFrame(out)
-
-    return prepared.mapInPandas(build, schema)
+    return _register_partials(prepared, list(keys) + ["__salt"], p, encoding)
 
 
 def checkpointed_sketch_build(
@@ -183,35 +135,44 @@ def checkpointed_sketch_build(
     levels where fill is high); ``'dense'`` forces the canonical blobs
     everywhere. The final level always returns dense blobs so output
     bytes stay canonical."""
+    if fanout < 2:
+        # ceil(cur / 1) == cur: a fanout below 2 never folds a salt away
+        raise ValueError(f"fanout must be at least 2, got {fanout}")
     keys = list(keys)
     # ≥2 salts: level 0 emits one partial per (keys, salt) per task
     # partition; at least one merge level must run to collapse them
     num_salts = max(2, num_salts)
     os.makedirs(checkpoint_dir, exist_ok=True)
+    # every level is read with the schema it was written with, so no
+    # read launches a footer-inference job
+    level_schema = StructType(
+        [df.schema[k] for k in keys] + [StructField("__salt", LongType(), False)]
+        + SKETCH_FIELDS
+    )
+
+    def read_level(level: int) -> DataFrame:
+        return spark.read.schema(level_schema).parquet(_level_path(checkpoint_dir, level))
 
     # ---- level 0: salted partials + lineage
-    lvl0 = _level_path(checkpoint_dir, 0)
-    if not _complete(lvl0):
-        t0 = time.perf_counter()
-        partials = _partials_with_lineage(df, keys, col, p, num_salts, encoding, hash_fn)
+    if not _complete(_level_path(checkpoint_dir, 0)):
         # one durable write carries both sketch and lineage columns;
         # pre-merge duplicates (same (keys,salt) from different task
         # partitions) are collapsed at level 1
-        partials.write.mode("overwrite").parquet(lvl0)
-        _write_metrics(spark, checkpoint_dir, 0, lvl0, t0)
+        _write_level(
+            _partials_with_lineage(df, keys, col, p, num_salts, encoding, hash_fn),
+            checkpoint_dir,
+            0,
+        )
 
     level = 0
     cur_salts = num_salts
     while cur_salts > 1:
         level += 1
         next_salts = math.ceil(cur_salts / fanout)
-        path = _level_path(checkpoint_dir, level)
-        if not _complete(path):
-            t0 = time.perf_counter()
-            prev = spark.read.parquet(_level_path(checkpoint_dir, level - 1))
-            folded = prev.withColumn(
+        if not _complete(_level_path(checkpoint_dir, level)):
+            folded = read_level(level - 1).withColumn(
                 "__salt", F.pmod(F.col("__salt"), F.lit(next_salts))
-            ).select(*keys, "__salt", "p", "registers")
+            )
             merge_keys = keys + ["__salt"]
             # intermediate levels keep the chosen encoding; the last level
             # (next_salts == 1) emits canonical dense output blobs. The
@@ -224,21 +185,24 @@ def checkpointed_sketch_build(
                 _merge_fn(merge_keys, lvl_enc, decode_encoding=encoding),
                 SKETCH_FIELDS,
             )
-            merged.write.mode("overwrite").parquet(path)
-            _write_metrics(spark, checkpoint_dir, level, path, t0)
+            _write_level(merged, checkpoint_dir, level)
         cur_salts = next_salts
 
-    final = spark.read.parquet(_level_path(checkpoint_dir, level)).drop("__salt")
-    return final
+    return read_level(level).drop("__salt")
 
 
-def _write_metrics(
-    spark: SparkSession, checkpoint_dir: str, level: int, path: str, t0: float
-) -> None:
-    n = spark.read.parquet(path).count()
+def _write_level(frame: DataFrame, checkpoint_dir: str, level: int) -> None:
+    """Write one level as a single Spark query; its row count is
+    observed during the write, not re-read from the files."""
+    t0 = time.perf_counter()
+    path = _level_path(checkpoint_dir, level)
+    obs = Observation()
+    frame.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
+        "overwrite"
+    ).parquet(path)
     metrics = {
         "level": level,
-        "rows": n,
+        "rows": obs.get["rows"],
         "wall_ms": round((time.perf_counter() - t0) * 1000.0, 1),
         "path": path,
     }
