@@ -1,6 +1,6 @@
 PY ?= python
 
-.PHONY: test bench dist scaling correctness clean
+.PHONY: test bench dist scaling correctness perf-ab clean
 
 test:
 	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
@@ -14,6 +14,14 @@ scaling:
 
 correctness:
 	$(PY) tools/check_correctness.py
+
+# interleaved perfbench A/B of this checkout against a base commit:
+#   make perf-ab WORKLOADS=keyed_checkpoint SEEDS=701-710 BASE=HEAD^
+WORKLOADS ?= scan_build keyed_checkpoint
+SEEDS ?= 701-710
+perf-ab:
+	$(PY) tools/perf_ab.py $(foreach w,$(WORKLOADS),--workload $(w)) --seeds $(SEEDS) \
+		$(if $(BASE),--base $(BASE))
 
 # build the --py-files artifact for spark-submit on a real cluster:
 #   spark-submit --py-files dist/hyper_spark.zip your_job.py

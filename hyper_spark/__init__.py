@@ -18,4 +18,10 @@ Streaming state) can distribute them. Layers:
 * ``streaming`` — Structured Streaming sketch state
 """
 
+from hyper_spark.packaging import install_worker_zip_cache as _install_worker_zip_cache
+
 __version__ = "0.1.0"
+
+# in a Spark Python worker: re-read a zip archive's directory only when
+# the archive has changed (see hyper_spark.packaging)
+_install_worker_zip_cache()

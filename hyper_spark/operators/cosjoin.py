@@ -131,11 +131,14 @@ def _dense_cosine(
         .mapInPandas(to_vec, schema=f"id {id_t}, vec binary")
         .persist()
     )
-    rows = vecs.collect()
-    n = len(rows)
-    if n * vocab * 8 > max_bytes:
+    # byte guard covers the broadcast float64 matrix; probed with a
+    # bounded count so an over-cap corpus never reaches the driver
+    cap = min(max_bytes // (vocab * 8), 2**31 - 2)  # limit() takes an int
+    if vecs.limit(cap + 1).count() > cap:
         vecs.unpersist()
         return None
+    rows = vecs.collect()
+    n = len(rows)
     ids_np = np.array([r["id"] for r in rows])
     m = (
         np.frombuffer(b"".join(r["vec"] for r in rows), dtype=np.float64)

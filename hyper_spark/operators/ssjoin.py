@@ -221,14 +221,17 @@ def _dense_jaccard(
 
     bits_a = bits_of(tok_a).persist()
     index_side = bits_a if tok_b is None else bits_of(tok_b).persist()
-    rows = index_side.collect()
-    n_idx = len(rows)
-    # byte guard covers the per-worker unpacked float32 matrix
-    if n_idx * vocab * 4 > max_bytes:
+    # byte guard covers the per-worker unpacked float32 matrix; probed
+    # with a bounded count so an over-cap index side never reaches the
+    # driver
+    cap = min(max_bytes // (vocab * 4), 2**31 - 2)  # limit() takes an int
+    if index_side.limit(cap + 1).count() > cap:
         bits_a.unpersist()
         if tok_b is not None:
             index_side.unpersist()
         return None
+    rows = index_side.collect()
+    n_idx = len(rows)
     ids_np = np.array([r["id"] for r in rows])
     m_packed = (
         np.frombuffer(b"".join(r["bits"] for r in rows), dtype=np.uint8)

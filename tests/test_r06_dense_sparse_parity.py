@@ -79,6 +79,59 @@ def test_cosjoin_dense_matches_sparse(spark, corpus):
     sparse.unpersist()
 
 
+def _spy_collects(monkeypatch, df):
+    """Record (columns, rows returned) of every DataFrame.collect."""
+    seen = []
+    cls = type(df)
+    collect = cls.collect
+
+    def spy(self):
+        rows = collect(self)
+        seen.append((tuple(self.columns), len(rows)))
+        return rows
+
+    monkeypatch.setattr(cls, "collect", spy)
+    return seen
+
+
+@pytest.mark.parametrize(
+    "join,val,vocab_col,index_col,width",
+    [
+        (similarity_join, "jaccard", "token", "bits", 4),
+        (cosine_similarity_join, "cosine", "tok", "vec", 8),
+    ],
+    ids=["ssjoin", "cosjoin"],
+)
+def test_dense_guard_never_collects_over_cap_index(
+    spark, corpus, monkeypatch, join, val, vocab_col, index_col, width
+):
+    """The dense byte guard is checked before the index side reaches
+    the driver: one byte under n x vocab x width falls back to the
+    sparse path without collecting it; exactly at the budget the dense
+    path runs as before."""
+    ref = join(corpus, threshold=0.5, dense_max_vocab=0)
+    want = _pairs(ref, val)
+    ref.unpersist()
+    seen = _spy_collects(monkeypatch, corpus)
+
+    def run(max_bytes):
+        seen.clear()
+        out = join(corpus, threshold=0.5, dense_max_bytes=max_bytes)
+        got = _pairs(out, val)
+        out.unpersist()
+        vocab = [n for cols, n in seen if cols == (vocab_col,)]
+        index = [n for cols, n in seen if index_col in cols]
+        return got, vocab, index
+
+    got, vocab, index = run(1 << 40)
+    assert got == want and len(vocab) == 1 and len(index) == 1
+    budget = index[0] * vocab[0] * width
+    got, _, index = run(budget)
+    assert got == want and len(index) == 1
+    got, _, index = run(budget - 1)
+    assert got == want and index == []
+
+
 def _entries(spark):
     """Synthetic prefix entries with one hot token (m=40) and several
     cool ones, ids deliberately interleaved across chunks."""
