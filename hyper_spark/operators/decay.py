@@ -29,6 +29,8 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from hyper_spark.operators.sliding import interval_seconds
+
 __all__ = ["decayed_counts", "decayed_topk"]
 
 
@@ -124,12 +126,7 @@ def _half_life_seconds(df: DataFrame, half_life: str | float) -> float:
     else:
         # parse interval strings ('1 hour', '30 minutes') JVM-side so
         # the accepted grammar matches window()/watermark exactly
-        row = df.sparkSession.range(1).select(
-            F.expr(
-                f"cast(cast(INTERVAL '{half_life}' as interval second) as long)"
-            ).alias("s")
-        ).collect()[0]
-        hl = float(row["s"])
+        hl = interval_seconds(df.sparkSession, half_life)
     if hl <= 0:
         raise ValueError(f"half_life must be positive, got {half_life!r}")
     return hl

@@ -32,6 +32,12 @@ distinct in-window items there are still collisions across GRAIN
 BUCKETS only if items collide in a row — same cell algebra as a
 single CMS of the window's rows, so bounds are those of a plain CMS
 built on exactly the window (parity pytest-asserted).
+
+The cells are the core's CMS spec (operators/sliding.py: cells (row,
+bucket), fold ``sum(cnt)``, lineage (depth, width, hash_fn)); the
+candidates fold by distinct union. Merge, expire, coarsen, the cell
+build shared with streaming/sliding_cms_stream.py and the window
+cutoffs are the core's; the top-k read is this module's.
 """
 
 from __future__ import annotations
@@ -42,12 +48,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from hyper_spark.operators import sliding as core
 from hyper_spark.operators.cms_agg import cms_bucket_col, local_topk_candidates
-from hyper_spark.operators.sliding_hll import (
-    _epoch_seconds,
-    _interval_seconds,
-    sliding_expire,
-)
 
 __all__ = [
     "sliding_cms_table",
@@ -56,6 +58,47 @@ __all__ = [
     "sliding_cms_coarsen",
     "sliding_cms_topk",
 ]
+
+SPEC = core.SlidingSpec(
+    "cell",
+    ("row", "bucket"),
+    lambda cols: [F.sum("cnt").alias("cnt")],
+    lineage=("depth", "width", "hash_fn"),
+)
+
+
+def _cands_spec(cands: DataFrame, keys: Sequence[str]) -> core.SlidingSpec:
+    """Candidate sets fold by distinct union on their item column."""
+    item = tuple(c for c in cands.columns if c not in (*keys, "bucket_ts"))
+    return core.SlidingSpec("candidate", item, lambda cols: [])
+
+
+def cms_cells(
+    df: DataFrame,
+    ts_col: str,
+    keys: Sequence[str],
+    col: str | Column,
+    grain: str,
+    depth: int,
+    width: int,
+    hash_fn: str,
+    watermark: str = "1 hour",
+) -> DataFrame:
+    """Per (keys, grain bucket, row, bucket) the count:
+    DataFrame[*keys, bucket_ts, row, bucket, cnt, depth, width,
+    hash_fn] — the cell build shared by the batch table and its
+    streaming twin."""
+    c = F.col(col) if isinstance(col, str) else col
+    rows = F.posexplode(
+        F.array(*[cms_bucket_col(c, i, width, hash_fn) for i in range(depth)])
+    )
+    return core.build_cells(
+        df, ts_col, keys, grain, watermark, c.isNotNull(),
+        [rows.alias("row", "bucket")], ["row", "bucket"],
+        [F.count(F.lit(1)).alias("cnt")],
+        [F.lit(depth).alias("depth"), F.lit(width).alias("width"),
+         F.lit(hash_fn).alias("hash_fn")],
+    )
 
 
 def sliding_cms_table(
@@ -77,33 +120,13 @@ def sliding_cms_table(
     name = col if isinstance(col, str) else df.select(col).columns[0]
     keys = list(keys)
     t = F.col(ts_col).cast("timestamp")
-    bucket_ts = F.window(F.col(ts_col), grain).start.cast("timestamp")
     base = df.filter(c.isNotNull() & t.isNotNull()).select(
-        *keys, bucket_ts.alias("bucket_ts"), c.alias(name)
-    )
-    rows = F.posexplode(
-        F.array(
-            *[
-                cms_bucket_col(F.col(name), i, width, hash_fn)
-                for i in range(depth)
-            ]
-        )
-    )
-    cells = (
-        base.select(*keys, "bucket_ts", rows.alias("row", "bucket"))
-        .groupBy(*keys, "bucket_ts", "row", "bucket")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .select(
-            "*",
-            F.lit(depth).alias("depth"),
-            F.lit(width).alias("width"),
-            F.lit(hash_fn).alias("hash_fn"),
-        )
+        *keys, core.bucket_start(ts_col, grain).alias("bucket_ts"), c.alias(name)
     )
     cands = local_topk_candidates(
         base, name, k, fanout=fanout, by=["bucket_ts", *keys]
     ).select(*keys, "bucket_ts", name)
-    return cells, cands
+    return cms_cells(df, ts_col, keys, col, grain, depth, width, hash_fn), cands
 
 
 def sliding_cms_merge(
@@ -117,20 +140,10 @@ def sliding_cms_merge(
     combined input (pytest-asserted)."""
     if not cell_states or not cand_states:
         raise ValueError("no states to merge")
-    keys = list(keys)
-    cells = cell_states[0]
-    for s in cell_states[1:]:
-        cells = cells.unionByName(s)
-    lineage = ["depth", "width", "hash_fn"]
-    merged_cells = cells.groupBy(
-        *keys, "bucket_ts", "row", "bucket", *lineage
-    ).agg(F.sum("cnt").alias("cnt")).select(
-        *keys, "bucket_ts", "row", "bucket", "cnt", *lineage
+    return (
+        core.merge(SPEC, cell_states, keys),
+        core.merge(_cands_spec(cand_states[0], keys), cand_states, keys),
     )
-    cands = cand_states[0]
-    for s in cand_states[1:]:
-        cands = cands.unionByName(s)
-    return merged_cells, cands.distinct()
 
 
 def sliding_cms_expire(
@@ -138,11 +151,8 @@ def sliding_cms_expire(
 ) -> tuple[DataFrame, DataFrame]:
     """Drop buckets strictly older than the cutoff from both tables —
     plain range predicates, partition-prunable on a bucket_ts-
-    partitioned store (same contract as sliding_hll.sliding_expire)."""
-    return (
-        sliding_expire(cells, older_than_ts),
-        sliding_expire(cands, older_than_ts),
-    )
+    partitioned store (the core's ``expire``)."""
+    return core.expire(cells, older_than_ts), core.expire(cands, older_than_ts)
 
 
 def sliding_cms_coarsen(
@@ -160,33 +170,10 @@ def sliding_cms_coarsen(
     1/k-share guarantee weakens to the COARSE bucket for archived
     history (an item needs share >= 1/k in some coarse bucket) — the
     usual tiered-rollup trade. Cutoff must sit on a coarse boundary
-    (see sliding_hll.sliding_coarsen)."""
-    keys = list(keys)
-    cut = F.lit(older_than_ts).cast("timestamp")
-    b = F.col("bucket_ts").cast("timestamp")
-    lineage = ["depth", "width", "hash_fn"]
-    coarse_b = (
-        F.window(F.col("bucket_ts"), grain).start.cast("timestamp")
-    )
-    old_cells = (
-        cells.filter(b < cut)
-        .select(
-            *keys, coarse_b.alias("bucket_ts"), "row", "bucket", "cnt",
-            *lineage,
-        )
-        .groupBy(*keys, "bucket_ts", "row", "bucket", *lineage)
-        .agg(F.sum("cnt").alias("cnt"))
-        .select(*keys, "bucket_ts", "row", "bucket", "cnt", *lineage)
-    )
-    item = [c for c in cands.columns if c not in (*keys, "bucket_ts")]
-    old_cands = (
-        cands.filter(b < cut)
-        .select(*keys, coarse_b.alias("bucket_ts"), *item)
-        .distinct()
-    )
+    (the core's cutoff-alignment contract, operators/sliding.py)."""
     return (
-        cells.filter(b >= cut).unionByName(old_cells),
-        cands.filter(b >= cut).unionByName(old_cands),
+        core.coarsen(SPEC, cells, keys, older_than_ts, grain),
+        core.coarsen(_cands_spec(cands, keys), cands, keys, older_than_ts, grain),
     )
 
 
@@ -214,42 +201,28 @@ def sliding_cms_topk(
     table (the operational shape), but it recomputes an unpersisted
     build plan once; when composing build+query in one plan either
     persist the state or pass ``params=(depth, width, hash_fn)`` to
-    skip the introspection."""
+    skip the introspection. Groups join on the packed keys, so a NULL
+    key is a group like any other."""
     keys = list(keys)
-    labels = list(windows)
-    spark = cells.sparkSession
-    ref_s = _epoch_seconds(spark, t_ref)
-    cutoffs = {
-        lab: ref_s - _interval_seconds(spark, windows[lab]) for lab in labels
-    }
-    if params is not None:
-        depth, width, hash_fn = params
-    else:
-        metas = cells.select("depth", "width", "hash_fn").distinct().take(2)
-        if not metas:
-            raise ValueError("empty cell state")
-        if len(metas) > 1:
-            raise ValueError(
-                "mixed (depth, width, hash_fn) cell states cannot be "
-                "queried together"
-            )
-        meta = metas[0]
-        depth, width, hash_fn = meta["depth"], meta["width"], meta["hash_fn"]
-
-    b = F.col("bucket_ts").cast("timestamp").cast("double")
-    summed = cells.groupBy(*keys, "row", "bucket").agg(
-        *[
-            F.sum(
-                F.when(b >= F.lit(cutoffs[lab]), F.col("cnt")).otherwise(0)
-            ).alias(f"__c_{i}")
-            for i, lab in enumerate(labels)
-        ]
+    cutoffs = core.window_cutoffs(t_ref, windows)
+    if params is None:
+        params = tuple(core.read_lineage(cells, SPEC.lineage, SPEC.name))
+    depth, width, hash_fn = params
+    b = core.bucket_seconds()
+    cells, g = core.pack_keys(cells, keys)
+    cands, _ = core.pack_keys(cands, keys)
+    summed = (
+        cells.groupBy(*g, "row", "bucket")
+        .agg(*core.window_aggs(
+            cutoffs,
+            lambda inw: {"c": F.sum(F.when(inw, F.col("cnt")).otherwise(0))},
+        ))
     )
     probe = (
-        cands.groupBy(*keys, col)
+        cands.groupBy(*g, col)
         .agg(F.max(b).alias("__newest"))
         .select(
-            *keys,
+            *g,
             col,
             "__newest",
             F.posexplode(
@@ -263,47 +236,31 @@ def sliding_cms_topk(
         )
     )
     per_item = (
-        probe.join(summed, on=[*keys, "row", "bucket"], how="left")
-        .groupBy(*keys, col)
+        probe.join(summed, on=[*g, "row", "bucket"], how="left")
+        .groupBy(*g, col)
         .agg(
             F.max("__newest").alias("__newest"),
             *[
-                F.min(F.coalesce(F.col(f"__c_{i}"), F.lit(0))).alias(
-                    f"__e_{i}"
-                )
-                for i in range(len(labels))
+                F.min(F.coalesce(F.col(f"__{i}_c"), F.lit(0))).alias(f"__e_{i}")
+                for i in range(len(cutoffs))
             ],
         )
     )
-    stacked = per_item.select(
-        *keys,
-        col,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(lab).alias("window"),
-                        F.col(f"__e_{i}").alias("estimate"),
-                        (F.col("__newest") >= F.lit(cutoffs[lab])).alias(
-                            "__in"
-                        ),
-                    )
-                    for i, lab in enumerate(labels)
-                ]
-            )
-        ).alias("__s"),
-    ).select(
-        *keys,
-        F.col("__s.window").alias("window"),
-        col,
-        F.col("__s.estimate").alias("estimate"),
-        F.col("__s.__in").alias("__in"),
+    stacked = core.stack_windows(
+        per_item,
+        g,
+        [col],
+        cutoffs,
+        lambda i, cut: [
+            F.col(f"__e_{i}").alias("estimate"),
+            (F.col("__newest") >= cut).alias("__in"),
+        ],
     ).filter(F.col("__in") & (F.col("estimate") > 0))
-    w = Window.partitionBy(*keys, "window").orderBy(
+    w = Window.partitionBy(*g, "window").orderBy(
         F.desc("estimate"), F.col(col)
     )
     return (
         stacked.withColumn("__rk", F.row_number().over(w))
         .filter(F.col("__rk") <= k)
-        .select(*keys, "window", col, "estimate")
+        .select(*core.unpack_keys(keys), "window", col, "estimate")
     )

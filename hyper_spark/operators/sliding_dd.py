@@ -24,6 +24,10 @@ ALREADY emits this state — its per-window bucket tables are these
 cells with ``window_start`` as ``bucket_ts`` (native windowed count
 aggregate; integer counts make streamed == batch exact). The bridge is
 a rename, pytest-asserted.
+
+The state is the core's DD spec (operators/sliding.py: cells (store,
+bucket), fold ``sum(cnt)``, lineage ``alpha``); the build, merge,
+expire, coarsen and the windowed read are the core's.
 """
 
 from __future__ import annotations
@@ -33,12 +37,8 @@ from typing import Mapping, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from hyper_spark.operators import sliding as core
 from hyper_spark.operators.ddsketch import dd_bucket_col, dd_quantiles
-from hyper_spark.operators.sliding_hll import (
-    _epoch_seconds,
-    _interval_seconds,
-    sliding_expire,
-)
 
 __all__ = [
     "sliding_dd_table",
@@ -48,6 +48,23 @@ __all__ = [
     "sliding_dd_quantiles",
     "sliding_dd_drift",
 ]
+
+SPEC = core.SlidingSpec(
+    "dd",
+    ("store", "bucket"),
+    lambda cols: [F.sum("cnt").alias("cnt")],
+    lineage=("alpha",),
+)
+
+
+def dd_mass(weight: str | Column | None) -> tuple[Column, list[Column], Column]:
+    """(row filter, prepared columns, bucket-mass aggregate): a row
+    count, or SUM(weight) over positive, non-NaN weights (NaN > 0 is
+    TRUE in Spark SQL, and one NaN mass would poison its bucket)."""
+    if weight is None:
+        return F.lit(True), [], F.count(F.lit(1))
+    wd = (F.col(weight) if isinstance(weight, str) else weight).cast("double")
+    return (wd > 0) & ~F.isnan(wd), [wd.alias("__w")], F.sum("__w")
 
 
 def sliding_dd_table(
@@ -69,64 +86,24 @@ def sliding_dd_table(
     window reads stay lossless because masses add exactly like counts;
     query with ``sliding_dd_quantiles(..., weighted=True)``."""
     c = F.col(col) if isinstance(col, str) else col
-    keys = list(keys)
-    t = F.col(ts_col).cast("timestamp")
     store, bucket = dd_bucket_col(c, alpha)
-    base = df.filter(c.isNotNull() & t.isNotNull())
-    cols = [
-        F.window(F.col(ts_col), grain).start.cast("timestamp").alias(
-            "bucket_ts"
-        ),
-        store.alias("store"),
-        bucket.alias("bucket"),
-    ]
-    if weight is None:
-        mass = F.count(F.lit(1))
-    else:
-        w = F.col(weight) if isinstance(weight, str) else weight
-        wd = w.cast("double")
-        base = base.filter((wd > 0) & ~F.isnan(wd))
-        cols.append(wd.alias("__w"))
-        mass = F.sum("__w")
-    return (
-        base.select(*keys, *cols)
-        .groupBy(*keys, "bucket_ts", "store", "bucket")
-        .agg(mass.alias("cnt"))
-        .select(*keys, "bucket_ts", "store", "bucket", "cnt",
-                F.lit(float(alpha)).alias("alpha"))
+    where, prep, mass = dd_mass(weight)
+    return core.build_cells(
+        df, ts_col, keys, grain, None, c.isNotNull() & where,
+        [store.alias("store"), bucket.alias("bucket"), *prep],
+        ["store", "bucket"], [mass.alias("cnt")],
+        [F.lit(float(alpha)).alias("alpha")],
     )
-
-
-def _meta(state: DataFrame) -> float:
-    metas = state.select("alpha").distinct().take(2)
-    if not metas:
-        raise ValueError("empty dd state")
-    if len(metas) > 1:
-        raise ValueError("mixed-alpha dd states cannot be queried together")
-    return float(metas[0]["alpha"])
 
 
 def sliding_dd_merge(states: Sequence[DataFrame], keys: Sequence[str]) -> DataFrame:
     """Merge same-(alpha, grain) shard/checkpoint states: counts sum —
     lossless at any tree shape (equals the direct build of the combined
     input, pytest-asserted)."""
-    if not states:
-        raise ValueError("no states to merge")
-    keys = list(keys)
-    u = states[0]
-    for s in states[1:]:
-        u = u.unionByName(s)
-    return (
-        u.groupBy(*keys, "bucket_ts", "store", "bucket", "alpha")
-        .agg(F.sum("cnt").alias("cnt"))
-        .select(*keys, "bucket_ts", "store", "bucket", "cnt", "alpha")
-    )
+    return core.merge(SPEC, states, keys)
 
 
-def sliding_dd_expire(state: DataFrame, older_than_ts: str) -> DataFrame:
-    """Drop buckets strictly older than the cutoff — a plain range
-    predicate (bucket counts are independent across buckets)."""
-    return sliding_expire(state, older_than_ts)
+sliding_dd_expire = core.expire
 
 
 def sliding_dd_coarsen(
@@ -140,22 +117,9 @@ def sliding_dd_coarsen(
     exactly the window-sum the query performs — so coarse-aligned
     windows return bit-identical quantiles from fewer rows, with NO
     weakened guarantee (unlike CMS candidates). Cutoff must sit on a
-    coarse boundary (see sliding_hll.sliding_coarsen)."""
-    keys = list(keys)
-    cut = F.lit(older_than_ts).cast("timestamp")
-    b = F.col("bucket_ts").cast("timestamp")
-    coarse_b = F.window(F.col("bucket_ts"), grain).start.cast("timestamp")
-    old = (
-        state.filter(b < cut)
-        .select(
-            *keys, coarse_b.alias("bucket_ts"), "store", "bucket", "cnt",
-            "alpha",
-        )
-        .groupBy(*keys, "bucket_ts", "store", "bucket", "alpha")
-        .agg(F.sum("cnt").alias("cnt"))
-        .select(*keys, "bucket_ts", "store", "bucket", "cnt", "alpha")
-    )
-    return state.filter(b >= cut).unionByName(old)
+    coarse boundary (the core's cutoff-alignment contract,
+    operators/sliding.py)."""
+    return core.coarsen(SPEC, state, keys, older_than_ts, grain)
 
 
 def sliding_dd_quantiles(
@@ -178,45 +142,12 @@ def sliding_dd_quantiles(
     driver action — pass it explicitly when composing build+query in
     one unpersisted plan)."""
     keys = list(keys)
-    labels = list(windows)
-    spark = state.sparkSession
-    ref_s = _epoch_seconds(spark, t_ref)
-    cutoffs = {
-        lab: ref_s - _interval_seconds(spark, windows[lab]) for lab in labels
-    }
     if alpha is None:
-        alpha = _meta(state)
-
-    b = F.col("bucket_ts").cast("timestamp").cast("double")
-    summed = state.groupBy(*keys, "store", "bucket").agg(
-        *[
-            F.sum(
-                F.when(b >= F.lit(cutoffs[lab]), F.col("cnt")).otherwise(0)
-            ).alias(f"__c_{i}")
-            for i, lab in enumerate(labels)
-        ]
-    )
-    stacked = (
-        summed.select(
-            *keys,
-            "store",
-            "bucket",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(lab).alias("window"),
-                            F.col(f"__c_{i}").alias("count"),
-                        )
-                        for i, lab in enumerate(labels)
-                    ]
-                )
-            ).alias("__x"),
-        )
-        .select(*keys, F.col("__x.window").alias("window"), "store", "bucket",
-                F.col("__x.count").alias("count"))
-        .filter(F.col("count") > 0)
-    )
+        alpha = float(core.read_lineage(state, SPEC.lineage, SPEC.name)["alpha"])
+    stacked = core.windowed_read(
+        state, keys, ["store", "bucket"], t_ref, windows,
+        lambda inw: {"count": F.sum(F.when(inw, F.col("cnt")).otherwise(0))},
+    ).filter(F.col("count") > 0)
     return dd_quantiles(
         stacked, list(qs), keys=[*keys, "window"], alpha=alpha,
         weighted=weighted,
@@ -244,13 +175,10 @@ def sliding_dd_drift(
     from hyper_spark.operators.ddsketch import _order_cols
 
     keys = list(keys)
-    spark = state.sparkSession
-    b = F.col("bucket_ts").cast("timestamp").cast("double")
+    b = core.bucket_seconds()
 
     def _in(rng: tuple[str, str]) -> Column:
-        lo = _epoch_seconds(spark, rng[0])
-        hi = _epoch_seconds(spark, rng[1])
-        return (b >= F.lit(lo)) & (b < F.lit(hi))
+        return (b >= core.epoch_seconds(rng[0])) & (b < core.epoch_seconds(rng[1]))
 
     in_a, in_b = _in(range_a), _in(range_b)
     cells = (

@@ -26,7 +26,9 @@ estimate:
 * fronts MERGE: front(front(A) ∪ front(B)) = front(A ∪ B), so shard /
   checkpoint / incremental-ingest states combine with the same
   bucket-max + front pass (``sliding_merge``), like every other
-  mergeable aggregate here;
+  mergeable aggregate here — the state is the core's HLL spec
+  (operators/sliding.py: cells ``idx``, fold ``max(rho)``, re-trim
+  the front);
 * expiry is a range filter on bucket_ts (``sliding_expire``) — a front
   stays a front under suffix-in-time filtering.
 
@@ -53,6 +55,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from hyper_spark.functions.hashing import hll_prepare
+from hyper_spark.operators import sliding as core
 from hyper_spark.operators.hll_agg import SKETCH_FIELDS, _densify_fn, cardinality_col
 from hyper_spark.operators.util import grouped_apply
 
@@ -63,6 +66,49 @@ __all__ = [
     "sliding_coarsen",
     "sliding_estimates",
 ]
+
+
+def _front(bucketed: DataFrame, keys: Sequence[str], _meta=None) -> DataFrame:
+    """Keep (bucket, rho) iff rho strictly exceeds every later bucket's
+    rho in the same (keys, idx) register."""
+    w = (
+        Window.partitionBy(*keys, "idx")
+        .orderBy(F.desc("bucket_ts"))
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    return (
+        bucketed.withColumn("__later_max", F.max("rho").over(w))
+        .filter(F.col("rho") > F.coalesce(F.col("__later_max"), F.lit(0)))
+        .drop("__later_max")
+    )
+
+
+SPEC = core.SlidingSpec(
+    "hll", ("idx",), lambda cols: [F.max("rho").alias("rho")], retrim=_front
+)
+
+
+def register_cells(
+    df: DataFrame,
+    ts_col: str,
+    keys: Sequence[str],
+    col: str | Column,
+    p: int,
+    grain: str,
+    hash_fn: str,
+    watermark: str = "1 hour",
+) -> DataFrame:
+    """Per (keys, grain bucket, register) the max rho:
+    DataFrame[*keys, idx, bucket_ts, rho] — the cell build shared by
+    the batch table and its streaming twin."""
+    c = F.col(col) if isinstance(col, str) else col
+    keys = list(keys)
+    idx, rho = hll_prepare(c, p, hash_fn)
+    cells = core.build_cells(
+        df, ts_col, keys, grain, watermark, c.isNotNull(),
+        [idx.alias("idx"), rho.alias("rho")], ["idx"], [F.max("rho").alias("rho")],
+    )
+    return cells.select(*keys, "idx", "bucket_ts", "rho")
 
 
 def sliding_register_table(
@@ -78,24 +124,7 @@ def sliding_register_table(
     — per register the Pareto front of (grain-bucket, max rho). One
     keyed shuffle (bucket max, map-side combined) + one window pass on
     the same key prefix; pure JVM end to end."""
-    c = F.col(col) if isinstance(col, str) else col
-    keys = list(keys)
-    idx, rho = hll_prepare(c, p, hash_fn)
-    t = F.col(ts_col).cast("timestamp")
-    bucketed = (
-        df.filter(c.isNotNull() & t.isNotNull())
-        .select(
-            *keys,
-            idx.alias("idx"),
-            F.window(F.col(ts_col), grain).start.cast("timestamp").alias(
-                "bucket_ts"
-            ),
-            rho.alias("rho"),
-        )
-        .groupBy(*keys, "idx", "bucket_ts")
-        .agg(F.max("rho").alias("rho"))
-    )
-    return _front(bucketed, keys)
+    return _front(register_cells(df, ts_col, keys, col, p, grain, hash_fn), list(keys))
 
 
 def sliding_merge(states: Sequence[DataFrame], keys: Sequence[str]) -> DataFrame:
@@ -103,27 +132,10 @@ def sliding_merge(states: Sequence[DataFrame], keys: Sequence[str]) -> DataFrame
     an incremental batch into history: bucket max over the union, then
     the front filter again. Lossless: equals the direct build of the
     combined input (front-of-union property, see module doc)."""
-    if not states:
-        raise ValueError("no states to merge")
-    keys = list(keys)
-    u = states[0]
-    for s in states[1:]:
-        u = u.unionByName(s)
-    return _front(
-        u.groupBy(*keys, "idx", "bucket_ts").agg(F.max("rho").alias("rho")),
-        keys,
-    )
+    return core.merge(SPEC, states, keys)
 
 
-def sliding_expire(state: DataFrame, older_than_ts: str) -> DataFrame:
-    """Drop buckets strictly older than the cutoff (state for windows
-    reaching back at most to it). A front minus its oldest suffix is
-    still a front, so no re-filter is needed — this is a plain range
-    predicate, partition-prunable on a bucket-partitioned store."""
-    return state.filter(
-        F.col("bucket_ts").cast("timestamp")
-        >= F.lit(older_than_ts).cast("timestamp")
-    )
+sliding_expire = core.expire
 
 
 def sliding_coarsen(
@@ -138,32 +150,10 @@ def sliding_coarsen(
     edge aligns to the coarse grain: register max commutes with
     re-bucketing (max over a coarse bucket == max over the union of
     its fine buckets), so coarse-aligned queries return bit-identical
-    estimates from ~grain-ratio fewer rows. The recent/archive split
-    point must itself sit on a coarse boundary or the straddling
-    coarse bucket will claim fine buckets newer than the cutoff."""
-    cut = F.lit(older_than_ts).cast("timestamp")
-    b = F.col("bucket_ts").cast("timestamp")
-    recent = state.filter(b >= cut)
-    old = (
-        state.filter(b < cut)
-        .select(
-            *keys,
-            "idx",
-            F.window(F.col("bucket_ts"), grain)
-            .start.cast("timestamp")
-            .alias("bucket_ts"),
-            "rho",
-        )
-        .groupBy(*keys, "idx", "bucket_ts")
-        .agg(F.max("rho").alias("rho"))
-    )
-    return _front(
-        recent.select(*keys, "idx", "bucket_ts", "rho")
-        .unionByName(old)
-        .groupBy(*keys, "idx", "bucket_ts")
-        .agg(F.max("rho").alias("rho")),
-        list(keys),
-    )
+    estimates from ~grain-ratio fewer rows. The cutoff must sit on a
+    coarse boundary (the core's cutoff-alignment contract,
+    operators/sliding.py)."""
+    return core.coarsen(SPEC, state, keys, older_than_ts, grain)
 
 
 def sliding_estimates(
@@ -190,45 +180,10 @@ def sliding_estimates(
     if estimator not in ("hllpp", "beta"):
         raise ValueError(f"unknown estimator {estimator!r}")
     keys = list(keys)
-    labels = list(windows)
-    spark = state.sparkSession
-    ref_s = _epoch_seconds(spark, t_ref)
-    cutoffs = {
-        lab: ref_s - _interval_seconds(spark, windows[lab]) for lab in labels
-    }
-    b = F.col("bucket_ts").cast("timestamp").cast("double")
-    per_idx = state.groupBy(*keys, "idx").agg(
-        *[
-            F.max(F.when(b >= F.lit(cutoffs[lab]), F.col("rho"))).alias(
-                f"__r_{i}"
-            )
-            for i, lab in enumerate(labels)
-        ]
-    )
-    stacked = (
-        per_idx.select(
-            *keys,
-            "idx",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(lab).alias("window"),
-                            F.col(f"__r_{i}").alias("rho"),
-                        )
-                        for i, lab in enumerate(labels)
-                    ]
-                )
-            ).alias("__s"),
-        )
-        .select(
-            *keys,
-            F.col("__s.window").alias("window"),
-            "idx",
-            F.col("__s.rho").alias("rho"),
-        )
-        .filter(F.col("rho").isNotNull())
-    )
+    stacked = core.windowed_read(
+        state, keys, ["idx"], t_ref, windows,
+        lambda inw: {"rho": F.max(F.when(inw, F.col("rho")))},
+    ).filter(F.col("rho").isNotNull())
     gkeys = keys + ["window"]
     if estimator == "beta":
         from hyper_spark.operators.hll_agg import beta_estimate_agg
@@ -242,42 +197,3 @@ def sliding_estimates(
         "window",
         cardinality_col(F.col("p"), F.col("registers")).alias("estimate"),
     )
-
-
-def _front(bucketed: DataFrame, keys: Sequence[str]) -> DataFrame:
-    """Keep (bucket, rho) iff rho strictly exceeds every later bucket's
-    rho in the same (keys, idx) register."""
-    w = (
-        Window.partitionBy(*keys, "idx")
-        .orderBy(F.desc("bucket_ts"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    return (
-        bucketed.withColumn("__later_max", F.max("rho").over(w))
-        .filter(F.col("rho") > F.coalesce(F.col("__later_max"), F.lit(0)))
-        .drop("__later_max")
-    )
-
-
-def _interval_seconds(spark, interval: str) -> float:
-    row = (
-        spark.range(1)
-        .select(
-            F.expr(
-                f"cast(cast(INTERVAL '{interval}' as interval second) as long)"
-            ).alias("s")
-        )
-        .collect()[0]
-    )
-    return float(row["s"])
-
-
-def _epoch_seconds(spark, ts: str) -> float:
-    row = (
-        spark.range(1)
-        .select(
-            F.lit(ts).cast("timestamp").cast("double").alias("s")
-        )
-        .collect()[0]
-    )
-    return float(row["s"])

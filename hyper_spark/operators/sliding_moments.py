@@ -21,6 +21,11 @@ shapes). Unaligned windows include the partially-covered oldest bucket
 in full (family contract). Coarsen is the DD kind — no weakened
 guarantee: sums re-grouped to a coarser grain serve aligned windows
 identically.
+
+The state is the core's moments spec (operators/sliding.py: no cells,
+fold the sums with min/max); the cell build shared with
+streaming/sliding_moments_stream.py, merge, expire, coarsen and the
+windowed read are the core's.
 """
 
 from __future__ import annotations
@@ -31,12 +36,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from hyper_spark.kernel.moments import MAX_K
+from hyper_spark.operators import sliding as core
 from hyper_spark.operators.moments import moments_quantiles, moments_stats
-from hyper_spark.operators.sliding_hll import (
-    _epoch_seconds,
-    _interval_seconds,
-    sliding_expire,
-)
 
 __all__ = [
     "sliding_moments_table",
@@ -48,24 +49,59 @@ __all__ = [
 ]
 
 
-def _k_of(state: DataFrame) -> int:
-    k = sum(1 for c in state.columns if c.startswith("m") and c[1:].isdigit())
+def _sum_cols(cols: Sequence[str]) -> list[str]:
+    """The additive columns of a state: m1..mk (, n_pos, lm1..lmk)."""
+    k = sum(1 for c in cols if c.startswith("m") and c[1:].isdigit())
     if k == 0:
         raise ValueError("not a sliding moments state (no m1..mk columns)")
-    return k
+    out = [f"m{i}" for i in range(1, k + 1)]
+    if "n_pos" in cols:
+        out += ["n_pos"] + [f"lm{i}" for i in range(1, k + 1)]
+    return out
 
 
-def _sum_aggs(k: int, has_log: bool) -> list[Column]:
-    aggs = [
+def _fold(cols: Sequence[str]) -> list[Column]:
+    return [
         F.sum("n").alias("n"),
         F.min("mn").alias("mn"),
         F.max("mx").alias("mx"),
-        *[F.sum(f"m{i}").alias(f"m{i}") for i in range(1, k + 1)],
+        *[F.sum(c).alias(c) for c in _sum_cols(cols)],
     ]
-    if has_log:
-        aggs.append(F.sum("n_pos").alias("n_pos"))
-        aggs.extend(F.sum(f"lm{i}").alias(f"lm{i}") for i in range(1, k + 1))
-    return aggs
+
+
+SPEC = core.SlidingSpec("sliding moments", (), _fold)
+
+
+def moments_cells(
+    df: DataFrame,
+    ts_col: str,
+    keys: Sequence[str],
+    col: str | Column,
+    k: int,
+    grain: str,
+    log_moments: bool,
+    watermark: str = "1 hour",
+) -> DataFrame:
+    """One moments sketch per (keys, grain bucket): DataFrame[*keys,
+    bucket_ts, n, mn, mx, m1..mk (, n_pos, lm1..lmk)] — the cell build
+    shared by the batch table and its streaming twin."""
+    if not 2 <= k <= MAX_K:
+        raise ValueError(f"k must be in [2, {MAX_K}], got {k}")
+    c = F.col(col) if isinstance(col, str) else col
+    v = F.col("__v")
+    aggs = [
+        F.count(F.lit(1)).alias("n"),
+        F.min(v).alias("mn"),
+        F.max(v).alias("mx"),
+        *[F.sum(F.pow(v, i)).alias(f"m{i}") for i in range(1, k + 1)],
+    ]
+    if log_moments:
+        lx = F.when(v > 0, F.log(v))
+        aggs.append(F.count(lx).alias("n_pos"))
+        aggs.extend(F.sum(F.pow(lx, i)).alias(f"lm{i}") for i in range(1, k + 1))
+    return core.build_cells(
+        df, ts_col, keys, grain, watermark, c.isNotNull(), [c.alias("__v")], [], aggs
+    )
 
 
 def sliding_moments_table(
@@ -82,28 +118,7 @@ def sliding_moments_table(
     grain-bucket), moments_by's arithmetic exactly. Pure codegen; the
     k is carried by the schema itself, so mixed-k states fail any
     union loudly instead of silently mis-merging."""
-    if not 2 <= k <= MAX_K:
-        raise ValueError(f"k must be in [2, {MAX_K}], got {k}")
-    c = F.col(col) if isinstance(col, str) else col
-    keys = list(keys)
-    t = F.col(ts_col).cast("timestamp")
-    bucketed = df.filter(c.isNotNull() & t.isNotNull()).select(
-        *keys,
-        F.window(F.col(ts_col), grain).start.cast("timestamp").alias("bucket_ts"),
-        c.alias("__v"),
-    )
-    v = F.col("__v")
-    aggs = [
-        F.count(F.lit(1)).alias("n"),
-        F.min(v).alias("mn"),
-        F.max(v).alias("mx"),
-        *[F.sum(F.pow(v, i)).alias(f"m{i}") for i in range(1, k + 1)],
-    ]
-    if log_moments:
-        lx = F.when(v > 0, F.log(v))
-        aggs.append(F.count(lx).alias("n_pos"))
-        aggs.extend(F.sum(F.pow(lx, i)).alias(f"lm{i}") for i in range(1, k + 1))
-    return bucketed.groupBy(*keys, "bucket_ts").agg(*aggs)
+    return moments_cells(df, ts_col, keys, col, k, grain, log_moments)
 
 
 def sliding_moments_merge(
@@ -111,21 +126,10 @@ def sliding_moments_merge(
 ) -> DataFrame:
     """Merge same-(k, grain) shard/checkpoint states: sums add, min/max
     fold per (group, bucket) — the resumable-fold contract."""
-    if not states:
-        raise ValueError("no states to merge")
-    keys = list(keys)
-    u = states[0]
-    for s in states[1:]:
-        u = u.unionByName(s)
-    k = _k_of(u)
-    has_log = "n_pos" in u.columns
-    return u.groupBy(*keys, "bucket_ts").agg(*_sum_aggs(k, has_log))
+    return core.merge(SPEC, states, keys)
 
 
-def sliding_moments_expire(state: DataFrame, older_than_ts: str) -> DataFrame:
-    """Drop buckets strictly older than the cutoff — a plain range
-    predicate (bucket sketches are independent)."""
-    return sliding_expire(state, older_than_ts)
+sliding_moments_expire = core.expire
 
 
 def sliding_moments_coarsen(
@@ -138,20 +142,9 @@ def sliding_moments_coarsen(
     cutoff to a coarser grain. Sums re-group (the same fold the query
     performs), so coarse-aligned windows are served identically from
     ~grain-ratio fewer rows — the DD kind of coarsen, no weakened
-    guarantee. Cutoff must sit on a coarse boundary."""
-    keys = list(keys)
-    cut = F.lit(older_than_ts).cast("timestamp")
-    b = F.col("bucket_ts").cast("timestamp")
-    coarse_b = F.window(F.col("bucket_ts"), grain).start.cast("timestamp")
-    k = _k_of(state)
-    has_log = "n_pos" in state.columns
-    old = (
-        state.filter(b < cut)
-        .withColumn("bucket_ts", coarse_b)
-        .groupBy(*keys, "bucket_ts")
-        .agg(*_sum_aggs(k, has_log))
-    )
-    return state.filter(b >= cut).unionByName(old)
+    guarantee. Cutoff must sit on a coarse boundary (the core's
+    cutoff-alignment contract, operators/sliding.py)."""
+    return core.coarsen(SPEC, state, keys, older_than_ts, grain)
 
 
 def _windowed_state(
@@ -162,58 +155,19 @@ def _windowed_state(
 ) -> DataFrame:
     """One conditional-sum pass producing a (keys + window)-keyed
     moments sketch table covering every requested trailing window."""
-    keys = list(keys)
-    labels = list(windows)
-    spark = state.sparkSession
-    ref_s = _epoch_seconds(spark, t_ref)
-    cutoffs = {
-        lab: ref_s - _interval_seconds(spark, windows[lab]) for lab in labels
-    }
-    k = _k_of(state)
-    has_log = "n_pos" in state.columns
-    b = F.col("bucket_ts").cast("timestamp").cast("double")
-    sum_cols = [f"m{i}" for i in range(1, k + 1)]
-    if has_log:
-        sum_cols += ["n_pos"] + [f"lm{i}" for i in range(1, k + 1)]
+    sum_cols = _sum_cols(state.columns)
 
-    def window_aggs(lab: str, i: int) -> list[Column]:
-        inw = b >= F.lit(cutoffs[lab])
-        out = [
-            F.sum(F.when(inw, F.col("n")).otherwise(0)).alias(f"__n_{i}"),
-            F.min(F.when(inw, F.col("mn"))).alias(f"__mn_{i}"),
-            F.max(F.when(inw, F.col("mx"))).alias(f"__mx_{i}"),
-        ]
-        out.extend(
-            F.sum(F.when(inw, F.col(c)).otherwise(0.0)).alias(f"__{c}_{i}")
-            for c in sum_cols
-        )
-        return out
+    def aggs(inw: Column) -> dict[str, Column]:
+        return {
+            "n": F.sum(F.when(inw, F.col("n")).otherwise(0)),
+            "mn": F.min(F.when(inw, F.col("mn"))),
+            "mx": F.max(F.when(inw, F.col("mx"))),
+            **{c: F.sum(F.when(inw, F.col(c)).otherwise(0.0)) for c in sum_cols},
+        }
 
-    aggs: list[Column] = []
-    for i, lab in enumerate(labels):
-        aggs.extend(window_aggs(lab, i))
-    summed = state.groupBy(*keys).agg(*aggs)
-    stacked = summed.select(
-        *keys,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(lab).alias("window"),
-                        F.col(f"__n_{i}").alias("n"),
-                        F.col(f"__mn_{i}").alias("mn"),
-                        F.col(f"__mx_{i}").alias("mx"),
-                        *[
-                            F.col(f"__{c}_{i}").alias(c)
-                            for c in sum_cols
-                        ],
-                    )
-                    for i, lab in enumerate(labels)
-                ]
-            )
-        ).alias("__x"),
-    ).select(*keys, "__x.*")
-    return stacked.filter(F.col("n") > 0)
+    return core.windowed_read(state, keys, [], t_ref, windows, aggs).filter(
+        F.col("n") > 0
+    )
 
 
 def sliding_moments_quantiles(

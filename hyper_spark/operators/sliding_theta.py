@@ -27,6 +27,10 @@ Scale shape: build = one distinct shuffle + partition-local k-min
 prune + per-bucket rank (the prune bounds every sort input at
 n_partitions x k, the priority_sample doctrine); state <= buckets x k
 rows per group; queries touch only the state. Pure JVM end to end.
+
+The state is the core's theta spec (operators/sliding.py: cells ``h``,
+a distinct fold, lineage (k, hash_fn), re-trim the per-bucket k-min);
+merge, expire, coarsen and the window cutoffs are the core's.
 """
 
 from __future__ import annotations
@@ -35,13 +39,9 @@ from typing import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from hyper_spark.operators.sliding_hll import (
-    _epoch_seconds,
-    _interval_seconds,
-    sliding_expire,
-)
+from hyper_spark.operators import sliding as core
+from hyper_spark.operators.sliding import kmin as _kmin
 
 __all__ = [
     "sliding_theta_table",
@@ -56,25 +56,16 @@ _MAX_LONG = (1 << 63) - 1
 _TWO63 = float(1 << 63)
 _TWO64 = float(1 << 64)
 
+SPEC = core.SlidingSpec(
+    "theta", ("h",), lambda cols: [], lineage=("k", "hash_fn"),
+    retrim=core.bucket_kmin,
+)
+
 
 def _theta_est(n: Column, kth: Column, k: int) -> Column:
     """(k-1)/theta when saturated, exact count below k."""
     theta = (kth.cast("double") + F.lit(_TWO63)) / F.lit(_TWO64)
     return F.when(n < k, n.cast("double")).otherwise(F.lit(float(k - 1)) / theta)
-
-
-def _kmin(entries: DataFrame, group: Sequence[str], k: int) -> DataFrame:
-    """k smallest h per group: partition-local prune bounds every
-    per-group sort at n_partitions x k rows, then the global rank."""
-    local = Window.partitionBy(F.spark_partition_id(), *group).orderBy("h")
-    w = Window.partitionBy(*group).orderBy("h")
-    return (
-        entries.withColumn("__lrn", F.row_number().over(local))
-        .filter(F.col("__lrn") <= k)
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__lrn", "__rn")
-    )
 
 
 def sliding_theta_table(
@@ -97,9 +88,7 @@ def sliding_theta_table(
         df.filter(c.isNotNull() & t.isNotNull())
         .select(
             *keys,
-            F.window(F.col(ts_col), grain).start.cast("timestamp").alias(
-                "bucket_ts"
-            ),
+            core.bucket_start(ts_col, grain).alias("bucket_ts"),
             F.xxhash64(c.cast("string")).alias("h"),
         )
         .groupBy(*keys, "bucket_ts", "h")
@@ -111,13 +100,8 @@ def sliding_theta_table(
     )
 
 
-def _meta(state: DataFrame) -> tuple[int, str]:
-    metas = state.select("k", "hash_fn").distinct().take(2)
-    if not metas:
-        raise ValueError("empty theta state")
-    if len(metas) > 1:
-        raise ValueError("mixed (k, hash_fn) theta states")
-    return int(metas[0]["k"]), metas[0]["hash_fn"]
+def _k(state: DataFrame) -> int:
+    return int(core.read_lineage(state, SPEC.lineage, SPEC.name)["k"])
 
 
 def sliding_theta_merge(
@@ -126,23 +110,10 @@ def sliding_theta_merge(
     """Merge same-(k, grain, hash_fn) shard/checkpoint/incremental
     states: distinct union re-trimmed per bucket — lossless (equals
     the direct build of the combined input, pytest-asserted)."""
-    if not states:
-        raise ValueError("no states to merge")
-    keys = list(keys)
-    u = states[0]
-    for s in states[1:]:
-        u = u.unionByName(s)
-    k, hash_fn = _meta(u)
-    entries = u.select(*keys, "bucket_ts", "h").distinct()
-    return _kmin(entries, [*keys, "bucket_ts"], k).select(
-        "*", F.lit(k).alias("k"), F.lit(hash_fn).alias("hash_fn")
-    )
+    return core.merge(SPEC, states, keys)
 
 
-def sliding_theta_expire(state: DataFrame, older_than_ts: str) -> DataFrame:
-    """Drop buckets strictly older than the cutoff — a plain range
-    predicate (a bucket's k-min is independent of other buckets)."""
-    return sliding_expire(state, older_than_ts)
+sliding_theta_expire = core.expire
 
 
 def sliding_theta_coarsen(
@@ -156,26 +127,9 @@ def sliding_theta_coarsen(
     hash in the k-min of a coarse bucket cannot have k smaller hashes
     in its own fine bucket (those would be in the coarse set too), so
     k-min over the union of fine k-mins == k-min of the coarse raw
-    set. Cutoff must sit on a coarse boundary (see
-    sliding_hll.sliding_coarsen)."""
-    keys = list(keys)
-    k, hash_fn = _meta(state)
-    cut = F.lit(older_than_ts).cast("timestamp")
-    b = F.col("bucket_ts").cast("timestamp")
-    old = _kmin(
-        state.filter(b < cut)
-        .select(
-            *keys,
-            F.window(F.col("bucket_ts"), grain)
-            .start.cast("timestamp")
-            .alias("bucket_ts"),
-            "h",
-        )
-        .distinct(),
-        [*keys, "bucket_ts"],
-        k,
-    ).select("*", F.lit(k).alias("k"), F.lit(hash_fn).alias("hash_fn"))
-    return state.filter(b >= cut).unionByName(old)
+    set. Cutoff must sit on a coarse boundary (the core's
+    cutoff-alignment contract, operators/sliding.py)."""
+    return core.coarsen(SPEC, state, keys, older_than_ts, grain)
 
 
 def sliding_theta_estimates(
@@ -194,37 +148,16 @@ def sliding_theta_estimates(
     driver action — persist the state or pass ``k`` explicitly when
     composing build+query in one plan."""
     keys = list(keys)
-    labels = list(windows)
-    spark = state.sparkSession
-    ref_s = _epoch_seconds(spark, t_ref)
-    cutoffs = {
-        lab: ref_s - _interval_seconds(spark, windows[lab]) for lab in labels
-    }
+    cutoffs = core.window_cutoffs(t_ref, windows)
     if k is None:
-        k, _ = _meta(state)
-    b = F.col("bucket_ts").cast("timestamp").cast("double")
-    per_h = state.groupBy(*keys, "h").agg(F.max(b).alias("__newest"))
-    stacked = (
-        per_h.select(
-            *keys,
-            "h",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(lab).alias("window"),
-                            (F.col("__newest") >= F.lit(cutoffs[lab])).alias(
-                                "__in"
-                            ),
-                        )
-                        for lab in labels
-                    ]
-                )
-            ).alias("__s"),
-        )
-        .filter(F.col("__s.__in"))
-        .select(*keys, F.col("__s.window").alias("window"), "h")
+        k = _k(state)
+    per_h = state.groupBy(*keys, "h").agg(
+        F.max(core.bucket_seconds()).alias("__newest")
     )
+    stacked = core.stack_windows(
+        per_h, keys, ["h"], cutoffs,
+        lambda i, cut: [(F.col("__newest") >= cut).alias("__in")],
+    ).filter(F.col("__in"))
     kept = _kmin(stacked, [*keys, "window"], k)
     agg = kept.groupBy(*keys, "window").agg(
         F.count(F.lit(1)).alias("n_entries"), F.max("h").alias("__kth")
@@ -238,16 +171,12 @@ def sliding_theta_estimates(
     )
 
 
-def _range_entries(
-    state: DataFrame, keys: Sequence[str], lo: str, hi: str, k: int
-) -> DataFrame:
+def _range_entries(state: DataFrame, lo: str, hi: str, k: int) -> DataFrame:
     b = F.col("bucket_ts").cast("timestamp")
     sliced = state.filter(
         (b >= F.lit(lo).cast("timestamp")) & (b < F.lit(hi).cast("timestamp"))
     )
-    return _kmin(
-        sliced.select(*keys, "h").distinct(), list(keys), k
-    )
+    return _kmin(sliced.select("__g", "h").distinct(), ["__g"], k)
 
 
 def sliding_theta_overlap(
@@ -262,19 +191,19 @@ def sliding_theta_overlap(
     exact] — kernel/theta.py semantics (common entries strictly below
     the raw min-theta; union = re-trimmed entry union). ``exact`` is
     true when BOTH ranges are unsaturated, making every output an
-    exact count (the gate mode)."""
+    exact count (the gate mode). Groups join on the packed keys, so a
+    NULL key is a group like any other."""
     keys = list(keys)
     if k is None:
-        k, _ = _meta(state)
-    g = "__stg"  # internal constant key so the no-keys path is the
-    # grouped path with one group
-    gkeys = keys if keys else [g]
-    st = state if keys else state.withColumn(g, F.lit(0))
-    ent_a = _range_entries(st, gkeys, *range_a, k)
-    ent_b = _range_entries(st, gkeys, *range_b, k)
+        k = _k(state)
+    st, _ = core.pack_keys(state, keys)
+    if not keys:  # one constant group: the grouped path with one group
+        st = st.withColumn("__g", F.lit(0))
+    ent_a = _range_entries(st, *range_a, k)
+    ent_b = _range_entries(st, *range_b, k)
 
     def side_meta(ent: DataFrame, tag: str) -> DataFrame:
-        return ent.groupBy(*gkeys).agg(
+        return ent.groupBy("__g").agg(
             F.count(F.lit(1)).alias(f"__n_{tag}"),
             F.max("h").alias(f"__kth_{tag}"),
         )
@@ -283,7 +212,7 @@ def sliding_theta_overlap(
     # empty other side (n=0, unsaturated, est 0)
     meta = (
         side_meta(ent_a, "a")
-        .join(side_meta(ent_b, "b"), on=gkeys, how="outer")
+        .join(side_meta(ent_b, "b"), on="__g", how="outer")
         .fillna({"__n_a": 0, "__n_b": 0})
         .fillna({"__kth_a": _MAX_LONG, "__kth_b": _MAX_LONG})
         .withColumn("__sat_a", F.col("__n_a") >= k)
@@ -305,27 +234,21 @@ def sliding_theta_overlap(
         .withColumn("__any_sat", F.col("__sat_a") | F.col("__sat_b"))
     )
     common = (
-        ent_a.join(ent_b, on=[*gkeys, "h"])
-        .join(meta.select(*gkeys, "__cut", "__any_sat"), on=gkeys)
+        ent_a.join(ent_b, on=["__g", "h"])
+        .join(meta.select("__g", "__cut", "__any_sat"), on="__g")
         .filter(~F.col("__any_sat") | (F.col("h") < F.col("__cut")))
-        .groupBy(*gkeys)
+        .groupBy("__g")
         .agg(F.count(F.lit(1)).alias("__n_common"))
     )
     uni = (
-        _kmin(
-            ent_a.select(*gkeys, "h")
-            .unionByName(ent_b.select(*gkeys, "h"))
-            .distinct(),
-            gkeys,
-            k,
-        )
-        .groupBy(*gkeys)
+        _kmin(ent_a.unionByName(ent_b).distinct(), ["__g"], k)
+        .groupBy("__g")
         .agg(F.count(F.lit(1)).alias("__n_u"), F.max("h").alias("__kth_u"))
     )
     out = (
-        meta.join(common, on=gkeys, how="left")
+        meta.join(common, on="__g", how="left")
         .fillna({"__n_common": 0})
-        .join(uni, on=gkeys)
+        .join(uni, on="__g")
     )
     theta_min = (F.col("__cut").cast("double") + F.lit(_TWO63)) / F.lit(
         _TWO64
@@ -335,7 +258,7 @@ def sliding_theta_overlap(
     ).otherwise(F.col("__n_common") / theta_min)
     union_est = _theta_est(F.col("__n_u"), F.col("__kth_u"), k)
     return out.select(
-        *keys,
+        *core.unpack_keys(keys),
         _theta_est(F.col("__n_a"), F.col("__kth_a"), k).alias("est_a"),
         _theta_est(F.col("__n_b"), F.col("__kth_b"), k).alias("est_b"),
         inter_est.alias("intersect_est"),

@@ -41,6 +41,10 @@ containment argument applied to the coarse bucket.
 Everything is whole-stage codegen: build = one groupBy shuffle + the
 partition-local k-min prune; queries are one conditional-sum pass
 over ≤ k rows per (group, bucket). Zero Python.
+
+The state is the core's tuple spec (operators/sliding.py: cells ``h``,
+fold ``sum(summary)``, lineage (k, hash_fn), re-trim the per-bucket
+k-min); merge, expire, coarsen and the window cutoffs are the core's.
 """
 
 from __future__ import annotations
@@ -49,13 +53,10 @@ from collections.abc import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
-from hyper_spark.operators.sliding_hll import (
-    _epoch_seconds,
-    _interval_seconds,
-    sliding_expire,
-)
-from hyper_spark.operators.sliding_theta import _kmin
+from hyper_spark.operators import sliding as core
+from hyper_spark.operators.sliding import kmin as _kmin
 from hyper_spark.operators.tuple_agg import _hash_col, _theta
 
 __all__ = [
@@ -65,6 +66,14 @@ __all__ = [
     "sliding_tuple_coarsen",
     "sliding_tuple_estimates",
 ]
+
+SPEC = core.SlidingSpec(
+    "sliding tuple",
+    ("h",),
+    lambda cols: [F.sum("summary").alias("summary")],
+    lineage=("k", "hash_fn"),
+    retrim=core.bucket_kmin,
+)
 
 
 def sliding_tuple_table(
@@ -91,9 +100,7 @@ def sliding_tuple_table(
         df.filter(idc.isNotNull() & t.isNotNull())
         .select(
             *keys,
-            F.window(F.col(ts_col), grain).start.cast("timestamp").alias(
-                "bucket_ts"
-            ),
+            core.bucket_start(ts_col, grain).alias("bucket_ts"),
             _hash_col(idc, hash_fn).alias("h"),
             valc.cast("double").alias("__v"),
         )
@@ -105,15 +112,6 @@ def sliding_tuple_table(
     )
 
 
-def _meta(state: DataFrame) -> tuple[int, str]:
-    metas = state.select("k", "hash_fn").distinct().take(2)
-    if not metas:
-        raise ValueError("empty sliding tuple state")
-    if len(metas) > 1:
-        raise ValueError("mixed (k, hash_fn) sliding tuple states")
-    return int(metas[0]["k"]), metas[0]["hash_fn"]
-
-
 def sliding_tuple_merge(
     states: Sequence[DataFrame], keys: Sequence[str]
 ) -> DataFrame:
@@ -121,25 +119,10 @@ def sliding_tuple_merge(
     same-(group, bucket, hash) summaries SUM, then re-trim per bucket.
     Lossless vs the direct build of the combined input (hash set
     exact, summaries up to double addition order)."""
-    if not states:
-        raise ValueError("no states to merge")
-    keys = list(keys)
-    u = states[0]
-    for s in states[1:]:
-        u = u.unionByName(s)
-    k, hash_fn = _meta(u)
-    summed = u.groupBy(*keys, "bucket_ts", "h").agg(
-        F.sum("summary").alias("summary")
-    )
-    return _kmin(summed, [*keys, "bucket_ts"], k).select(
-        "*", F.lit(k).alias("k"), F.lit(hash_fn).alias("hash_fn")
-    )
+    return core.merge(SPEC, states, keys)
 
 
-def sliding_tuple_expire(state: DataFrame, older_than_ts: str) -> DataFrame:
-    """Drop buckets strictly older than the cutoff — a plain range
-    predicate (buckets are independent)."""
-    return sliding_expire(state, older_than_ts)
+sliding_tuple_expire = core.expire
 
 
 def sliding_tuple_coarsen(
@@ -153,30 +136,9 @@ def sliding_tuple_coarsen(
     fine buckets, then one k-min re-trim per coarse bucket). Lossless
     for every window whose oldest edge aligns to the coarse grain —
     the module-docstring containment argument applied to the coarse
-    bucket. Cutoff must sit on a coarse boundary (the sliding_coarsen
-    contract)."""
-    keys = list(keys)
-    k, hash_fn = _meta(state)
-    cutoff = F.lit(older_than_ts).cast("timestamp")
-    b = F.col("bucket_ts").cast("timestamp")
-    recent = state.filter(b >= cutoff)
-    old = (
-        state.filter(b < cutoff)
-        .select(
-            *keys,
-            F.window("bucket_ts", grain).start.cast("timestamp").alias(
-                "bucket_ts"
-            ),
-            "h",
-            "summary",
-        )
-        .groupBy(*keys, "bucket_ts", "h")
-        .agg(F.sum("summary").alias("summary"))
-    )
-    folded = _kmin(old, [*keys, "bucket_ts"], k).select(
-        "*", F.lit(k).alias("k"), F.lit(hash_fn).alias("hash_fn")
-    )
-    return recent.unionByName(folded)
+    bucket. Cutoff must sit on a coarse boundary (the core's
+    cutoff-alignment contract, operators/sliding.py)."""
+    return core.coarsen(SPEC, state, keys, older_than_ts, grain)
 
 
 def sliding_tuple_estimates(
@@ -191,45 +153,24 @@ def sliding_tuple_estimates(
     (group, window, hash): summaries SUM over in-window buckets (the
     key's exact window total, by the module-docstring containment
     argument), then one k-min trim and the tuple_agg estimator —
-    exact below saturation, Horvitz–Thompson above it."""
+    exact below saturation, Horvitz–Thompson above it. The state's
+    hash_fn lineage is read with one driver action."""
     keys = list(keys)
-    labels = list(windows)
-    spark = state.sparkSession
-    ref_s = _epoch_seconds(spark, t_ref)
-    cutoffs = {
-        lab: ref_s - _interval_seconds(spark, windows[lab]) for lab in labels
-    }
-    if k is None:
-        k, hash_fn = _meta(state)
-    else:
-        _, hash_fn = _meta(state)
+    cutoffs = core.window_cutoffs(t_ref, windows)
+    meta = core.read_lineage(state, SPEC.lineage, SPEC.name)
+    k = int(meta["k"]) if k is None else k
     kf = float(k)
-    b = F.col("bucket_ts").cast("timestamp").cast("double")
+    b = core.bucket_seconds()
     stacked = (
-        state.select(
-            *keys,
-            "h",
-            "summary",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(lab).alias("window"),
-                            (b >= F.lit(cutoffs[lab])).alias("__in"),
-                        )
-                        for lab in labels
-                    ]
-                )
-            ).alias("__s"),
+        core.stack_windows(
+            state, keys, ["h", "summary"], cutoffs,
+            lambda i, cut: [(b >= cut).alias("__in")],
         )
-        .filter(F.col("__s.__in"))
-        .select(*keys, F.col("__s.window").alias("window"), "h", "summary")
+        .filter(F.col("__in"))
         .groupBy(*keys, "window", "h")
         .agg(F.sum("summary").alias("summary"))
     )
     kept = _kmin(stacked, [*keys, "window"], k)
-    from pyspark.sql.window import Window
-
     w = Window.partitionBy(*keys, "window")
     pre = kept.withColumn("__kth", F.max("h").over(w))
     agg = pre.groupBy(*keys, "window").agg(
@@ -240,7 +181,7 @@ def sliding_tuple_estimates(
             F.when(F.col("h") < F.col("__kth"), F.col("summary"))
         ).alias("__sum_below"),
     )
-    theta = _theta(F.col("__kth"), hash_fn)
+    theta = _theta(F.col("__kth"), meta["hash_fn"])
     sat = F.col("n_entries") >= k
     distinct_est = F.when(sat, F.lit(kf - 1.0) / theta).otherwise(
         F.col("n_entries").cast("double")

@@ -64,7 +64,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from hyper_spark.kernel.theta import theta_rse
-from hyper_spark.operators.sliding_theta import _kmin
+from hyper_spark.operators.sliding import kmin as _kmin
 
 __all__ = [
     "tuple_sketch_by",

@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from hyper_spark.operators.ddsketch import dd_bucket_col, dd_quantiles
+from hyper_spark.operators.sliding_dd import dd_mass
 
 __all__ = ["streaming_windowed_dd_by", "windowed_dd_quantiles"]
 
@@ -70,23 +71,14 @@ def streaming_windowed_dd_by(
         if slide is not None
         else F.window(F.col(ts_col), window)
     )
-    base = df.withWatermark(ts_col, watermark).filter(c.isNotNull())
-    if weight is None:
-        mass = F.count(F.lit(1))
-    else:
-        w = F.col(weight) if isinstance(weight, str) else weight
-        wd = w.cast("double")
-        # NaN > 0 is TRUE in Spark SQL; one NaN mass would permanently
-        # poison its window's final (append-mode) bucket row
-        base = base.filter((wd > 0) & ~F.isnan(wd))
-        mass = F.sum(wd)
+    where, prep, mass = dd_mass(weight)
     return (
-        base.groupBy(
-            *keys,
-            win.alias("__w"),
-            store.alias("store"),
-            bucket.alias("bucket"),
+        df.withWatermark(ts_col, watermark)
+        .filter(c.isNotNull() & where)
+        .select(
+            *keys, F.col(ts_col), store.alias("store"), bucket.alias("bucket"), *prep
         )
+        .groupBy(*keys, win.alias("__w"), "store", "bucket")
         .agg(mass.alias("count"))
         .select(
             *keys,

@@ -37,6 +37,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from hyper_spark.operators.decay import _half_life_seconds
+from hyper_spark.operators.sliding import interval_seconds
 
 __all__ = [
     "streaming_windowed_decay_by",
@@ -68,7 +69,7 @@ def streaming_windowed_decay_by(
     the raw observation count (integer — exact across engines) and
     ``last_seen`` the max event time, both free from the same agg."""
     hl = _half_life_seconds(df, half_life)
-    win_s = _interval_seconds(df, window)
+    win_s = interval_seconds(df.sparkSession, window)
     if win_s / hl > _MAX_WINDOW_HALF_LIVES:
         raise ValueError(
             f"window/half_life = {win_s / hl:.0f} half-lives per window "
@@ -181,15 +182,3 @@ def windowed_decayed_topk(
         .drop("__rk")
     )
 
-
-def _interval_seconds(df: DataFrame, interval: str) -> float:
-    row = (
-        df.sparkSession.range(1)
-        .select(
-            F.expr(
-                f"cast(cast(INTERVAL '{interval}' as interval second) as long)"
-            ).alias("s")
-        )
-        .collect()[0]
-    )
-    return float(row["s"])

@@ -14,7 +14,8 @@ with capacity c emits every item with in-bucket share >= 1/c — the
 same Misra-Gries guarantee operators/sliding_cms.py derives from
 local_topk_candidates, so a capacity >= the query k preserves the
 window-completeness argument. ``sliding_cms_topk`` queries the two
-sinks directly.
+sinks directly. The cell build is the batch table's own
+(operators/sliding_cms.py::cms_cells over the core's ``build_cells``).
 """
 
 from __future__ import annotations
@@ -22,9 +23,8 @@ from __future__ import annotations
 from typing import Sequence
 
 from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
 
-from hyper_spark.operators.cms_agg import cms_bucket_col
+from hyper_spark.operators.sliding_cms import cms_cells
 
 __all__ = ["streaming_sliding_cms_cells"]
 
@@ -41,39 +41,9 @@ def streaming_sliding_cms_cells(
     hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """Streaming cell rows per (keys, grain window): DataFrame[*keys,
-    bucket_ts, row, bucket, cnt, depth, width, hash_fn] — the exact
-    schema sliding_cms_topk consumes. Late rows inside the watermark
-    fold in exactly (count is order-insensitive); works identically on
-    a bounded batch frame, which the parity test exploits."""
-    c = F.col(col) if isinstance(col, str) else col
-    keys = list(keys)
-    src = df
-    if df.isStreaming:
-        src = src.withWatermark(ts_col, watermark)
-    rows = F.posexplode(
-        F.array(
-            *[cms_bucket_col(c, i, width, hash_fn) for i in range(depth)]
-        )
-    )
-    prepared = src.filter(c.isNotNull()).select(
-        *keys, F.col(ts_col), rows.alias("row", "bucket")
-    )
-    return (
-        prepared.groupBy(
-            *keys,
-            F.window(F.col(ts_col), grain).alias("__w"),
-            F.col("row"),
-            F.col("bucket"),
-        )
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .select(
-            *keys,
-            F.col("__w.start").cast("timestamp").alias("bucket_ts"),
-            "row",
-            "bucket",
-            "cnt",
-            F.lit(depth).alias("depth"),
-            F.lit(width).alias("width"),
-            F.lit(hash_fn).alias("hash_fn"),
-        )
-    )
+    bucket_ts, row, bucket, cnt, depth, width, hash_fn] — the batch
+    table's cell build, the exact schema sliding_cms_topk consumes.
+    Late rows inside the watermark fold in exactly (count is
+    order-insensitive); works identically on a bounded batch frame,
+    which the parity test exploits."""
+    return cms_cells(df, ts_col, keys, col, grain, depth, width, hash_fn, watermark)

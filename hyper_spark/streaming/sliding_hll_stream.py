@@ -14,7 +14,9 @@ rows EXACTLY. The sink is directly queryable by
 correctness requirement); run ``sliding_merge([sink_df], keys)``
 periodically to compact history to the front — fronts merge
 losslessly, so compaction can run incrementally at any cadence, the
-checkpoint/rollup shape used across the library.
+checkpoint/rollup shape used across the library. The cell build is the
+batch table's own (operators/sliding_hll.py::register_cells over the
+core's ``build_cells``); only the front filter is left to the merge.
 """
 
 from __future__ import annotations
@@ -22,9 +24,8 @@ from __future__ import annotations
 from typing import Sequence
 
 from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
 
-from hyper_spark.functions.hashing import hll_prepare
+from hyper_spark.operators.sliding_hll import register_cells
 
 __all__ = ["streaming_sliding_register_by"]
 
@@ -40,33 +41,8 @@ def streaming_sliding_register_by(
     hash_fn: str = "sha1",
 ) -> DataFrame:
     """Streaming bucketized register rows per (keys, grain window):
-    DataFrame[*keys, idx, bucket_ts, rho]. Late rows inside the
-    watermark fold in exactly (max is order-insensitive); works
-    identically on a bounded batch frame, which the parity test
-    exploits."""
-    c = F.col(col) if isinstance(col, str) else col
-    keys = list(keys)
-    idx, rho = hll_prepare(c, p, hash_fn)
-    src = df
-    if df.isStreaming:
-        src = src.withWatermark(ts_col, watermark)
-    prepared = src.filter(c.isNotNull()).select(
-        *keys,
-        F.col(ts_col),
-        idx.alias("idx"),
-        rho.alias("rho"),
-    )
-    return (
-        prepared.groupBy(
-            *keys,
-            F.window(F.col(ts_col), grain).alias("__w"),
-            F.col("idx"),
-        )
-        .agg(F.max("rho").alias("rho"))
-        .select(
-            *keys,
-            "idx",
-            F.col("__w.start").cast("timestamp").alias("bucket_ts"),
-            "rho",
-        )
-    )
+    DataFrame[*keys, idx, bucket_ts, rho] — the batch table's cell
+    build before its front filter. Late rows inside the watermark fold
+    in exactly (max is order-insensitive); works identically on a
+    bounded batch frame, which the parity test exploits."""
+    return register_cells(df, ts_col, keys, col, p, grain, hash_fn, watermark)

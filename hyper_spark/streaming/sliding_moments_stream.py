@@ -11,7 +11,9 @@ Sums and min/max are order-insensitive, so closed buckets match the
 batch bucketization of the same rows exactly up to float-addition
 associativity (counts and min/max bit-exact, power sums at ~1e-15
 relative — the parity pytest asserts both). The sink is directly
-queryable by sliding_moments_quantiles / sliding_moments_stats.
+queryable by sliding_moments_quantiles / sliding_moments_stats. The
+cell build is the batch table's own (operators/sliding_moments.py::
+moments_cells over the core's ``build_cells``).
 """
 
 from __future__ import annotations
@@ -19,9 +21,8 @@ from __future__ import annotations
 from typing import Sequence
 
 from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
 
-from hyper_spark.kernel.moments import MAX_K
+from hyper_spark.operators.sliding_moments import moments_cells
 
 __all__ = ["streaming_sliding_moments"]
 
@@ -37,46 +38,9 @@ def streaming_sliding_moments(
     log_moments: bool = True,
 ) -> DataFrame:
     """Streaming moments rows per (keys, grain window): DataFrame[*keys,
-    bucket_ts, n, mn, mx, m1..mk (, n_pos, lm1..lmk)] — the exact
-    schema the batch sliding_moments query paths consume. Late rows
-    inside the watermark fold in exactly (sum/min/max are
-    order-insensitive); works identically on a bounded batch frame,
-    which the parity test exploits."""
-    if not 2 <= k <= MAX_K:
-        raise ValueError(f"k must be in [2, {MAX_K}], got {k}")
-    c = F.col(col) if isinstance(col, str) else col
-    keys = list(keys)
-    src = df
-    if df.isStreaming:
-        src = src.withWatermark(ts_col, watermark)
-    prepared = src.filter(c.isNotNull()).select(
-        *keys, F.col(ts_col), c.alias("__v")
-    )
-    v = F.col("__v")
-    aggs = [
-        F.count(F.lit(1)).alias("n"),
-        F.min(v).alias("mn"),
-        F.max(v).alias("mx"),
-        *[F.sum(F.pow(v, i)).alias(f"m{i}") for i in range(1, k + 1)],
-    ]
-    if log_moments:
-        lx = F.when(v > 0, F.log(v))
-        aggs.append(F.count(lx).alias("n_pos"))
-        aggs.extend(F.sum(F.pow(lx, i)).alias(f"lm{i}") for i in range(1, k + 1))
-    return (
-        prepared.groupBy(*keys, F.window(F.col(ts_col), grain).alias("__w"))
-        .agg(*aggs)
-        .select(
-            *keys,
-            F.col("__w.start").cast("timestamp").alias("bucket_ts"),
-            "n",
-            "mn",
-            "mx",
-            *[f"m{i}" for i in range(1, k + 1)],
-            *(
-                ["n_pos"] + [f"lm{i}" for i in range(1, k + 1)]
-                if log_moments
-                else []
-            ),
-        )
-    )
+    bucket_ts, n, mn, mx, m1..mk (, n_pos, lm1..lmk)] — the batch
+    table's cell build, the exact schema the sliding_moments query
+    paths consume. Late rows inside the watermark fold in exactly
+    (sum/min/max are order-insensitive); works identically on a
+    bounded batch frame, which the parity test exploits."""
+    return moments_cells(df, ts_col, keys, col, k, grain, log_moments, watermark)

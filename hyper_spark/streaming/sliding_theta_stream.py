@@ -21,17 +21,22 @@ dropped WITHOUT an emission (everything admitted was already emitted),
 so state is bounded by live buckets × k. Same hash conventions as the
 batch build (signed xxhash64 over the string cast — mixed states fail
 the merge's (k, hash_fn) check loudly).
+
+The operator is the tuple stream's
+(sliding_tuple_stream.py::kmin_admissions) fed a zero summary: with
+every batch sum zero its emission rule — new admissions plus admitted
+hashes with a nonzero delta — is exactly the new admissions, and the
+state blob is the same.
 """
 
 from __future__ import annotations
 
-from typing import Any, Iterator, Sequence, Tuple
+from typing import Sequence
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from hyper_spark.streaming.sliding_tuple_stream import kmin_admissions
 
 __all__ = ["streaming_sliding_theta_entries"]
 
@@ -52,79 +57,6 @@ def streaming_sliding_theta_entries(
     the appended sink to compact to the exact batch state; the merged
     state feeds sliding_theta_estimates / _overlap / _coarsen
     unchanged."""
-    if k < 3:
-        raise ValueError("k must be >= 3")
-    keys = list(keys)
-    session_tz = df.sparkSession.conf.get("spark.sql.session.timeZone")
-    win = F.window(F.col(ts_col), grain)
-    src = df
-    if df.isStreaming:
-        src = src.withWatermark(ts_col, watermark)
-    # the watermarked event-time column must survive into the stateful
-    # operator's child plan (hll_stream.py lesson) — ts rides along
-    prepared = src.filter(F.col(col).isNotNull()).select(
-        *keys,
-        win["start"].alias("__ws"),
-        win["end"].alias("__we"),
-        F.xxhash64(F.col(col).cast("string")).alias("h"),
-        F.col(ts_col),
-    )
-
-    out_fields = [
-        f"{df.schema[kk].name} {df.schema[kk].dataType.simpleString()}"
-        for kk in keys
-    ] + ["bucket_ts timestamp", "h bigint", "k int", "hash_fn string"]
-    output_schema = ", ".join(out_fields)
-    state_schema = "entries binary"
-    group_cols = keys + ["__ws", "__we"]
-
-    def update(
-        key: Tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            # watermark passed the bucket end: every admitted hash was
-            # already emitted as a delta — just drop the state
-            state.remove()
-            return
-        if state.exists:
-            (blob,) = state.get
-            cur = np.frombuffer(bytes(blob), dtype=np.int64)
-        else:
-            cur = np.empty(0, dtype=np.int64)
-        incoming = np.empty(0, dtype=np.int64)
-        for pdf in pdfs:
-            if len(pdf):
-                incoming = np.concatenate(
-                    [incoming, pdf["h"].to_numpy(dtype=np.int64)]
-                )
-        merged = np.unique(np.concatenate([cur, incoming]))[:k]
-        admitted = np.setdiff1d(merged, cur, assume_unique=True)
-        state.update((merged.tobytes(),))
-        # drop state once the watermark passes the bucket end; if it
-        # already has (possible on replays), close inline — a
-        # past-deadline setTimeoutTimestamp raises
-        bucket_end = pd.Timestamp(key[len(keys) + 1])
-        if bucket_end.tz is None:
-            bucket_end = bucket_end.tz_localize(session_tz)
-        deadline = int(bucket_end.value // 10**6)
-        if state.getCurrentWatermarkMs() >= deadline:
-            state.remove()
-        else:
-            state.setTimeoutTimestamp(deadline)
-        if len(admitted):
-            out = {kk: [key[i]] * len(admitted) for i, kk in enumerate(keys)}
-            out["bucket_ts"] = [key[len(keys)]] * len(admitted)
-            out["h"] = admitted
-            out["k"] = [k] * len(admitted)
-            out["hash_fn"] = ["xxhash64"] * len(admitted)
-            yield pd.DataFrame(out)
-
-    return prepared.groupBy(*group_cols).applyInPandasWithState(
-        update,
-        outputStructType=output_schema,
-        stateStructType=state_schema,
-        outputMode=output_mode,
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
+    return kmin_admissions(
+        df, ts_col, keys, col, F.lit(0.0), k, grain, watermark, output_mode
+    ).drop("summary")

@@ -43,30 +43,29 @@ from typing import Any, Iterator, Sequence, Tuple
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 __all__ = ["streaming_sliding_tuple_entries"]
 
 
-def streaming_sliding_tuple_entries(
+def kmin_admissions(
     df: DataFrame,
     ts_col: str,
     keys: Sequence[str],
     id_col: str,
-    val_col: str,
-    k: int = 4096,
-    grain: str = "1 day",
-    watermark: str = "1 hour",
-    output_mode: str = "append",
+    val: Column,
+    k: int,
+    grain: str,
+    watermark: str,
+    output_mode: str,
 ) -> DataFrame:
-    """Streaming per-(keys, grain-bucket) tuple-entry deltas:
-    DataFrame[*keys, bucket_ts, h, summary, k, hash_fn] — the
-    sliding_tuple state schema with per-batch summary deltas. Run
-    ``sliding_tuple_merge([sink_df], keys)`` over the appended sink to
-    compact to the exact batch state; the merged state feeds
-    ``sliding_tuple_estimates`` / ``_coarsen`` unchanged."""
+    """Per-(keys, grain-bucket) k-min admission deltas:
+    DataFrame[*keys, bucket_ts, h, summary, k, hash_fn] — one row per
+    newly admitted hash and per already-admitted hash with a nonzero
+    batch sum of ``val`` (module doc). With ``val`` all zero it emits
+    exactly the admissions — the theta stream."""
     if k < 3:
         raise ValueError("k must be >= 3")
     keys = list(keys)
@@ -85,7 +84,7 @@ def streaming_sliding_tuple_entries(
         win["start"].alias("__ws"),
         win["end"].alias("__we"),
         F.xxhash64(F.col(id_col).cast("string")).alias("h"),
-        F.coalesce(F.col(val_col).cast("double"), F.lit(0.0)).alias("__v"),
+        F.coalesce(val.cast("double"), F.lit(0.0)).alias("__v"),
         F.col(ts_col),
     )
 
@@ -164,4 +163,26 @@ def streaming_sliding_tuple_entries(
         stateStructType=state_schema,
         outputMode=output_mode,
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    )
+
+
+def streaming_sliding_tuple_entries(
+    df: DataFrame,
+    ts_col: str,
+    keys: Sequence[str],
+    id_col: str,
+    val_col: str,
+    k: int = 4096,
+    grain: str = "1 day",
+    watermark: str = "1 hour",
+    output_mode: str = "append",
+) -> DataFrame:
+    """Streaming per-(keys, grain-bucket) tuple-entry deltas:
+    DataFrame[*keys, bucket_ts, h, summary, k, hash_fn] — the
+    sliding_tuple state schema with per-batch summary deltas. Run
+    ``sliding_tuple_merge([sink_df], keys)`` over the appended sink to
+    compact to the exact batch state; the merged state feeds
+    ``sliding_tuple_estimates`` / ``_coarsen`` unchanged."""
+    return kmin_admissions(
+        df, ts_col, keys, id_col, F.col(val_col), k, grain, watermark, output_mode
     )
