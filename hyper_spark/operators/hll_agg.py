@@ -17,10 +17,10 @@ Two physical strategies, both ending in identical sketch bytes:
     ``grouped_apply`` (operators/util.py).
 
 ``partial``
-    rows → JVM-native (idx, rho) → the shared ``mapInArrow``
-    register-partial builder (``_register_partials``, also checkpoint
-    level 0) builds *per-partition* partial sketches in Arrow and numpy
-    (map-side combine; nothing raw is shuffled) → ``grouped_apply``
+    rows → JVM-native (idx, rho) → the shared keyed partial builder
+    (operators/util.py::keyed_partials, also checkpoint level 0) builds
+    *per-partition* partial sketches in Arrow and numpy (map-side
+    combine; nothing raw is shuffled) → ``grouped_apply``
     merge of the blobs per group with ``np.maximum.reduce``. This is
     the treeAggregate shape: shuffle carries only num_partitions ×
     num_groups blobs.
@@ -39,23 +39,20 @@ Mixed-precision merge folds to the minimum P first, matching union/1
 from __future__ import annotations
 
 import time
-from typing import Iterator, Sequence
+from typing import Sequence
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-import pyarrow.compute as pc
 from pyspark import TaskContext
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     BinaryType,
     DoubleType,
     IntegerType,
     LongType,
     StructField,
-    StructType,
 )
 
 from hyper_spark.functions.hashing import hll_prepare
@@ -67,7 +64,7 @@ from hyper_spark.kernel.hll import (
     estimate_beta,
     estimate_from_registers,
 )
-from hyper_spark.operators.util import grouped_apply
+from hyper_spark.operators.util import grouped_apply, grow, keyed_partials
 
 __all__ = [
     "sketch_by",
@@ -139,30 +136,37 @@ def _merge_fn(keys: Sequence[str], encoding: str = "dense", decode_encoding: str
     return merge
 
 
-def _group_codes(batch: pa.RecordBatch, cols: Sequence[str]) -> tuple[np.ndarray, np.ndarray]:
-    """Number the distinct ``cols`` value tuples of a non-empty batch:
-    the first row holding each tuple, and each row's tuple number.
-    NULL is a value of its own; no ``cols`` is one tuple."""
-    first = np.zeros(1, dtype=np.int64)
-    code = np.zeros(batch.num_rows, dtype=np.int64)
-    for c in cols:
-        enc = pc.dictionary_encode(batch.column(c), null_encoding="encode")
-        # renumbering after each column keeps the codes below rows^2
-        _, first, code = np.unique(
-            code * len(enc.dictionary) + enc.indices.to_numpy(),
-            return_index=True,
-            return_inverse=True,
+class _HllFold:
+    """``keyed_partials`` fold of a partition's (idx, rho) rows into
+    one slots × 2^p register matrix: one ``np.maximum.at`` per batch
+    over all slots. Emits the sketch and its lineage."""
+
+    def __init__(self, p: int, encoding: str):
+        self.t0 = time.perf_counter()
+        self.p, self.encoding = p, encoding
+        self.regs = np.zeros((0, 1 << p), dtype=np.uint8)
+        self.rows_in = np.zeros(0, dtype=np.int64)
+
+    def fold(self, batch: pa.RecordBatch, slot: np.ndarray, n: int) -> None:
+        self.regs, self.rows_in = grow(self.regs, n), grow(self.rows_in, n)
+        np.maximum.at(
+            self.regs.reshape(-1),
+            slot * self.regs.shape[1] + batch.column("idx").to_numpy(),
+            batch.column("rho").to_numpy().astype(np.uint8),
         )
-    return first, code
+        self.rows_in += np.bincount(slot, minlength=len(self.rows_in))
 
-
-def _grow(a: np.ndarray, n: int) -> np.ndarray:
-    """``a`` with room for at least ``n`` rows; new rows are zero."""
-    if n <= len(a):
-        return a
-    out = np.zeros((max(n, 2 * len(a)),) + a.shape[1:], dtype=a.dtype)
-    out[: len(a)] = a
-    return out
+    def emit(self, n: int) -> list:
+        blobs = [encode_registers(r, self.encoding) for r in self.regs[:n]]
+        build_ms = (time.perf_counter() - self.t0) * 1000.0 / n
+        return [
+            np.full(n, self.p),
+            blobs,
+            np.full(n, TaskContext.get().partitionId()),
+            self.rows_in[:n],
+            np.fromiter(map(len, blobs), np.int64, n),
+            np.full(n, build_ms),
+        ]
 
 
 def _register_partials(
@@ -170,70 +174,14 @@ def _register_partials(
 ) -> DataFrame:
     """The map-side combine of every ``partial`` plan (``sketch_by``'s
     ``partial`` strategy and checkpoint level 0): per task partition,
-    one sketch per distinct ``group_cols`` tuple plus its lineage.
-
-    ``prepared`` holds ``group_cols`` and the JVM-computed ``idx`` and
-    ``rho``. Batches stay in Arrow and numpy: each row gets a group
-    code from the Arrow key columns, a partition-wide slot per group,
-    and one ``np.maximum.at`` per batch folds the batch into a
-    slots × 2^p register matrix. Keys are emitted as the Arrow values
-    that arrived, so a bigint key above 2^53 keeps its exact value
-    whatever shares its batch."""
-    group_cols = list(group_cols)
-    m = 1 << p
-    schema = StructType(
-        [prepared.schema[c] for c in group_cols] + SKETCH_FIELDS + LINEAGE_FIELDS
+    one sketch per distinct ``group_cols`` tuple plus its lineage,
+    built by the shared ``keyed_partials`` (operators/util.py) from
+    ``prepared``'s ``group_cols`` and JVM-computed ``idx`` and
+    ``rho``."""
+    return keyed_partials(
+        prepared, group_cols, SKETCH_FIELDS + LINEAGE_FIELDS,
+        lambda: _HllFold(p, encoding),
     )
-    large = prepared.sparkSession.conf.get(
-        "spark.sql.execution.arrow.useLargeVarTypes", "false"
-    ).lower() == "true"
-    out_schema = to_arrow_schema(schema, prefers_large_types=large)
-
-    def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        t0 = time.perf_counter()
-        slots: dict[tuple, int] = {}
-        heads: list[list[pa.Array]] = []  # key values of the slots each batch opened
-        regs = np.zeros((0, m), dtype=np.uint8)
-        rows_in = np.zeros(0, dtype=np.int64)
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            first, code = _group_codes(batch, group_cols)
-            key_cols = [batch.column(c).take(first) for c in group_cols]
-            # with no group_cols the batch is one group, keyed ()
-            tuples = list(zip(*(c.to_pylist() for c in key_cols))) or [()]
-            new = [i for i, t in enumerate(tuples) if t not in slots]
-            for i in new:
-                slots[tuples[i]] = len(slots)
-            if new:
-                heads.append([c.take(new) for c in key_cols])
-            slot = np.fromiter((slots[t] for t in tuples), np.int64, len(tuples))[code]
-            regs, rows_in = _grow(regs, len(slots)), _grow(rows_in, len(slots))
-            np.maximum.at(
-                regs.reshape(-1),
-                slot * m + batch.column("idx").to_numpy(),
-                batch.column("rho").to_numpy().astype(np.uint8),
-            )
-            rows_in += np.bincount(slot, minlength=len(rows_in))
-        n = len(slots)
-        if not n:
-            return
-        blobs = [encode_registers(r, encoding) for r in regs[:n]]
-        build_ms = (time.perf_counter() - t0) * 1000.0 / n
-        cols = [pa.concat_arrays([h[i] for h in heads]) for i in range(len(group_cols))]
-        cols += [
-            pa.array(np.full(n, p)),
-            pa.array(blobs),
-            pa.array(np.full(n, TaskContext.get().partitionId())),
-            pa.array(rows_in[:n]),
-            pa.array(np.fromiter(map(len, blobs), np.int64, n)),
-            pa.array(np.full(n, build_ms)),
-        ]
-        yield pa.RecordBatch.from_arrays(
-            [c.cast(f.type) for c, f in zip(cols, out_schema)], schema=out_schema
-        )
-
-    return prepared.mapInArrow(build, schema)
 
 
 def sketch_by(

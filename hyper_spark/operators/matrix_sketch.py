@@ -1,10 +1,11 @@
 """Distributed Frequent-Directions matrix sketching over embedding columns.
 
 Shape matches the package's other sketches (quantiles.py, hll_agg.py):
-per-partition FD build inside ``mapInPandas`` (the map-side combine —
-Arrow batches of the embedding column stacked into one numpy matmul-
-friendly matrix), then a per-group merge of serialized sketches through
-the shared ``grouped_apply`` (operators/util.py).
+per-partition FD build in the shared ``keyed_partials`` (the map-side
+combine — each Arrow batch's embedding values buffer reshaped zero-copy
+into one numpy matmul-friendly matrix per group), then a per-group
+merge of serialized sketches through the shared ``grouped_apply``
+(operators/util.py).
 The shuffle carries partitions x groups blobs of at most
 ``(ell-1) * dim`` float64s plus four stats — never raw vectors — so a
 100-TB embedding table ships kilobytes per group to the reducer, the
@@ -27,10 +28,12 @@ matrices, per Liberty KDD'13 / Ghashami et al. SICOMP'16.
 
 from __future__ import annotations
 
-from typing import Iterator, Sequence
+from typing import Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -40,11 +43,10 @@ from pyspark.sql.types import (
     IntegerType,
     LongType,
     StructField,
-    StructType,
 )
 
 from hyper_spark.kernel.fd import FrequentDirections
-from hyper_spark.operators.util import grouped_apply
+from hyper_spark.operators.util import SlotStates, grouped_apply, keyed_partials
 
 __all__ = [
     "fd_sketch_by",
@@ -77,100 +79,49 @@ def _stack(series: pd.Series, dim: int) -> np.ndarray:
     return np.asarray(np.vstack(vals), dtype=np.float64)
 
 
-def _build_fn(ell: int, dim: int, keys: Sequence[str], col: str):
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: dict[tuple, FrequentDirections] = {}
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if keys:
-                for gkey, sub in pdf.groupby(list(keys), sort=False, dropna=False):
-                    gkey = gkey if isinstance(gkey, tuple) else (gkey,)
-                    sk = acc.get(gkey)
-                    if sk is None:
-                        sk = acc.setdefault(gkey, FrequentDirections(ell, dim))
-                    sk.update_batch(_stack(sub[col], dim))
-            else:
-                sk = acc.get(())
-                if sk is None:
-                    sk = acc.setdefault((), FrequentDirections(ell, dim))
-                sk.update_batch(_stack(pdf[col], dim))
-        if acc:
-            rows = {k: [g[i] for g in acc] for i, k in enumerate(keys)}
-            # serialize FIRST: to_bytes runs the final shrink, which can
-            # grow delta — the stats columns must mirror the state bytes
-            blobs = [sk.to_bytes() for sk in acc.values()]
-            rows["ell"] = [ell] * len(acc)
-            rows["dim"] = [dim] * len(acc)
-            rows["n"] = [sk.n for sk in acc.values()]
-            rows["fnorm2"] = [sk.fnorm2 for sk in acc.values()]
-            rows["delta"] = [sk.delta for sk in acc.values()]
-            rows["state"] = blobs
-            yield pd.DataFrame(rows)
-
-    return build
+def _matrix(arr: pa.Array, dim: int) -> np.ndarray:
+    """The rows of a list<float> column that hold ``dim`` values as one
+    (m, dim) float64 matrix; NULL and wrong-length rows are skipped.
+    The values buffer is reshaped zero-copy, with no per-row
+    numpy-object materialization: measured ~4x the pandas decode path
+    at dim=64, which allocates one ndarray per row before the kernel
+    sees a batch."""
+    ok = pc.fill_null(pc.equal(pc.list_value_length(arr), dim), False)
+    if not pc.all(ok).as_py():
+        arr = arr.filter(ok)
+    # one vectorized cast: feeding f32 straight into the kernel makes
+    # every buffer fill + einsum run in the mixed-dtype slow path
+    # (measured 1.23 -> 1.81 M rows/s/core with the upfront cast)
+    return (
+        arr.flatten()
+        .to_numpy(zero_copy_only=False)
+        .reshape(-1, dim)
+        .astype(np.float64, copy=False)
+    )
 
 
-def _build_arrow_fn(ell: int, dim: int):
-    """Ungrouped build over raw Arrow record batches (``mapInArrow``):
-    the list<float> column's values buffer is reshaped zero-copy into
-    the (m, dim) matrix — no per-row numpy-object materialization.
-    Measured ~4x the mapInPandas decode path at dim=64 (the pandas
-    conversion allocates one ndarray per row before the kernel ever
-    sees a batch)."""
+def _fd_states(ell: int, dim: int, col: str) -> SlotStates:
+    """Per-partition fold: one FD sketch per slot, fed each batch's
+    rows of the slot as one matrix."""
 
-    def build(batches):
-        import pyarrow as pa
+    def update(sk: FrequentDirections, rows: pa.RecordBatch) -> FrequentDirections:
+        sk.update_batch(_matrix(rows.column(col), dim))
+        return sk
 
-        sk = FrequentDirections(ell, dim)
-        for rb in batches:
-            arr = rb.column(0)
-            if isinstance(arr, pa.ChunkedArray):
-                chunks = arr.chunks
-            else:
-                chunks = [arr]
-            for chunk in chunks:
-                if len(chunk) == 0:
-                    continue
-                lengths = chunk.value_lengths().to_numpy(zero_copy_only=False)
-                if chunk.null_count == 0 and (lengths == dim).all():
-                    # one vectorized cast: feeding f32 straight into the
-                    # kernel makes every buffer fill + einsum run in the
-                    # mixed-dtype slow path (measured 1.23 -> 1.81 M
-                    # rows/s/core with the upfront cast)
-                    mat = (
-                        chunk.flatten()
-                        .to_numpy(zero_copy_only=False)
-                        .reshape(-1, dim)
-                        .astype(np.float64, copy=False)
-                    )
-                    sk.update_batch(mat)
-                else:
-                    # rare path: NULLs or ragged rows in this chunk
-                    sk.update_batch(_stack(chunk.to_pandas(), dim))
-        blob = sk.to_bytes()  # final shrink first (can grow delta)
-        yield pa.RecordBatch.from_pydict(
-            {
-                "ell": [sk.ell],
-                "dim": [sk.dim],
-                "n": [sk.n],
-                "fnorm2": [sk.fnorm2],
-                "delta": [sk.delta],
-                "state": [blob],
-            },
-            schema=pa.schema(
-                [
-                    pa.field("ell", pa.int32(), nullable=False),
-                    pa.field("dim", pa.int32(), nullable=False),
-                    pa.field("n", pa.int64(), nullable=False),
-                    pa.field("fnorm2", pa.float64(), nullable=False),
-                    pa.field("delta", pa.float64(), nullable=False),
-                    pa.field("state", pa.binary(), nullable=False),
-                ]
-            ),
-        )
+    def emit(sketches):
+        # serialize FIRST: to_bytes runs the final shrink, which can
+        # grow delta — the stats columns must mirror the state bytes
+        blobs = [sk.to_bytes() for sk in sketches]
+        return [
+            [ell] * len(sketches),
+            [dim] * len(sketches),
+            [sk.n for sk in sketches],
+            [sk.fnorm2 for sk in sketches],
+            [sk.delta for sk in sketches],
+            blobs,
+        ]
 
-    return build
+    return SlotStates(lambda: FrequentDirections(ell, dim), update, emit)
 
 
 def _merge_fn(keys: Sequence[str]):
@@ -215,13 +166,9 @@ def fd_sketch_by(
         if first is None:
             raise ValueError("cannot infer dim from an all-NULL column")
         dim = len(first[0])
-    schema = StructType([selected.schema[k] for k in keys] + FD_STATE_FIELDS)
-    if keys:
-        partials = selected.mapInPandas(
-            _build_fn(ell, int(dim), keys, col_name), schema
-        )
-    else:
-        partials = selected.mapInArrow(_build_arrow_fn(ell, int(dim)), schema)
+    partials = keyed_partials(
+        selected, keys, FD_STATE_FIELDS, lambda: _fd_states(ell, int(dim), col_name)
+    )
     return grouped_apply(partials, keys, _merge_fn(keys), FD_STATE_FIELDS)
 
 
@@ -294,86 +241,29 @@ GRAM_STATE_FIELDS = [
 ]
 
 
-def _gram_build_arrow_fn(dim: int):
-    """Ungrouped exact-Gram build over raw Arrow batches: zero-copy
-    reshape of the list<float> values buffer (same fast path as
-    ``_build_arrow_fn``), one dgemm per chunk."""
+def _gram_states(dim: int, col: str) -> SlotStates:
+    """Per-partition fold: one [gram, sums, n] accumulator per slot,
+    one dgemm per batch and slot."""
 
-    def build(batches):
-        import pyarrow as pa
+    def update(st: list, rows: pa.RecordBatch) -> list:
+        mat = _matrix(rows.column(col), dim)
+        if mat.shape[0]:
+            st[0] += mat.T @ mat
+            st[1] += mat.sum(axis=0)
+            st[2] += mat.shape[0]
+        return st
 
-        g = np.zeros((dim, dim), dtype=np.float64)
-        s = np.zeros(dim, dtype=np.float64)
-        n = 0
-        for rb in batches:
-            arr = rb.column(0)
-            chunks = arr.chunks if isinstance(arr, pa.ChunkedArray) else [arr]
-            for chunk in chunks:
-                if len(chunk) == 0:
-                    continue
-                lengths = chunk.value_lengths().to_numpy(zero_copy_only=False)
-                if chunk.null_count == 0 and (lengths == dim).all():
-                    mat = (
-                        chunk.flatten()
-                        .to_numpy(zero_copy_only=False)
-                        .reshape(-1, dim)
-                        .astype(np.float64, copy=False)
-                    )
-                else:  # rare path: NULLs or ragged rows
-                    mat = _stack(chunk.to_pandas(), dim)
-                if mat.shape[0] == 0:
-                    continue
-                g += mat.T @ mat
-                s += mat.sum(axis=0)
-                n += mat.shape[0]
-        yield pa.RecordBatch.from_pydict(
-            {
-                "dim": [dim],
-                "n": [n],
-                "s": [s.tobytes()],
-                "gram": [g.tobytes()],
-            },
-            schema=pa.schema(
-                [
-                    pa.field("dim", pa.int32(), nullable=False),
-                    pa.field("n", pa.int64(), nullable=False),
-                    pa.field("s", pa.binary(), nullable=False),
-                    pa.field("gram", pa.binary(), nullable=False),
-                ]
-            ),
-        )
+    def emit(states):
+        return [
+            [dim] * len(states),
+            [st[2] for st in states],
+            [st[1].tobytes() for st in states],
+            [st[0].tobytes() for st in states],
+        ]
 
-    return build
-
-
-def _gram_build_fn(dim: int, keys: Sequence[str], col: str):
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: dict[tuple, list] = {}  # key -> [gram, sums, n]
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            for gkey, sub in pdf.groupby(list(keys), sort=False, dropna=False):
-                gkey = gkey if isinstance(gkey, tuple) else (gkey,)
-                st = acc.get(gkey)
-                if st is None:
-                    st = acc.setdefault(
-                        gkey,
-                        [np.zeros((dim, dim)), np.zeros(dim), 0],
-                    )
-                mat = _stack(sub[col], dim)
-                if mat.shape[0]:
-                    st[0] += mat.T @ mat
-                    st[1] += mat.sum(axis=0)
-                    st[2] += mat.shape[0]
-        if acc:
-            rows = {k: [g[i] for g in acc] for i, k in enumerate(keys)}
-            rows["dim"] = [dim] * len(acc)
-            rows["n"] = [st[2] for st in acc.values()]
-            rows["s"] = [st[1].tobytes() for st in acc.values()]
-            rows["gram"] = [st[0].tobytes() for st in acc.values()]
-            yield pd.DataFrame(rows)
-
-    return build
+    return SlotStates(
+        lambda: [np.zeros((dim, dim)), np.zeros(dim), 0], update, emit
+    )
 
 
 def _gram_merge_fn(keys: Sequence[str]):
@@ -419,13 +309,9 @@ def gram_by(
         if first is None:
             raise ValueError("cannot infer dim from an all-NULL column")
         dim = len(first[0])
-    schema = StructType([selected.schema[k] for k in keys] + GRAM_STATE_FIELDS)
-    if keys:
-        partials = selected.mapInPandas(
-            _gram_build_fn(int(dim), keys, col_name), schema
-        )
-    else:
-        partials = selected.mapInArrow(_gram_build_arrow_fn(int(dim)), schema)
+    partials = keyed_partials(
+        selected, keys, GRAM_STATE_FIELDS, lambda: _gram_states(int(dim), col_name)
+    )
     return grouped_apply(partials, keys, _gram_merge_fn(keys), GRAM_STATE_FIELDS)
 
 

@@ -1,12 +1,12 @@
 """Distributed quantile sketches: KLL and t-digest.
 
-Shape: per-partition sketch build inside ``mapInPandas`` (Arrow batches of
-the numeric column only — the map-side combine), then a per-group merge
-of serialized sketches through the shared ``grouped_apply``
-(operators/util.py). Shuffle carries partitions × groups small
-JSON states, never raw values. This is the treeAggregate shape the north
-rule asks for, and it is what survives 100 TB: the raw column never
-crosses the network.
+Shape: per-partition sketch build in the shared ``keyed_partials``
+(operators/util.py; Arrow batches of the keys and the numeric column
+only — the map-side combine), then a per-group merge of serialized
+sketches through the shared ``grouped_apply``. Shuffle carries
+partitions × groups small JSON states, never raw values. This is the
+treeAggregate shape the north rule asks for, and it is what survives
+100 TB: the raw column never crosses the network.
 
 For grouped quantiles with *many* groups, per-partition grouping builds
 one sketch per (partition, group) — still bounded by groups × partitions
@@ -17,10 +17,11 @@ group key first so each group's states stay few.
 from __future__ import annotations
 
 import json
-from typing import Iterator, Sequence
+from typing import Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -28,13 +29,12 @@ from pyspark.sql.types import (
     LongType,
     StringType,
     StructField,
-    StructType,
 )
 
 from hyper_spark.kernel.kll import KllSketch
 from hyper_spark.kernel.req import ReqSketch
 from hyper_spark.kernel.tdigest import TDigest
-from hyper_spark.operators.util import grouped_apply
+from hyper_spark.operators.util import SlotStates, grouped_apply, keyed_partials
 
 __all__ = [
     "kll_by",
@@ -60,36 +60,27 @@ SKETCH_STATE_FIELDS = [
 ]
 
 
-def _build_fn(kind: str, param: float, keys: Sequence[str], col: str):
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: dict[tuple, object] = {}
+def _values(rows: pa.RecordBatch, col: str) -> np.ndarray:
+    """A numeric column as float64, NULL as NaN (the sketches skip it)."""
+    return np.asarray(rows.column(col).to_numpy(zero_copy_only=False), dtype=np.float64)
 
-        def new_sketch():
-            return _KINDS[kind](param)
 
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if keys:
-                for gkey, sub in pdf.groupby(list(keys), sort=False, dropna=False):
-                    gkey = gkey if isinstance(gkey, tuple) else (gkey,)
-                    sk = acc.get(gkey)
-                    if sk is None:
-                        sk = acc.setdefault(gkey, new_sketch())
-                    sk.update_batch(sub[col].to_numpy(dtype=np.float64))
-            else:
-                sk = acc.get(())
-                if sk is None:
-                    sk = acc.setdefault((), new_sketch())
-                sk.update_batch(pdf[col].to_numpy(dtype=np.float64))
-        if acc:
-            rows = {k: [g[i] for g in acc] for i, k in enumerate(keys)}
-            rows["kind"] = [kind] * len(acc)
-            rows["n"] = [int(sk.n) for sk in acc.values()]
-            rows["state"] = [json.dumps(sk.to_dict()) for sk in acc.values()]
-            yield pd.DataFrame(rows)
+def _states(kind: str, param: float, col: str) -> SlotStates:
+    """Per-partition fold: one sketch per slot, fed each batch's rows
+    of the slot in one ``update_batch``."""
 
-    return build
+    def emit(sketches):
+        return [
+            [kind] * len(sketches),
+            [int(sk.n) for sk in sketches],
+            [json.dumps(sk.to_dict()) for sk in sketches],
+        ]
+
+    return SlotStates(
+        lambda: _KINDS[kind](param),
+        lambda sk, rows: sk.update_batch(_values(rows, col)),
+        emit,
+    )
 
 
 def _merge_fn(kind: str, keys: Sequence[str]):
@@ -113,10 +104,9 @@ def _sketch_by(df, keys, col, kind, param) -> DataFrame:
     selected = df.select(
         *keys, (F.col(col) if isinstance(col, str) else col).alias(col_name)
     )
-    schema = StructType(
-        [selected.schema[k] for k in keys] + SKETCH_STATE_FIELDS
+    partials = keyed_partials(
+        selected, keys, SKETCH_STATE_FIELDS, lambda: _states(kind, param, col_name)
     )
-    partials = selected.mapInPandas(_build_fn(kind, param, keys, col_name), schema)
     return grouped_apply(partials, keys, _merge_fn(kind, keys), SKETCH_STATE_FIELDS)
 
 

@@ -40,10 +40,16 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, BooleanType
+from pyspark.sql.types import (
+    ArrayType,
+    BinaryType,
+    BooleanType,
+    LongType,
+    StructField,
+)
 
 from hyper_spark.operators.cms_agg import cms_bucket_col
-from hyper_spark.operators.util import grouped_apply
+from hyper_spark.operators.util import grouped_apply, grow, keyed_partials
 
 __all__ = [
     "build_file_index",
@@ -78,19 +84,47 @@ def _km_positions(h1: np.ndarray, h2: np.ndarray, k: int, m_bits: int) -> np.nda
     return ((u1 + i * u2) % np.uint64(m_bits)).astype(np.int64)
 
 
-_BLOOM_PARTIAL_FIELDS = "__file string, n bigint, bits binary"
+_BLOOM_FIELDS = [StructField("n", LongType(), False), StructField("bits", BinaryType(), False)]
+
+
+class _BloomFold:
+    """``keyed_partials`` fold of a partition's hash pairs into one
+    slots × nbytes bitmap matrix: one ``np.bitwise_or.at`` per batch
+    over all slots."""
+
+    def __init__(self, m_bits: int, k: int):
+        self.m_bits, self.k = m_bits, k
+        self.bits = np.zeros((0, (m_bits + 7) // 8), dtype=np.uint8)
+        self.n = np.zeros(0, dtype=np.int64)
+
+    def fold(self, batch, slot: np.ndarray, n: int) -> None:
+        self.bits, self.n = grow(self.bits, n), grow(self.n, n)
+        pos = _km_positions(
+            batch.column("__h1").to_numpy(), batch.column("__h2").to_numpy(),
+            self.k, self.m_bits,
+        )
+        np.bitwise_or.at(
+            self.bits.reshape(-1),
+            slot[:, None] * self.bits.shape[1] + (pos >> 3),
+            (1 << (pos & 7)).astype(np.uint8),
+        )
+        self.n += np.bincount(slot, minlength=len(self.n))
+
+    def emit(self, n: int) -> list:
+        return [self.n[:n], [b.tobytes() for b in self.bits[:n]]]
 
 
 def _file_blooms(
     df: DataFrame, col: str, m_bits: int, k: int
 ) -> DataFrame:
     """One Bloom bitmap per file, the 100-TB shape: each task ORs its
-    rows into per-file partial bitmaps locally (vectorized numpy over
-    Arrow batches — two int64 hash columns per row cross to Python,
-    never k exploded positions), then one tiny shuffle merges
-    m_bits/8-byte blobs per file. No row-level shuffle, no distinct.
-    Partition-local memory is (files seen by the task) × m_bits/8 —
-    file-aligned parquet splits see 1-2 files per task."""
+    rows into per-file partial bitmaps locally (the shared
+    ``keyed_partials``: vectorized numpy over Arrow batches — two int64
+    hash columns per row cross to Python, never k exploded positions),
+    then one tiny shuffle merges m_bits/8-byte blobs per file. No
+    row-level shuffle, no distinct. Partition-local memory is (files
+    seen by the task) × m_bits/8 — file-aligned parquet splits see 1-2
+    files per task."""
     h1, h2 = _km_hash_cols(F.col(col))
     src = (
         df.filter(F.col(col).isNotNull())
@@ -101,32 +135,7 @@ def _file_blooms(
         )
     )
     nbytes = (m_bits + 7) // 8
-
-    def pack(batches):
-        bitmaps: dict = {}
-        counts: dict = {}
-        for pdf in batches:
-            for f, grp in pdf.groupby("__file", sort=False):
-                pos = _km_positions(
-                    grp["__h1"].to_numpy(), grp["__h2"].to_numpy(), k, m_bits
-                )
-                bm = bitmaps.get(f)
-                if bm is None:
-                    bm = bitmaps[f] = np.zeros(nbytes, dtype=np.uint8)
-                np.bitwise_or.at(
-                    bm, pos >> 3, (1 << (pos & 7)).astype(np.uint8)
-                )
-                counts[f] = counts.get(f, 0) + len(grp)
-        if bitmaps:
-            yield pd.DataFrame(
-                {
-                    "__file": list(bitmaps),
-                    "n": [counts[f] for f in bitmaps],
-                    "bits": [bitmaps[f].tobytes() for f in bitmaps],
-                }
-            )
-
-    partials = src.mapInPandas(pack, _BLOOM_PARTIAL_FIELDS)
+    partials = keyed_partials(src, ["__file"], _BLOOM_FIELDS, lambda: _BloomFold(m_bits, k))
 
     def or_merge(pdf: pd.DataFrame) -> pd.DataFrame:
         bm = np.zeros(nbytes, dtype=np.uint8)
@@ -140,9 +149,7 @@ def _file_blooms(
             }
         )
 
-    return grouped_apply(
-        partials, ["__file"], or_merge, [partials.schema["n"], partials.schema["bits"]]
-    )
+    return grouped_apply(partials, ["__file"], or_merge, _BLOOM_FIELDS)
 
 
 def build_file_index(

@@ -173,7 +173,6 @@ def _dense_jaccard(
     tok_b: DataFrame | None,
     dfreq: DataFrame,
     t: float,
-    id_field,
     max_bytes: int = _DENSE_BYTES,
 ) -> DataFrame | None:
     """All exact-Jaccard pairs via packed bitmaps + blocked GEMM.
@@ -193,7 +192,6 @@ def _dense_jaccard(
         return None
     idx_map = {tok: i for i, tok in enumerate(toks)}
     bc_idx = sc.broadcast(idx_map)
-    id_t = id_field.dataType.simpleString()
     nbytes = (vocab + 7) // 8
 
     def to_bits(batches):
@@ -212,11 +210,15 @@ def _dense_jaccard(
                 {"id": pdf["id"], "bits": [row.tobytes() for row in out]}
             )
 
+    def id_t(side: DataFrame) -> str:
+        # each corpus keeps its own id type (cross mode may mix them)
+        return side.schema["id"].dataType.simpleString()
+
     def bits_of(tok: DataFrame) -> DataFrame:
         return (
             tok.groupBy(F.col("id"))
             .agg(F.collect_list("token").alias("toks"))
-            .mapInPandas(to_bits, schema=f"id {id_t}, bits binary")
+            .mapInPandas(to_bits, schema=f"id {id_t(tok)}, bits binary")
         )
 
     bits_a = bits_of(tok_a).persist()
@@ -273,7 +275,7 @@ def _dense_jaccard(
             )
 
     verified = bits_a.mapInPandas(
-        screen, schema=f"id_a {id_t}, id_b {id_t}, jaccard double"
+        screen, schema=f"id_a {id_t(bits_a)}, id_b {id_t(index_side)}, jaccard double"
     ).persist()
     verified.count()
     bits_a.unpersist()
@@ -603,7 +605,6 @@ def similarity_join(
             tok_b if cross else None,
             dfreq,
             t,
-            df.schema[id_col],
             max_bytes=dense_max_bytes,
         )
         if dense is not None:

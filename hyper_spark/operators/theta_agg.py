@@ -15,9 +15,10 @@ Physical plan (the hll_agg 'partial' doctrine):
 
 1. JVM hot path: ``xxhash64(value)`` — one codegen expression, NULLs
    dropped (the sketch NULL contract). Python never sees raw values.
-2. ``mapInPandas`` partial: per Arrow batch, per group, keep the k
-   smallest distinct hashes (numpy unique + slice) — the map-side
-   combine. Shuffle is bounded by |batches| × k longs per group,
+2. Partial in the shared ``keyed_partials`` (operators/util.py): per
+   task partition, per group, a running k smallest distinct hashes
+   (numpy unique + slice per Arrow batch) — the map-side combine.
+   Shuffle is bounded by |partitions| × k longs per group,
    independent of input rows.
 3. Merge per group through the shared ``grouped_apply``
    (operators/util.py): union the entry arrays, re-trim to k.
@@ -31,7 +32,7 @@ persists them; ``theta_union`` re-merges saved rows losslessly.
 
 from __future__ import annotations
 
-from collections.abc import Iterator, Sequence
+from collections.abc import Sequence
 
 import numpy as np
 import pandas as pd
@@ -46,8 +47,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from hyper_spark.kernel.theta import ThetaSketch, theta_rse
-from hyper_spark.operators.util import grouped_apply
+from hyper_spark.kernel.theta import ThetaSketch, _to_u64, theta_rse
+from hyper_spark.operators.util import SlotStates, grouped_apply, keyed_partials
 
 __all__ = [
     "theta_by",
@@ -71,43 +72,25 @@ THETA_FIELDS = [
 ]
 
 
-def _row(keys: Sequence[str], key_vals, sk: ThetaSketch, hash_fn: str) -> dict:
-    d = {k: v for k, v in zip(keys, key_vals)}
-    d.update(
-        k=sk.k,
-        n_entries=len(sk.entries),
-        entries=sk.to_bytes(),
-        hash_fn=hash_fn,
+def _kmins(k: int, hash_fn: str) -> SlotStates:
+    """Per-partition fold: each slot's running k smallest distinct
+    hashes, as order-mapped uint64 — the map-side combine."""
+
+    def emit(entries):
+        return [
+            [k] * len(entries),
+            [len(e) for e in entries],
+            [ThetaSketch(k, e).to_bytes() for e in entries],
+            [hash_fn] * len(entries),
+        ]
+
+    return SlotStates(
+        lambda: np.empty(0, dtype=np.uint64),
+        lambda e, rows: np.unique(
+            np.concatenate([e, _to_u64(rows.column("__h").to_numpy())])
+        )[:k],
+        emit,
     )
-    return d
-
-
-def _partials_fn(k: int, keys: Sequence[str], hash_fn: str):
-    """mapInPandas worker: per Arrow batch, per group, the k smallest
-    distinct hashes — the map-side combine."""
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = []
-            if keys:
-                grouped = pdf.groupby(list(keys), dropna=False, sort=False)
-                for key_vals, g in grouped:
-                    if not isinstance(key_vals, tuple):
-                        key_vals = (key_vals,)
-                    sk = ThetaSketch.from_signed_hashes(
-                        k, g["__h"].to_numpy(dtype=np.int64)
-                    )
-                    out.append(_row(keys, key_vals, sk, hash_fn))
-            else:
-                sk = ThetaSketch.from_signed_hashes(
-                    k, pdf["__h"].to_numpy(dtype=np.int64)
-                )
-                out.append(_row([], (), sk, hash_fn))
-            yield pd.DataFrame(out)
-
-    return build
 
 
 def _merge_fn(keys: Sequence[str]):
@@ -137,7 +120,12 @@ def _merge_fn(keys: Sequence[str]):
             )[:k],
         )
         base = {key: pdf[key].iloc[0] for key in keys}
-        base.update(_row([], (), merged, str(hfs[0])))
+        base.update(
+            k=k,
+            n_entries=len(merged.entries),
+            entries=merged.to_bytes(),
+            hash_fn=str(hfs[0]),
+        )
         return pd.DataFrame([base])
 
     return merge
@@ -164,8 +152,7 @@ def theta_by(
         df.filter(c.isNotNull())
         .select(*keys, F.xxhash64(c).alias("__h"))
     )
-    schema = StructType([prepared.schema[kk] for kk in keys] + THETA_FIELDS)
-    partials = prepared.mapInPandas(_partials_fn(k, keys, hash_fn), schema)
+    partials = keyed_partials(prepared, keys, THETA_FIELDS, lambda: _kmins(k, hash_fn))
     return grouped_apply(partials, keys, _merge_fn(keys), THETA_FIELDS)
 
 

@@ -9,6 +9,7 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructField, StructType
 
 __all__ = ["spread", "widen_for_explosion"]
@@ -47,6 +48,125 @@ def widen_for_explosion(df: DataFrame, *cols: str, factor: int = 1) -> DataFrame
     construction (no constant tuned to local mode)."""
     want = df.sparkSession.sparkContext.defaultParallelism * factor
     return df.repartition(want, *cols)
+
+
+def _group_codes(batch: pa.RecordBatch, cols: Sequence[str]) -> tuple[np.ndarray, np.ndarray]:
+    """Number the distinct ``cols`` value tuples of a non-empty batch:
+    the first row holding each tuple, and each row's tuple number.
+    NULL is a value of its own; no ``cols`` is one tuple."""
+    first = np.zeros(1, dtype=np.int64)
+    code = np.zeros(batch.num_rows, dtype=np.int64)
+    for c in cols:
+        enc = pc.dictionary_encode(batch.column(c), null_encoding="encode")
+        # renumbering after each column keeps the codes below rows^2
+        _, first, code = np.unique(
+            code * len(enc.dictionary) + enc.indices.to_numpy(),
+            return_index=True,
+            return_inverse=True,
+        )
+    return first, code
+
+
+def grow(a: np.ndarray, n: int) -> np.ndarray:
+    """``a`` with room for at least ``n`` rows; new rows are zero."""
+    if n <= len(a):
+        return a
+    out = np.zeros((max(n, 2 * len(a)),) + a.shape[1:], dtype=a.dtype)
+    out[: len(a)] = a
+    return out
+
+
+def keyed_partials(
+    df: DataFrame,
+    keys: Sequence[str],
+    fields: Sequence[StructField],
+    new_fold: Callable[[], object],
+) -> DataFrame:
+    """The map-side combine every sketch family shares: per task
+    partition, one row per distinct ``keys`` tuple (one row in all
+    when ``keys`` is empty) of ``keys`` followed by ``fields``. An
+    empty partition yields no rows.
+
+    Batches stay in Arrow and numpy. Each row gets a group code from
+    the Arrow key columns (NULL is a key value of its own) and each
+    group a partition-wide slot, numbered from 0 as the groups
+    arrive. ``new_fold()`` is called once per partition and
+    returns the family's fold, which has two methods:
+    ``fold(batch, slot, n)`` folds a batch into slots ``0 .. n-1``,
+    ``slot`` being each row's slot; ``emit(n)`` returns the values of
+    ``fields`` for slots ``0 .. n-1``, one column per field, in slot
+    order. Keys are emitted as the Arrow values that arrived, so a
+    bigint key above 2^53 keeps its exact value whatever shares its
+    batch."""
+    keys = list(keys)
+    schema = StructType([df.schema[k] for k in keys] + list(fields))
+    large = df.sparkSession.conf.get(
+        "spark.sql.execution.arrow.useLargeVarTypes", "false"
+    ).lower() == "true"
+    out_schema = to_arrow_schema(schema, prefers_large_types=large)
+
+    def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        fold = new_fold()
+        slots: dict[tuple, int] = {}
+        heads: list[list[pa.Array]] = []  # key values of the slots each batch opened
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            first, code = _group_codes(batch, keys)
+            key_cols = [batch.column(c).take(first) for c in keys]
+            # with no keys the batch is one group, keyed ()
+            tuples = list(zip(*(c.to_pylist() for c in key_cols))) or [()]
+            new = [i for i, t in enumerate(tuples) if t not in slots]
+            for i in new:
+                slots[tuples[i]] = len(slots)
+            if new:
+                heads.append([c.take(new) for c in key_cols])
+            slot = np.fromiter((slots[t] for t in tuples), np.int64, len(tuples))[code]
+            fold.fold(batch, slot, len(slots))
+        n = len(slots)
+        if not n:
+            return
+        cols = [pa.concat_arrays([h[i] for h in heads]) for i in range(len(keys))]
+        cols += [c if isinstance(c, pa.Array) else pa.array(c) for c in fold.emit(n)]
+        yield pa.RecordBatch.from_arrays(
+            [c.cast(f.type) for c, f in zip(cols, out_schema)], schema=out_schema
+        )
+
+    return df.mapInArrow(build, schema)
+
+
+def _slot_rows(batch: pa.RecordBatch, slot: np.ndarray) -> Iterator[tuple[int, pa.RecordBatch]]:
+    """Each slot of ``batch`` with its rows, in their batch order: one
+    stable sort of the slots and one ``take`` per batch (none when the
+    batch holds one slot), then a zero-copy slice per slot."""
+    order = np.argsort(slot, kind="stable")
+    ordered = slot[order]
+    starts = np.flatnonzero(np.r_[True, ordered[1:] != ordered[:-1]])
+    if len(starts) == 1:
+        yield int(slot[0]), batch
+        return
+    batch = batch.take(pa.array(order))
+    for a, b in zip(starts, [*starts[1:], len(slot)]):
+        yield int(ordered[a]), batch.slice(a, b - a)
+
+
+class SlotStates:
+    """A ``keyed_partials`` fold that keeps one state per slot:
+    ``new_state()`` opens a slot, ``update(state, rows)`` folds a
+    slot's rows of one batch and returns the state, and
+    ``emit(states)`` returns the value columns."""
+
+    def __init__(self, new_state, update, emit):
+        self.new_state, self.update, self._emit = new_state, update, emit
+        self.states: list = []
+
+    def fold(self, batch: pa.RecordBatch, slot: np.ndarray, n: int) -> None:
+        self.states += [self.new_state() for _ in range(n - len(self.states))]
+        for s, rows in _slot_rows(batch, slot):
+            self.states[s] = self.update(self.states[s], rows)
+
+    def emit(self, n: int) -> list:
+        return self._emit(self.states)
 
 
 def grouped_apply(

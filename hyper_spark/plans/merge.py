@@ -10,10 +10,10 @@ README.md:10-15, made explicit and restartable):
               keeps the union lossless (every value lands in exactly one
               partial; register max reassembles the exact sketch) and
               spreads any hot group key over num_salts reducers. Built
-              in Arrow and numpy by the register-partial builder
-              ``sketch_by(strategy="partial")`` also uses
-              (operators/hll_agg.py::_register_partials), so keys keep
-              their exact values.
+              in Arrow and numpy by the keyed partial builder every
+              sketch family shares (operators/util.py::keyed_partials)
+              with the HLL register fold ``sketch_by(strategy=
+              "partial")`` also uses, so keys keep their exact values.
     level k   fold salts by ``fanout``: salt' = salt mod ceil(cur/fanout),
               merge with register max, one (keys, salt') group at a
               time through the shared ``grouped_apply``
@@ -89,7 +89,8 @@ def _partials_with_lineage(
     hash_fn: str = "sha1",
 ):
     """Level 0: per task partition, one partial sketch per (keys, salt)
-    plus lineage columns, from the shared ``_register_partials``. JVM
+    plus lineage columns, from the shared ``keyed_partials`` with the
+    HLL register fold (``hll_agg._register_partials``). JVM
     hashing feeds it; Python sees only (keys, salt, idx, rho) rows.
     NULL values are skipped (the reference only accepts binaries,
     src/hyper.erl:20; a NULL would otherwise produce NULL idx/rho and

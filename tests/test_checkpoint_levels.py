@@ -1,6 +1,7 @@
 """Checkpoint levels as single Spark queries, and the one map-side
-register-partial builder (operators/hll_agg.py::_register_partials)
-that checkpoint level 0 and ``sketch_by(strategy="partial")`` share:
+register-partial builder (the shared operators/util.py::keyed_partials
+with the HLL register fold) that checkpoint level 0 and
+``sketch_by(strategy="partial")`` share:
 jobs per build, observed level row counts, lineage, exact bigint keys
 beside a NULL key, and the ``fanout`` guard."""
 

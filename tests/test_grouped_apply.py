@@ -24,9 +24,11 @@ from hyper_spark.operators import (
     gram_by,
     gram_merge,
     kll_by,
+    req_by,
     sketch_by,
     sketch_quantiles,
     sketch_ranks,
+    tdigest_by,
     theta_by,
     theta_union,
     union_sketches,
@@ -108,6 +110,10 @@ CALLS = [
 ]
 
 
+# builders whose map-side combine is the Arrow-native keyed_partials
+ARROW_BUILDS = {c[1] for c in CALLS if c[0] in ("kll_by", "theta_by", "fd_sketch_by", "gram_by")}
+
+
 @pytest.mark.parametrize("keyed", [True, False], ids=["keyed", "global"])
 @pytest.mark.parametrize(
     "call,exchanges_keyed,exchanges_global",
@@ -119,6 +125,8 @@ def test_plan_streams_groups(rows_df, call, exchanges_keyed, exchanges_global, k
     assert "FlatMapGroupsInPandas" not in rep["python_stages"]
     assert "MapInArrow" in rep["python_stages"]
     assert rep["n_exchanges"] == (exchanges_keyed if keyed else exchanges_global)
+    if call in ARROW_BUILDS:
+        assert "MapInPandas" not in rep["python_stages"]
 
 
 def test_plan_streams_groups_graph_and_skipping(spark, tmp_path):
@@ -133,6 +141,7 @@ def test_plan_streams_groups_graph_and_skipping(spark, tmp_path):
         .repartition(3).write.parquet(path)
     rep = plan_report(build_file_index(spark.read.parquet(path), "v", m_bits=256, k=3))
     assert "FlatMapGroupsInPandas" not in rep["python_stages"]
+    assert "MapInPandas" not in rep["python_stages"]
     assert rep["n_exchanges"] == 2
 
 
@@ -296,3 +305,41 @@ def test_bigint_keys_beside_null_key_stay_exact(spark, one_partition, family):
     got = _by_key(STEP[family](state, ["g"]))
     assert sorted(got, key=lambda g: (g is None, g or 0)) == BIG_KEYS + [None]
     assert got == _by_key(STEP[family](state.withColumn("g", as_text), ["g"]))
+
+
+BUILDERS = {
+    "kll_by": lambda d, keys: kll_by(d, keys, "x", k=1000),
+    "tdigest_by": lambda d, keys: tdigest_by(d, keys, "x"),
+    "req_by": lambda d, keys: req_by(d, keys, "x"),
+    "theta_by": lambda d, keys: theta_by(d, keys, "v", k=32),
+    "fd_sketch_by": lambda d, keys: fd_sketch_by(d, keys, "vec", ell=2, dim=3),
+    "gram_by": lambda d, keys: gram_by(d, keys, "vec", dim=3),
+}
+
+
+@pytest.mark.parametrize("keyed", [True, False], ids=["keyed", "global"])
+@pytest.mark.parametrize("family", list(BUILDERS))
+def test_bigint_keys_beside_null_key_build_exact(spark, one_partition, family, keyed):
+    # one partition of 3-row batches [NULL, k0, k1] [NULL, k2, k3]:
+    # in pandas the NULL turns each batch's keys float64, rounding
+    # 2^53+1 and merging 2^60+1 with 2^60+2
+    rows = [
+        (g, float(i * 6 + j), f"v{(i * 6 + j) % 5}", [float(i), 1.0, float(j)])
+        for i in range(4)
+        for j, g in enumerate([None, *BIG_KEYS[:2], None, *BIG_KEYS[2:]])
+    ]
+    df = spark.createDataFrame(
+        rows, "g bigint, x double, v string, vec array<double>"
+    ).coalesce(1)
+    if not keyed:
+        got = BUILDERS[family](df, []).collect()
+        assert len(got) == 1
+        size = got[0]["n_entries"] if family == "theta_by" else got[0]["n"]
+        assert size == (5 if family == "theta_by" else len(rows))
+        return
+    got = _by_key(BUILDERS[family](df, ["g"]))
+    assert sorted(got, key=lambda g: (g is None, g or 0)) == BIG_KEYS + [None]
+    # string keys never round: the same rows keyed by text give the
+    # reference states
+    as_text = BUILDERS[family](df.withColumn("g", F.col("g").cast("string")), ["g"])
+    assert got == _by_key(as_text.withColumn("g", F.col("g").cast("bigint")))

@@ -45,7 +45,7 @@ def test_python_stage_detection(spark, sf_correct):
 
     events = spark.read.parquet(f"{sf_correct}/events.parquet")
     rep = plan_report(theta_by(events, [], "user_id", k=256))
-    assert "MapInPandas" in rep["python_stages"]
+    assert "MapInArrow" in rep["python_stages"]
     with pytest.raises(AssertionError, match="Python stages"):
         assert_plan(theta_by(events, [], "user_id", k=256), no_python=True)
 

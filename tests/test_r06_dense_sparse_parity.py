@@ -59,6 +59,23 @@ def test_ssjoin_cross_dense_matches_sparse(spark, corpus):
     sparse.unpersist()
 
 
+def test_ssjoin_cross_dense_keeps_each_sides_id_type(spark, corpus):
+    # bigint ids on the left, string ids on the right: the dense path
+    # must type id_b from the right corpus, as the sparse path does
+    right = corpus.filter(F.col("doc_id") % 3 == 0).select(
+        F.concat(F.lit("r"), F.col("doc_id").cast("string")).alias("rid"), "text"
+    )
+    dense = similarity_join(corpus, threshold=0.5, other=right, other_id_col="rid")
+    sparse = similarity_join(
+        corpus, threshold=0.5, other=right, other_id_col="rid", dense_max_vocab=0
+    )
+    assert [f.dataType.simpleString() for f in dense.schema.fields[:2]] == ["bigint", "string"]
+    pairs = _pairs(dense, "jaccard")
+    assert pairs and pairs == _pairs(sparse, "jaccard")
+    dense.unpersist()
+    sparse.unpersist()
+
+
 def test_ssjoin_dense_bytes_guard_falls_back(spark, corpus):
     """A zero byte budget must reject the dense path and still answer
     through the sparse one."""
