@@ -262,8 +262,8 @@ def logreg_confusion(
             df, w, text_col=text_col, id_col=id_col, binary=binary,
             feats=feats,
         )
-        # materialized eagerly (tiny: one row per confusion cell) so
-        # the shared feature cache can be released before returning
+        # collected (tiny: one row per confusion cell) so the shared
+        # feature cache is released and nothing stays cached on return
         out = (
             df.select(id_col, F.col(label_col).cast("long").alias("label"))
             .join(preds, id_col)
@@ -272,8 +272,7 @@ def logreg_confusion(
                 F.count("*").alias("n"),
                 F.round(F.avg("p"), round_to).alias("avg_p"),
             )
-        ).persist()
-        out.count()
-        return out
+        )
+        return df.sparkSession.createDataFrame(out.collect(), out.schema)
     finally:
         feats.unpersist()

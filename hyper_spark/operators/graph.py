@@ -150,6 +150,10 @@ def _cc_driver(raw: DataFrame, rows) -> DataFrame:
         for n in (u, v):
             if n not in parent:
                 parent[n] = n
+        # a NULL endpoint is no edge: NULL is one node of its own and
+        # the other endpoint keeps its own component, as in the fixpoint
+        if u is None or v is None:
+            continue
         ru, rv = find(u), find(v)
         if ru != rv:
             # union by MIN id so the root IS the component label

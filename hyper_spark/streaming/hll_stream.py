@@ -1,29 +1,29 @@
-"""Structured Streaming HLL sketches.
+"""Structured Streaming sketches keyed by group: HLL, windowed HLL,
+Theta/KMV, count-min and quantiles.
 
-Because the sketch is a mergeable monotone state (element-wise register
-max), streaming support is the batch operator re-hosted in
-``applyInPandasWithState``: per group key the state is the 2^p-byte
-register blob; every micro-batch folds its (idx, rho) rows into the
-state with ``np.maximum`` and emits the updated estimate. The hash path
-is the same JVM expression tree as batch, so batch and streaming sketches
-over the same data are byte-identical — tested by feeding the same rows
-through both paths.
+Each sketch is a mergeable state, so its streaming form is the batch
+operator's state folded once per micro-batch through the shared
+``streaming/stateful.py::stateful_fold``; this module supplies only each
+family's state schema, value fields and fold. For HLL the state per
+group key is the 2^p-byte register blob and a micro-batch folds its
+(idx, rho) rows in with ``np.maximum``. The hash path is the same JVM
+expression tree as batch, so batch and streaming sketches over the same
+data are byte-identical — tested by feeding the same rows through both
+paths.
 
-Late data needs no special handling for distinct-count sketches (max is
-order- and duplicate-insensitive); watermarks only matter when the caller
-windows by event time, in which case they compose normally upstream of
-this operator.
+Late data needs no special handling for these sketches (max, union and
+addition are order- and duplicate-insensitive); watermarks only matter
+when the caller windows by event time, where the core closes a window's
+state once the watermark passes its end.
 """
 
 from __future__ import annotations
 
-from typing import Any, Iterator, Sequence, Tuple
+from typing import Sequence
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from hyper_spark.functions.hashing import hll_prepare
 from hyper_spark.kernel.hll import (
@@ -31,6 +31,8 @@ from hyper_spark.kernel.hll import (
     encode_registers,
     estimate_from_registers,
 )
+from hyper_spark.streaming.quantiles_window_stream import quantile_fold
+from hyper_spark.streaming.stateful import EventWindow, stateful_fold
 
 __all__ = [
     "streaming_sketch_by",
@@ -39,6 +41,39 @@ __all__ = [
     "streaming_quantiles_by",
     "streaming_windowed_sketch_by",
 ]
+
+_HLL_FIELDS = ["p int", "registers binary", "estimate double"]
+
+
+def _hll_rows(p: int, regs: np.ndarray, **extra) -> dict:
+    # the emitted registers are canonical dense bytes (batch parity)
+    return {
+        "p": [p],
+        "registers": [regs.tobytes()],
+        "estimate": [estimate_from_registers(regs, p)],
+        **extra,
+    }
+
+
+def _hll_fold(p: int, state_encoding: str, **extra):
+    """The HLL fold: register max of the batch's (idx, rho) rows into
+    the stored register blob; emits the updated sketch plus ``extra``."""
+
+    def fold(state, pdfs):
+        if state:
+            regs = decode_register_blob(p, state[0], state_encoding)
+        else:
+            regs = np.zeros(1 << p, dtype=np.uint8)
+        for pdf in pdfs:
+            if len(pdf):
+                np.maximum.at(
+                    regs,
+                    pdf["idx"].to_numpy(dtype=np.int64),
+                    pdf["rho"].to_numpy(dtype=np.uint8),
+                )
+        return (encode_registers(regs, state_encoding),), _hll_rows(p, regs, **extra)
+
+    return fold
 
 
 def streaming_sketch_by(
@@ -60,54 +95,12 @@ def streaming_sketch_by(
     sparse ⟨idx:16, rho:8⟩ pair blob instead (src/hyper_bisect.erl:
     18-29) — at high-cardinality streaming keys this shrinks the state
     store by up to ~2^p/3·nnz per group."""
-    keys = list(keys)
-    if not keys:
-        raise ValueError("streaming sketches need at least one group key")
-    m = 1 << p
     idx, rho = hll_prepare(F.col(col), p, hash_fn)
     # NULLs are skipped exactly as in batch sketch_by (NULL would hash to
     # NULL idx/rho and poison the densify)
-    prepared = df.filter(F.col(col).isNotNull()).select(
-        *keys, idx.alias("idx"), rho.alias("rho")
-    )
-
-    out_fields = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in [df.schema[k] for k in keys]
-    )
-    output_schema = f"{out_fields}, p int, registers binary, estimate double"
-    state_schema = "registers binary"
-
-    def update(
-        key: Tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            (blob,) = state.get
-            regs = decode_register_blob(p, blob, state_encoding)
-        else:
-            regs = np.zeros(m, dtype=np.uint8)
-        for pdf in pdfs:
-            if len(pdf):
-                np.maximum.at(
-                    regs,
-                    pdf["idx"].to_numpy(dtype=np.int64),
-                    pdf["rho"].to_numpy(dtype=np.uint8),
-                )
-        state.update((encode_registers(regs, state_encoding),))
-        est = estimate_from_registers(regs, p)
-        out = {k: [key[i]] for i, k in enumerate(keys)}
-        out["p"] = [p]
-        out["registers"] = [regs.tobytes()]  # canonical dense out
-        out["estimate"] = [est]
-        yield pd.DataFrame(out)
-
-    return prepared.groupBy(*keys).applyInPandasWithState(
-        update,
-        outputStructType=output_schema,
-        stateStructType=state_schema,
-        outputMode=output_mode,
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return stateful_fold(
+        df, keys, F.col(col).isNotNull(), [idx.alias("idx"), rho.alias("rho")],
+        "registers binary", _HLL_FIELDS, _hll_fold(p, state_encoding), output_mode,
     )
 
 
@@ -151,98 +144,15 @@ def streaming_windowed_sketch_by(
     the overlap costs state but never correctness), live state is
     window/slide × the tumbling case, and expiry per window is
     unchanged."""
-    keys = list(keys)
-    m = 1 << p
-    session_tz = df.sparkSession.conf.get("spark.sql.session.timeZone")
     idx, rho = hll_prepare(F.col(col), p, hash_fn)
-    win = (
-        F.window(F.col(ts_col), window, slide)
-        if slide
-        else F.window(F.col(ts_col), window)
-    )
-    # the watermarked event-time column must survive into the stateful
-    # operator's child plan (extracting window.start strips the watermark
-    # metadata and Spark then rejects EventTimeTimeout), so ts rides
-    # along unused
-    prepared = (
-        df.withWatermark(ts_col, watermark)
-        .filter(F.col(col).isNotNull())
-        .select(
-            *keys,
-            win["start"].alias("window_start"),
-            win["end"].alias("window_end"),
-            idx.alias("idx"),
-            rho.alias("rho"),
-            F.col(ts_col),
-        )
-    )
-
-    out_fields = [
-        f"{df.schema[k].name} {df.schema[k].dataType.simpleString()}" for k in keys
-    ] + [
-        "window_start timestamp",
-        "window_end timestamp",
-        "p int",
-        "registers binary",
-        "estimate double",
-        "final boolean",
-    ]
-    output_schema = ", ".join(out_fields)
-    state_schema = "registers binary"
-    group_cols = keys + ["window_start", "window_end"]
-
-    def update(
-        key: Tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        def emit(regs: np.ndarray, final: bool) -> pd.DataFrame:
-            out = {k: [key[i]] for i, k in enumerate(keys)}
-            out["window_start"] = [key[len(keys)]]
-            out["window_end"] = [key[len(keys) + 1]]
-            out["p"] = [p]
-            out["registers"] = [regs.tobytes()]
-            out["estimate"] = [estimate_from_registers(regs, p)]
-            out["final"] = [final]
-            return pd.DataFrame(out)
-
-        if state.hasTimedOut:
-            # watermark passed window_end: no row for this window can
-            # still arrive — close it and drop the state
-            (blob,) = state.get
-            regs = decode_register_blob(p, blob, state_encoding)
-            state.remove()
-            yield emit(regs, True)
-            return
-        if state.exists:
-            (blob,) = state.get
-            regs = decode_register_blob(p, blob, state_encoding)
-        else:
-            regs = np.zeros(m, dtype=np.uint8)
-        for pdf in pdfs:
-            if len(pdf):
-                np.maximum.at(
-                    regs,
-                    pdf["idx"].to_numpy(dtype=np.int64),
-                    pdf["rho"].to_numpy(dtype=np.uint8),
-                )
-        state.update((encode_registers(regs, state_encoding),))
-        # expire when the event-time watermark passes the window end.
-        # The key's window_end arrives tz-NAIVE rendered in the session
-        # timezone; localize before taking epoch millis or the timeout
-        # shifts by the tz offset (early close west of UTC, late east)
-        window_end = pd.Timestamp(key[len(keys) + 1])
-        if window_end.tz is None:
-            window_end = window_end.tz_localize(session_tz)
-        state.setTimeoutTimestamp(int(window_end.value // 10**6))
-        yield emit(regs, False)
-
-    return prepared.groupBy(*group_cols).applyInPandasWithState(
-        update,
-        outputStructType=output_schema,
-        stateStructType=state_schema,
-        outputMode=output_mode,
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return stateful_fold(
+        df, keys, F.col(col).isNotNull(), [idx.alias("idx"), rho.alias("rho")],
+        "registers binary", _HLL_FIELDS + ["final boolean"],
+        _hll_fold(p, state_encoding, final=[False]), output_mode,
+        close=lambda state: _hll_rows(
+            p, decode_register_blob(p, state[0], state_encoding), final=[True]
+        ),
+        window=EventWindow(ts_col, window, watermark, slide),
     )
 
 
@@ -264,50 +174,24 @@ def streaming_theta_by(
     (theta_union / theta_intersect_card)."""
     from hyper_spark.kernel.theta import ThetaSketch
 
-    keys = list(keys)
-    if not keys:
-        raise ValueError("streaming sketches need at least one group key")
-    prepared = df.filter(F.col(col).isNotNull()).select(
-        *keys, F.xxhash64(F.col(col)).alias("__h")
-    )
-
-    out_fields = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in [df.schema[kk] for kk in keys]
-    )
-    output_schema = (
-        f"{out_fields}, k int, n_entries int, entries binary,"
-        " hash_fn string, estimate double"
-    )
-    state_schema = "entries binary"
-
-    def update(key, pdfs, state: GroupState):
-        if state.exists:
-            (blob,) = state.get
-            sk = ThetaSketch.from_bytes(k, bytes(blob))
-        else:
-            sk = ThetaSketch.empty(k)
+    def fold(state, pdfs):
+        sk = ThetaSketch.from_bytes(k, bytes(state[0])) if state else ThetaSketch.empty(k)
         for pdf in pdfs:
             if len(pdf):
-                sk = sk.union(
-                    ThetaSketch.from_signed_hashes(
-                        k, pdf["__h"].to_numpy(dtype=np.int64)
-                    )
-                )
-        state.update((sk.to_bytes(),))
-        out = {kk: [key[i]] for i, kk in enumerate(keys)}
-        out["k"] = [k]
-        out["n_entries"] = [len(sk.entries)]
-        out["entries"] = [sk.to_bytes()]
-        out["hash_fn"] = ["xxhash64"]
-        out["estimate"] = [sk.estimate()]
-        yield pd.DataFrame(out)
+                hashes = pdf["__h"].to_numpy(dtype=np.int64)
+                sk = sk.union(ThetaSketch.from_signed_hashes(k, hashes))
+        blob = sk.to_bytes()
+        return (blob,), {
+            "k": [k], "n_entries": [len(sk.entries)], "entries": [blob],
+            "hash_fn": ["xxhash64"], "estimate": [sk.estimate()],
+        }
 
-    return prepared.groupBy(*keys).applyInPandasWithState(
-        update,
-        outputStructType=output_schema,
-        stateStructType=state_schema,
-        outputMode=output_mode,
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return stateful_fold(
+        df, keys, F.col(col).isNotNull(), [F.xxhash64(F.col(col)).alias("__h")],
+        "entries binary",
+        ["k int", "n_entries int", "entries binary", "hash_fn string",
+         "estimate double"],
+        fold, output_mode,
     )
 
 
@@ -329,59 +213,36 @@ def streaming_cms_by(
     identical for the same rows."""
     from hyper_spark.operators.cms_agg import cms_bucket_col
 
-    keys = list(keys)
-    if not keys:
-        raise ValueError("streaming sketches need at least one group key")
     buckets = F.posexplode(
         F.array(*[cms_bucket_col(F.col(col), i, width, hash_fn) for i in range(depth)])
     )
-    prepared = df.filter(F.col(col).isNotNull()).select(
-        *keys, buckets.alias("row", "bucket")
-    )
 
-    out_fields = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in [df.schema[k] for k in keys]
-    )
-    output_schema = (
-        f"{out_fields}, depth int, width int, n bigint, counters binary,"
-        " hash_fn string"
-    )
-    state_schema = "n bigint, counters binary"
-
-    def update(key, pdfs, state: GroupState):
-        if state.exists:
-            n, blob = state.get
+    def fold(state, pdfs):
+        if state:
+            n, blob = state
             counters = np.frombuffer(blob, dtype="<i8").reshape(depth, width).copy()
         else:
             n, counters = 0, np.zeros((depth, width), dtype=np.int64)
         for pdf in pdfs:
             if len(pdf):
                 rows = pdf["row"].to_numpy(dtype=np.int64)
-                np.add.at(
-                    counters,
-                    (rows, pdf["bucket"].to_numpy(dtype=np.int64)),
-                    1,
-                )
+                np.add.at(counters, (rows, pdf["bucket"].to_numpy(dtype=np.int64)), 1)
                 # count input rows as row==0 cells: exact even when a
                 # group's exploded rows split across Arrow batches at a
                 # non-multiple of depth (len//depth would floor-undercount
                 # and understate the eps*n bound derived from n)
                 n += int((rows == 0).sum())
         blob = counters.astype("<i8").tobytes()
-        state.update((n, blob))
-        out = {k: [key[i]] for i, k in enumerate(keys)}
-        out.update(
-            depth=[depth], width=[width], n=[n], counters=[blob],
-            hash_fn=[hash_fn],
-        )
-        yield pd.DataFrame(out)
+        return (n, blob), {
+            "depth": [depth], "width": [width], "n": [n], "counters": [blob],
+            "hash_fn": [hash_fn],
+        }
 
-    return prepared.groupBy(*keys).applyInPandasWithState(
-        update,
-        outputStructType=output_schema,
-        stateStructType=state_schema,
-        outputMode=output_mode,
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return stateful_fold(
+        df, keys, F.col(col).isNotNull(), [buckets.alias("row", "bucket")],
+        "n bigint, counters binary",
+        ["depth int", "width int", "n bigint", "counters binary", "hash_fn string"],
+        fold, output_mode,
     )
 
 
@@ -404,52 +265,13 @@ def streaming_quantiles_by(
     micro-batch folds its values with ``update_batch`` and emits the
     current quantile estimates, column-named like the batch operator
     (``q_0500`` for q=0.5). NULL values are skipped as in batch."""
-    import json
+    fields, fold_sketch, _, rows = quantile_fold(method, param, qs)
 
-    from hyper_spark.kernel.kll import KllSketch
-    from hyper_spark.kernel.tdigest import TDigest
+    def fold(state, pdfs):
+        state, sk = fold_sketch(state, pdfs)
+        return state, rows(sk)
 
-    keys = list(keys)
-    if not keys:
-        raise ValueError("streaming sketches need at least one group key")
-    qs = [float(q) for q in qs]
-    if param is None:
-        param = 200.0
-    prepared = df.filter(F.col(col).isNotNull()).select(
-        *keys, F.col(col).cast("double").alias("__v")
-    )
-
-    out_fields = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in [df.schema[k] for k in keys]
-    )
-    q_fields = ", ".join(f"q_{int(q * 1000):04d} double" for q in qs)
-    output_schema = f"{out_fields}, n bigint, {q_fields}"
-    state_schema = "state binary"
-
-    def new_sketch():
-        return KllSketch(int(param)) if method == "kll" else TDigest(param)
-
-    def from_state(blob: bytes):
-        d = json.loads(bytes(blob).decode())
-        return KllSketch.from_dict(d) if method == "kll" else TDigest.from_dict(d)
-
-    def update(key, pdfs, state: GroupState):
-        sk = from_state(state.get[0]) if state.exists else new_sketch()
-        for pdf in pdfs:
-            if len(pdf):
-                sk.update_batch(pdf["__v"].to_numpy(dtype=np.float64))
-        state.update((json.dumps(sk.to_dict()).encode(),))
-        out = {k: [key[i]] for i, k in enumerate(keys)}
-        out["n"] = [int(sk.n)]
-        ests = sk.quantiles(qs)
-        for q, est in zip(qs, ests):
-            out[f"q_{int(q * 1000):04d}"] = [float(est)]
-        yield pd.DataFrame(out)
-
-    return prepared.groupBy(*keys).applyInPandasWithState(
-        update,
-        outputStructType=output_schema,
-        stateStructType=state_schema,
-        outputMode=output_mode,
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return stateful_fold(
+        df, keys, F.col(col).isNotNull(), [F.col(col).cast("double").alias("__v")],
+        "state binary", fields, fold, output_mode,
     )

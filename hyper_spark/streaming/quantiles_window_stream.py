@@ -1,30 +1,64 @@
-"""Event-time windowed streaming quantiles with watermark expiry.
+"""Event-time windowed streaming quantiles with watermark expiry, and
+the quantile fold both quantile streams share.
 
 Completes the windowed-stream family (distinct sketches →
 ``streaming_windowed_sketch_by``, heavy hitters →
 ``streaming_windowed_topk``): per (keys, tumbling window), a KLL or
-t-digest sketch accumulates the window's values; when the event-time
-watermark passes the window end, ONE final row of quantile estimates is
-emitted and the state drops. Late rows inside the watermark fold in
+t-digest sketch accumulates the window's values through the shared
+``streaming/stateful.py::stateful_fold``; when the event-time watermark
+passes the window end, ONE final row of quantile estimates is emitted
+and the state drops. Late rows inside the watermark fold in
 order-insensitively (sketch updates commute); older rows are dropped by
 Spark upstream. State per live window is the kernel sketch's bounded
-summary (KLL O(k·log(n/k)) items, t-digest O(delta) centroids),
-independent of stream length — so an endless stream holds only
-watermark-horizon windows.
+summary (KLL O(k·log(n/k)) items, t-digest O(delta) centroids) as the
+batch operator's JSON dict, independent of stream length — so an
+endless stream holds only watermark-horizon windows.
 """
 
 from __future__ import annotations
 
 import json
-from typing import Any, Iterator, Sequence, Tuple
+from typing import Sequence
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from hyper_spark.operators.quantiles import _CLASSES, _KINDS, _q_name
+from hyper_spark.streaming.stateful import EventWindow, stateful_fold
 
 __all__ = ["streaming_windowed_quantiles"]
+
+
+def quantile_fold(method: str, param: float | None, qs: Sequence[float]):
+    """The quantile family for ``stateful_fold``: (fields, fold, load,
+    rows). ``fold(state, pdfs)`` → (state, sketch) folds the batch's
+    ``__v`` values into the stored sketch, ``load(state)`` reads a
+    stored sketch and ``rows(sketch)`` gives its [n, q_XXXX...] row,
+    column-named like the batch ``sketch_quantiles``."""
+    if method not in ("kll", "tdigest"):
+        raise ValueError(f"unknown quantile method {method!r}")
+    qs = [float(q) for q in qs]
+    names = [_q_name(q) for q in qs]
+    if len(set(names)) != len(names):
+        raise ValueError(f"duplicate quantile probes: {qs}")
+    param = 200.0 if param is None else param
+
+    def load(state):
+        return _CLASSES[method].from_dict(json.loads(bytes(state[0]).decode()))
+
+    def fold(state, pdfs):
+        sk = load(state) if state else _KINDS[method](param)
+        for pdf in pdfs:
+            if len(pdf):
+                sk.update_batch(pdf["__v"].to_numpy(dtype=np.float64))
+        return (json.dumps(sk.to_dict()).encode(),), sk
+
+    def rows(sk) -> dict:
+        ests = sk.quantiles(qs)
+        return {"n": [int(sk.n)], **{nm: [float(e)] for nm, e in zip(names, ests)}}
+
+    return ["n bigint"] + [f"{nm} double" for nm in names], fold, load, rows
 
 
 def streaming_windowed_quantiles(
@@ -44,76 +78,11 @@ def streaming_windowed_quantiles(
     final by construction). Windows still open when a finite replay
     ends need a far-future sentinel row to flush, as with the other
     watermarked operators."""
-    from hyper_spark.kernel.kll import KllSketch
-    from hyper_spark.kernel.tdigest import TDigest
-
-    if method not in ("kll", "tdigest"):
-        raise ValueError(f"unknown quantile method {method!r}")
-    keys = list(keys)
-    qs = [float(q) for q in qs]
-    if param is None:
-        param = 200.0
-    session_tz = df.sparkSession.conf.get("spark.sql.session.timeZone")
-    win = F.window(F.col(ts_col), window)
-    prepared = (
-        df.withWatermark(ts_col, watermark)
-        .filter(F.col(col).isNotNull())
-        .select(
-            *keys,
-            win["start"].alias("window_start"),
-            win["end"].alias("window_end"),
-            F.col(col).cast("double").alias("__v"),
-            F.col(ts_col),
-        )
-    )
-
-    out_fields = [
-        f"{df.schema[k].name} {df.schema[k].dataType.simpleString()}" for k in keys
-    ] + ["window_start timestamp", "window_end timestamp", "n bigint"] + [
-        f"q_{int(q * 1000):04d} double" for q in qs
-    ]
-    output_schema = ", ".join(out_fields)
-    state_schema = "state binary"
-    group_cols = keys + ["window_start", "window_end"]
-
-    def new_sketch():
-        return KllSketch(int(param)) if method == "kll" else TDigest(param)
-
-    def from_state(blob: bytes):
-        d = json.loads(bytes(blob).decode())
-        return KllSketch.from_dict(d) if method == "kll" else TDigest.from_dict(d)
-
-    def update(
-        key: Tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            sk = from_state(state.get[0])
-            state.remove()
-            out = {k: [key[i]] for i, k in enumerate(keys)}
-            out["window_start"] = [key[len(keys)]]
-            out["window_end"] = [key[len(keys) + 1]]
-            out["n"] = [int(sk.n)]
-            for q, est in zip(qs, sk.quantiles(qs)):
-                out[f"q_{int(q * 1000):04d}"] = [float(est)]
-            yield pd.DataFrame(out)
-            return
-        sk = from_state(state.get[0]) if state.exists else new_sketch()
-        for pdf in pdfs:
-            if len(pdf):
-                sk.update_batch(pdf["__v"].to_numpy(dtype=np.float64))
-        state.update((json.dumps(sk.to_dict()).encode(),))
-        window_end = pd.Timestamp(key[len(keys) + 1])
-        if window_end.tz is None:
-            window_end = window_end.tz_localize(session_tz)
-        state.setTimeoutTimestamp(int(window_end.value // 10**6))
-        return
-
-    return prepared.groupBy(*group_cols).applyInPandasWithState(
-        update,
-        outputStructType=output_schema,
-        stateStructType=state_schema,
-        outputMode=output_mode,
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    fields, fold, load, rows = quantile_fold(method, param, qs)
+    return stateful_fold(
+        df, keys, F.col(col).isNotNull(), [F.col(col).cast("double").alias("__v")],
+        "state binary", fields, lambda state, pdfs: (fold(state, pdfs)[0], None),
+        output_mode,
+        close=lambda state: rows(load(state)),
+        window=EventWindow(ts_col, window, watermark),
     )

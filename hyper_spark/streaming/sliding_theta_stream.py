@@ -2,10 +2,10 @@
 the streaming sliding trio (sliding_hll_stream.py: native windowed max;
 sliding_cms_stream.py: native windowed count).
 
-k-min has no native windowed aggregate, so this is an
-``applyInPandasWithState`` operator like streaming_theta_by — but the
-EMISSION contract exploits k-min monotonicity instead of any window-
-close choreography: every micro-batch emits only the hashes NEWLY
+k-min has no native windowed aggregate, so this is a fold through the
+shared ``streaming/stateful.py::stateful_fold`` like streaming_theta_by
+— but the EMISSION contract exploits k-min monotonicity instead of any
+window-close choreography: every micro-batch emits only the hashes NEWLY
 ADMITTED to a (group, grain-bucket)'s running k-min. Any hash in the
 bucket's FINAL k-min was among the k smallest at its own arrival time,
 hence admitted and emitted exactly once; later-evicted extras are

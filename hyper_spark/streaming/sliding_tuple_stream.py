@@ -27,9 +27,11 @@ merge therefore equals the batch ``sliding_tuple_table`` of the same
 rows exactly (hash set row parity; summaries up to double addition
 order — pytest-asserted).
 
-State per live (group, bucket) is the SAME ≤ 8k-byte sorted int64
-blob as the theta stream — summaries live only in the sink as deltas,
-never in state — and is dropped without emission when the event-time
+The fold runs in the shared ``streaming/stateful.py::stateful_fold``,
+grouped by (keys, bucket start, bucket end). State per live (group,
+bucket) is the SAME ≤ 8k-byte sorted int64 blob as the theta stream —
+summaries live only in the sink as deltas, never in state — and is
+dropped without emission when the event-time
 watermark passes the bucket end. The sink grows by ≤ k admissions
 plus one delta row per (batch, active admitted key); periodic
 ``sliding_tuple_merge([sink])`` compaction is the documented
@@ -39,15 +41,43 @@ re-trim. Hash convention matches the batch build's xxhash64 path
 
 from __future__ import annotations
 
-from typing import Any, Iterator, Sequence, Tuple
+from typing import Sequence
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from hyper_spark.streaming.stateful import EventWindow, stateful_fold
 
 __all__ = ["streaming_sliding_tuple_entries"]
+
+
+def _admit(state, pdfs, k: int):
+    """Fold a batch into the bucket's running k-min: (state, rows of the
+    new admissions and of admitted hashes with a nonzero batch sum)."""
+    cur = np.frombuffer(bytes(state[0]), np.int64) if state else np.empty(0, np.int64)
+    h_parts, v_parts = [], []
+    for pdf in pdfs:
+        if len(pdf):
+            h_parts.append(pdf["h"].to_numpy(dtype=np.int64))
+            v_parts.append(pdf["__v"].to_numpy(dtype=np.float64))
+    if h_parts:
+        uh, inv = np.unique(np.concatenate(h_parts), return_inverse=True)
+        sums = np.zeros(len(uh), dtype=np.float64)
+        np.add.at(sums, inv, np.concatenate(v_parts))
+    else:
+        uh = np.empty(0, dtype=np.int64)
+        sums = np.empty(0, dtype=np.float64)
+    merged = np.unique(np.concatenate([cur, uh]))[:k]
+    in_merged = np.isin(uh, merged, assume_unique=True)
+    was_admitted = np.isin(uh, cur, assume_unique=True)
+    emit = in_merged & (~was_admitted | (sums != 0.0))
+    if not emit.any():
+        return (merged.tobytes(),), None
+    n = int(emit.sum())
+    return (merged.tobytes(),), {
+        "h": uh[emit], "summary": sums[emit], "k": [k] * n, "hash_fn": ["xxhash64"] * n,
+    }
 
 
 def kmin_admissions(
@@ -65,104 +95,24 @@ def kmin_admissions(
     DataFrame[*keys, bucket_ts, h, summary, k, hash_fn] — one row per
     newly admitted hash and per already-admitted hash with a nonzero
     batch sum of ``val`` (module doc). With ``val`` all zero it emits
-    exactly the admissions — the theta stream."""
+    exactly the admissions — the theta stream. A bucket's state drops
+    without an emission once the watermark passes its end: every
+    admitted hash was already emitted with its full delta trail."""
     if k < 3:
         raise ValueError("k must be >= 3")
-    keys = list(keys)
-    session_tz = df.sparkSession.conf.get("spark.sql.session.timeZone")
-    win = F.window(F.col(ts_col), grain)
-    src = df
-    if df.isStreaming:
-        src = src.withWatermark(ts_col, watermark)
     # NULL values count 0 (the batch build's coalesce(sum, 0) contract)
-    # and the watermarked event-time column must survive into the
-    # stateful operator's child plan (hll_stream.py lesson)
-    prepared = src.filter(
-        F.col(id_col).isNotNull() & F.col(ts_col).isNotNull()
-    ).select(
-        *keys,
-        win["start"].alias("__ws"),
-        win["end"].alias("__we"),
-        F.xxhash64(F.col(id_col).cast("string")).alias("h"),
-        F.coalesce(val.cast("double"), F.lit(0.0)).alias("__v"),
-        F.col(ts_col),
-    )
-
-    out_fields = [
-        f"{df.schema[kk].name} {df.schema[kk].dataType.simpleString()}"
-        for kk in keys
-    ] + [
-        "bucket_ts timestamp",
-        "h bigint",
-        "summary double",
-        "k int",
-        "hash_fn string",
-    ]
-    output_schema = ", ".join(out_fields)
-    state_schema = "entries binary"
-    group_cols = keys + ["__ws", "__we"]
-
-    def update(
-        key: Tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            # watermark passed the bucket end: every admitted hash was
-            # already emitted with its full delta trail — drop state
-            state.remove()
-            return
-        if state.exists:
-            (blob,) = state.get
-            cur = np.frombuffer(bytes(blob), dtype=np.int64)
-        else:
-            cur = np.empty(0, dtype=np.int64)
-        h_parts, v_parts = [], []
-        for pdf in pdfs:
-            if len(pdf):
-                h_parts.append(pdf["h"].to_numpy(dtype=np.int64))
-                v_parts.append(pdf["__v"].to_numpy(dtype=np.float64))
-        if h_parts:
-            h_all = np.concatenate(h_parts)
-            v_all = np.concatenate(v_parts)
-            uh, inv = np.unique(h_all, return_inverse=True)
-            sums = np.zeros(len(uh), dtype=np.float64)
-            np.add.at(sums, inv, v_all)
-        else:
-            uh = np.empty(0, dtype=np.int64)
-            sums = np.empty(0, dtype=np.float64)
-        merged = np.unique(np.concatenate([cur, uh]))[:k]
-        state.update((merged.tobytes(),))
-        # drop state once the watermark passes the bucket end; if it
-        # already has (possible on replays), close inline — a
-        # past-deadline setTimeoutTimestamp raises
-        bucket_end = pd.Timestamp(key[len(keys) + 1])
-        if bucket_end.tz is None:
-            bucket_end = bucket_end.tz_localize(session_tz)
-        deadline = int(bucket_end.value // 10**6)
-        if state.getCurrentWatermarkMs() >= deadline:
-            state.remove()
-        else:
-            state.setTimeoutTimestamp(deadline)
-        in_merged = np.isin(uh, merged, assume_unique=True)
-        was_admitted = np.isin(uh, cur, assume_unique=True)
-        emit = in_merged & (~was_admitted | (sums != 0.0))
-        if emit.any():
-            n = int(emit.sum())
-            out = {kk: [key[i]] * n for i, kk in enumerate(keys)}
-            out["bucket_ts"] = [key[len(keys)]] * n
-            out["h"] = uh[emit]
-            out["summary"] = sums[emit]
-            out["k"] = [k] * n
-            out["hash_fn"] = ["xxhash64"] * n
-            yield pd.DataFrame(out)
-
-    return prepared.groupBy(*group_cols).applyInPandasWithState(
-        update,
-        outputStructType=output_schema,
-        stateStructType=state_schema,
-        outputMode=output_mode,
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return stateful_fold(
+        df, keys, F.col(id_col).isNotNull() & F.col(ts_col).isNotNull(),
+        [
+            F.xxhash64(F.col(id_col).cast("string")).alias("h"),
+            F.coalesce(val.cast("double"), F.lit(0.0)).alias("__v"),
+        ],
+        "entries binary",
+        ["h bigint", "summary double", "k int", "hash_fn string"],
+        lambda state, pdfs: _admit(state, pdfs, k), output_mode,
+        window=EventWindow(
+            ts_col, grain, watermark, names=("__ws", "__we"), emit=("bucket_ts",)
+        ),
     )
 
 

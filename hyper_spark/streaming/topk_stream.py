@@ -15,21 +15,23 @@ length:
 
 A window's summary is emitted ONCE — when the event-time watermark
 passes the window end (no row can still arrive) — as its final top-k,
-then the state drops. State per live window is O(capacity), so an
-endless stream holds only watermark-horizon windows × capacity
-counters. Rows inside the watermark fold in order-insensitively
-(per-batch counts merge into counters); older rows are dropped by
-Spark upstream, as with every watermarked operator.
+then the state drops; the shared ``streaming/stateful.py::stateful_fold``
+owns the window, the state read/write and the watermark close. State
+per live window is O(capacity), so an endless stream holds only
+watermark-horizon windows × capacity counters. Rows inside the
+watermark fold in order-insensitively (per-batch counts merge into
+counters); older rows are dropped by Spark upstream, as with every
+watermarked operator.
 """
 
 from __future__ import annotations
 
-from typing import Any, Iterator, Sequence, Tuple
+from typing import Sequence
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from hyper_spark.streaming.stateful import EventWindow, stateful_fold
 
 __all__ = ["streaming_windowed_topk"]
 
@@ -54,70 +56,12 @@ def streaming_windowed_topk(
     Windows still open when a finite replay ends never close (nothing
     advances the watermark past them) — append a far-future sentinel
     row to flush, as with ``streaming_sessionize``."""
-    keys = list(keys)
     capacity = capacity or 8 * k
     if capacity < k:
         raise ValueError("capacity must be >= k")
-    session_tz = df.sparkSession.conf.get("spark.sql.session.timeZone")
-    win = F.window(F.col(ts_col), window)
-    # the watermarked ts column must ride along into the stateful
-    # operator's child plan (extracting window.start strips the
-    # watermark metadata; same gotcha as streaming_windowed_sketch_by)
-    prepared = (
-        df.withWatermark(ts_col, watermark)
-        .filter(F.col(col).isNotNull())
-        .select(
-            *keys,
-            win["start"].alias("window_start"),
-            win["end"].alias("window_end"),
-            F.col(col).cast("string").alias("__v"),
-            F.col(ts_col),
-        )
-    )
 
-    out_fields = [
-        f"{df.schema[kk].name} {df.schema[kk].dataType.simpleString()}"
-        for kk in keys
-    ] + [
-        "window_start timestamp",
-        "window_end timestamp",
-        "value string",
-        "est_count bigint",
-        "err_bound bigint",
-        "rank int",
-    ]
-    output_schema = ", ".join(out_fields)
-    state_schema = (
-        "vals array<string>, counts array<bigint>, errs array<bigint>"
-    )
-    group_cols = keys + ["window_start", "window_end"]
-
-    def update(
-        key: Tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            vals, counts, errs = state.get
-            state.remove()
-            top = sorted(
-                zip(vals, counts, errs), key=lambda t: (-t[1], t[0])
-            )[:k]
-            out = {kk: [key[i]] * len(top) for i, kk in enumerate(keys)}
-            out["window_start"] = [key[len(keys)]] * len(top)
-            out["window_end"] = [key[len(keys) + 1]] * len(top)
-            out["value"] = [t[0] for t in top]
-            out["est_count"] = [t[1] for t in top]
-            out["err_bound"] = [t[2] for t in top]
-            out["rank"] = list(range(1, len(top) + 1))
-            yield pd.DataFrame(out)
-            return
-
-        if state.exists:
-            vals, counts, errs = state.get
-            summary = {v: (c, e) for v, c, e in zip(vals, counts, errs)}
-        else:
-            summary = {}
+    def fold(state, pdfs):
+        summary = {v: (c, e) for v, c, e in zip(*state)} if state else {}
         for pdf in pdfs:
             if not len(pdf):
                 continue
@@ -135,21 +79,22 @@ def streaming_windowed_topk(
                     m_min = evict[1][0]
                     del summary[evict[0]]
                     summary[v] = (m_min + c, m_min)
-        if summary:
-            vs = list(summary)
-            state.update(
-                (vs, [summary[v][0] for v in vs], [summary[v][1] for v in vs])
-            )
-            window_end = pd.Timestamp(key[len(keys) + 1])
-            if window_end.tz is None:
-                window_end = window_end.tz_localize(session_tz)
-            state.setTimeoutTimestamp(int(window_end.value // 10**6))
-        return
+        vs = list(summary)
+        return (vs, [summary[v][0] for v in vs], [summary[v][1] for v in vs]), None
 
-    return prepared.groupBy(*group_cols).applyInPandasWithState(
-        update,
-        outputStructType=output_schema,
-        stateStructType=state_schema,
-        outputMode=output_mode,
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    def close(state):
+        top = sorted(zip(*state), key=lambda t: (-t[1], t[0]))[:k]
+        return {
+            "value": [t[0] for t in top],
+            "est_count": [t[1] for t in top],
+            "err_bound": [t[2] for t in top],
+            "rank": list(range(1, len(top) + 1)),
+        }
+
+    return stateful_fold(
+        df, keys, F.col(col).isNotNull(), [F.col(col).cast("string").alias("__v")],
+        "vals array<string>, counts array<bigint>, errs array<bigint>",
+        ["value string", "est_count bigint", "err_bound bigint", "rank int"],
+        fold, output_mode, close=close,
+        window=EventWindow(ts_col, window, watermark),
     )

@@ -84,8 +84,8 @@ def streaming_transitions(
             F.col(key).cast("string").alias("__k"),
             F.col(ts_col),
             # epoch seconds computed JVM-side: the pandas path would
-            # need per-batch tz localization (same gotcha as
-            # streaming_windowed_topk's window_end)
+            # need per-batch tz localization (what stateful_fold does
+            # for a window end)
             F.col(ts_col).cast("timestamp").cast("double").alias("__t"),
             F.col(order_col).cast("double").alias("__o"),
             F.col(state_col).cast("string").alias("__s"),

@@ -84,6 +84,19 @@ def test_learns_planted_token_signal(spark):
     assert conf.get((0, 0), 0) + conf.get((1, 1), 0) == len(_DOCS), conf
 
 
+def test_confusion_leaves_nothing_cached(spark):
+    """The confusion rows come back local: after the call no persisted
+    RDD is left behind, and the schema is the aggregate's."""
+    df = _df(spark)
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    conf = logreg_confusion(df, "y", n_features=64, iters=2)
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
+    assert conf.schema.simpleString() == (
+        "struct<label:bigint,pred:bigint,n:bigint,avg_p:double>"
+    )
+    assert sum(r["n"] for r in conf.collect()) == len(_DOCS)
+
+
 def test_featureless_doc_scores_half(spark):
     df = spark.createDataFrame(
         [(0, "alpha beta", 1.0), (1, "   ", 0.0)],

@@ -112,6 +112,24 @@ def test_cc_driver_fast_path_matches_distributed(spark):
     assert fast == dist
 
 
+def test_cc_driver_null_endpoints_match_distributed(spark):
+    """A NULL endpoint is no edge: both paths give the other endpoint
+    its own component and list NULL once, as (NULL, NULL)."""
+    df = spark.createDataFrame(
+        [(1, 2), (2, 3), (None, 4), (5, None), (6, 7)], "id_a long, id_b long"
+    )
+    fast = sorted(
+        connected_components(df).collect(), key=lambda r: (r["id"] is not None, r["id"])
+    )
+    dist = sorted(
+        connected_components(df, collect_max=0).collect(),
+        key=lambda r: (r["id"] is not None, r["id"]),
+    )
+    assert [tuple(r) for r in fast] == [tuple(r) for r in dist] == [
+        (None, None), (1, 1), (2, 1), (3, 1), (4, 4), (5, 5), (6, 6), (7, 6)
+    ]
+
+
 def test_cc_nonconvergence_raises(spark):
     df = spark.createDataFrame([(i, i + 1) for i in range(64)], ["id_a", "id_b"])
     with pytest.raises(RuntimeError, match="did not converge"):
