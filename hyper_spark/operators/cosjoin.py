@@ -50,13 +50,16 @@ shared-order prefix machinery):
    IS the cosine.
 
 A dense small-vocab fast path (vocab <= 4096, float64 weight matrix
-<= 512 MB) answers the degenerate all-pairs regime with one blocked
-dgemm inside Arrow batches instead — see ssjoin's dense-path notes;
-above the guards the sparse chain above is the 100-TB shape: one
-shuffle for document frequencies, one for per-doc feature ordering,
-slim prefix entries on the candidate generation (weight maps never
-ride it), and survivor-only verification — all sparse stages JVM
-codegen.
+<= 512 MB) answers the degenerate all-pairs regime instead, through the
+dense pair-scoring core shared with ssjoin (``dense_pairs.dense_pairs``
+with ``COSINE``: one dgemm per Arrow batch). A tiny vocabulary is
+exactly where the suffix-bound prefix degenerates to all-pairs
+(measured at sf0.1: 29 prefix tokens x ~3800 docs each -> 296M
+candidate rows for 12.5M distinct pairs). Above the guards the sparse
+chain above is the 100-TB shape: one shuffle for document frequencies,
+one for per-doc feature ordering, slim prefix entries on the candidate
+generation (weight maps never ride it), and survivor-only verification
+— all sparse stages JVM codegen.
 
 Reference scope note: the reference engine (GameAnalytics/hyper) has
 no similarity-join surface; this operator is part of the engine's
@@ -70,111 +73,17 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from hyper_spark.functions.text import char_shingles_col, normalized_text
+from hyper_spark.operators.dense_pairs import (
+    _DENSE_BYTES,
+    _DENSE_VOCAB,
+    COSINE,
+    dense_pairs,
+)
 from hyper_spark.operators.util import spread, widen_for_explosion
 
 __all__ = ["cosine_similarity_join"]
 
 _EPS = 1e-9
-
-# Dense small-vocab fast path guards (the ssjoin design, guide §4.2):
-# when the token universe fits a fixed-width vector (vocab <=
-# _DENSE_VOCAB) and the corpus's float64 weight matrix fits one worker
-# (n_docs * vocab * 8 <= _DENSE_BYTES), every pair's exact cosine is
-# one blocked dgemm inside Arrow batches. A tiny vocabulary is exactly
-# where the suffix-bound prefix degenerates to all-pairs (measured at
-# sf0.1: 29 prefix tokens x ~3800 docs each -> 296M candidate rows for
-# 12.5M distinct pairs); the dense pass answers the same N^2 space at
-# its floor. Above the guards the sparse prefix path below is the
-# honest 100-TB algorithm.
-_DENSE_VOCAB = 4096
-_DENSE_BYTES = 512 << 20
-
-
-def _dense_cosine(
-    weights: DataFrame,
-    t: float,
-    id_field,
-    vocab_toks: list,
-    max_bytes: int = _DENSE_BYTES,
-):
-    """All pairs (id_a < id_b) with exact L2-normalized TF-IDF cosine
-    >= t via a broadcast float64 matrix + per-batch dgemm. Returns None
-    when the matrix exceeds the byte guard."""
-    import numpy as np
-    import pandas as pd
-
-    spark = weights.sparkSession
-    sc = spark.sparkContext
-    vocab = len(vocab_toks)
-    if vocab == 0:
-        return None
-    idx_map = {tok: i for i, tok in enumerate(vocab_toks)}
-    bc_idx = sc.broadcast(idx_map)
-    id_t = id_field.dataType.simpleString()
-
-    def to_vec(batches):
-        imap = bc_idx.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            out = np.zeros((len(pdf), vocab), dtype=np.float64)
-            for r, tw in enumerate(pdf["tw"]):
-                for e in tw:
-                    out[r, imap[e["tok"]]] = e["w"]
-            yield pd.DataFrame(
-                {"id": pdf["id"], "vec": [row.tobytes() for row in out]}
-            )
-
-    vecs = (
-        weights.groupBy(F.col("id"))
-        .agg(F.collect_list(F.struct("tok", "w")).alias("tw"))
-        .mapInPandas(to_vec, schema=f"id {id_t}, vec binary")
-        .persist()
-    )
-    # byte guard covers the broadcast float64 matrix; probed with a
-    # bounded count so an over-cap corpus never reaches the driver
-    cap = min(max_bytes // (vocab * 8), 2**31 - 2)  # limit() takes an int
-    if vecs.limit(cap + 1).count() > cap:
-        vecs.unpersist()
-        return None
-    rows = vecs.collect()
-    n = len(rows)
-    ids_np = np.array([r["id"] for r in rows])
-    m = (
-        np.frombuffer(b"".join(r["vec"] for r in rows), dtype=np.float64)
-        .reshape(n, vocab)
-        if n
-        else np.zeros((0, vocab), dtype=np.float64)
-    )
-    bc_m = sc.broadcast((ids_np, m))
-
-    def screen(batches):
-        ids_m, mm = bc_m.value
-        for pdf in batches:
-            if len(pdf) == 0 or len(ids_m) == 0:
-                continue
-            a = np.frombuffer(b"".join(pdf["vec"]), dtype=np.float64).reshape(
-                len(pdf), vocab
-            )
-            cos = a @ mm.T
-            ids_a_batch = pdf["id"].to_numpy()
-            mask = (cos >= t) & (ids_a_batch[:, None] < ids_m[None, :])
-            ai, bi = np.nonzero(mask)
-            yield pd.DataFrame(
-                {
-                    "id_a": ids_a_batch[ai],
-                    "id_b": ids_m[bi],
-                    "cosine": cos[ai, bi],
-                }
-            )
-
-    verified = vecs.mapInPandas(
-        screen, schema=f"id_a {id_t}, id_b {id_t}, cosine double"
-    ).persist()
-    verified.count()
-    vecs.unpersist()
-    return verified
-
 
 def _term_freqs(
     df: DataFrame, id_col: str, text_col: str, tokens: str, shingle_n: int
@@ -257,24 +166,19 @@ def cosine_similarity_join(
     weights.count()
     tfs.unpersist()
 
-    # dense small-vocab fast path (see _dense_cosine): the limited
-    # collect bounds the vocab probe without a separate count job.
-    if dense_max_vocab:
-        vtoks = [
-            r["tok"]
-            for r in dfreq.select("tok").limit(dense_max_vocab + 1).collect()
-        ]
-        if len(vtoks) <= dense_max_vocab:
-            dense = _dense_cosine(
-                weights,
-                t,
-                df.schema[id_col],
-                vtoks,
-                max_bytes=dense_max_bytes,
-            )
-            if dense is not None:
-                weights.unpersist()
-                return dense
+    # dense small-vocab fast path (see dense_pairs)
+    dense = dense_pairs(
+        COSINE,
+        weights.select("id", "tok", "w"),
+        None,
+        dfreq.select("tok"),
+        t,
+        dense_max_vocab,
+        dense_max_bytes,
+    )
+    if dense is not None:
+        weights.unpersist()
+        return dense
 
     maxw = weights.groupBy("tok").agg(F.max("w").alias("__maxw"))
     # suffix bound along the global rarest-first (df_t, tok) order;

@@ -109,7 +109,8 @@ def knn_brute(
     vec_col: str = "embedding",
     query_ids: Sequence[int] | None = None,
 ) -> DataFrame:
-    """Exact cosine top-k for each query vector.
+    """Exact cosine top-k for each query vector. Rows whose vector is
+    NULL cannot be scored and are skipped.
 
     Returns DataFrame[query_id, id_col, score, rank] with rank 1..k."""
     queries = np.atleast_2d(np.asarray(queries, dtype=np.float64))
@@ -117,7 +118,8 @@ def knn_brute(
         query_ids if query_ids is not None else np.arange(len(queries)),
         dtype=np.int64,
     )
-    partials = df.select(id_col, vec_col).mapInPandas(
+    vecs = df.select(id_col, vec_col).filter(F.col(vec_col).isNotNull())
+    partials = vecs.mapInPandas(
         _topk_map_fn(queries, qids, k, id_col, vec_col),
         schema=f"query_id long, {id_col} long, score double",
     )
@@ -223,6 +225,7 @@ def knn_ivf(
 ) -> DataFrame:
     """IVF approximate top-k: probe the n_probe nearest cells per query,
     brute-search only those cells' vectors, per-query cell-masked.
+    Rows whose vector is NULL cannot be scored and are skipped.
 
     ``centroids`` skips the sample trainer — pass
     ``clustering.kmeans_fit(df, mode='spherical')`` output for a
@@ -233,6 +236,7 @@ def knn_ivf(
         query_ids if query_ids is not None else np.arange(len(queries)),
         dtype=np.int64,
     )
+    df = df.filter(F.col(vec_col).isNotNull())
     if centroids is None:
         centroids = _train_centroids(df, vec_col, n_cells, sample, iters, seed)
     else:

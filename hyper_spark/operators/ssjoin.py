@@ -31,14 +31,14 @@ full inverted-index path (dedup.ngram_jaccard_pairs):
 Two physical regimes (round-6 optimization):
 
 * **Dense small-vocab fast path** — when the distinct token universe
-  fits a fixed-width bitmap (vocab <= 4096) and the corpus's unpacked
-  float32 bit matrix fits one worker (<= 512 MB), exact Jaccard for
-  every pair is a blocked 0/1 GEMM over packed bitmaps inside Arrow
-  batches (guide §4.2). Intersection counts are integer-exact in
-  float32 below 2^24, so outputs are bit-identical to the sparse
-  arithmetic. A tiny vocabulary is exactly where the prefix filter
-  degenerates to all-pairs; this answers the same N^2 space at its
-  floor (measured 4x on the sf0.1 bench corpus).
+  fits a fixed-width bitmap (vocab <= 4096) and the index side's
+  unpacked float32 bit matrix fits one worker (<= 512 MB), exact
+  Jaccard for every pair is one 0/1 GEMM per Arrow batch over packed
+  bitmaps, through the dense pair-scoring core shared with cosjoin
+  (``dense_pairs.dense_pairs`` with ``JACCARD``). Outputs are
+  bit-identical to the sparse arithmetic. A tiny vocabulary is exactly
+  where the prefix filter degenerates to all-pairs; this answers the
+  same N^2 space at its floor (measured 4x on the sf0.1 bench corpus).
 * **Sparse prefix path** (the 100-TB shape): one shuffle for document
   frequencies (over the UNION of both corpora in R-S mode — the total
   order must be shared), one groupBy per corpus to order each
@@ -66,6 +66,12 @@ from pyspark.sql import functions as F
 from hyper_spark.functions.text import (
     char_shingles_col,
     normalized_text,
+)
+from hyper_spark.operators.dense_pairs import (
+    _DENSE_BYTES,
+    _DENSE_VOCAB,
+    JACCARD,
+    dense_pairs,
 )
 from hyper_spark.operators.util import spread, widen_for_explosion
 
@@ -149,139 +155,6 @@ def _prefix_entries(ordered: DataFrame, t: float) -> DataFrame:
         .toDF("id", "n", "pos", "token")
         .withColumn("pos", F.col("pos") + F.lit(1))
     )
-
-
-# Dense small-vocab fast path guards: when the DISTINCT token universe
-# fits a fixed-width bitmap (vocab <= _DENSE_VOCAB) and the whole
-# corpus's unpacked float32 bit-matrix fits comfortably in one worker
-# (n_docs * vocab * 4 bytes <= _DENSE_BYTES), exact Jaccard for EVERY
-# pair is one blocked 0/1 GEMM inside Arrow batches (guide §4.2: hand
-# whole batches to vectorized native code) — intersection counts are
-# integer-exact in float32 below 2^24, so the output is bit-identical
-# to the sparse path's array_intersect arithmetic. Tiny-vocab corpora
-# are exactly where the prefix filter degenerates to all-pairs (every
-# doc shares prefix tokens with every other), so this regime switch
-# replaces the filter's worst case with its information-theoretic
-# floor: one dense pass over the N^2 pair space. Above the guards the
-# sparse prefix path below is the honest 100-TB algorithm.
-_DENSE_VOCAB = 4096
-_DENSE_BYTES = 512 << 20
-
-
-def _dense_jaccard(
-    tok_a: DataFrame,
-    tok_b: DataFrame | None,
-    dfreq: DataFrame,
-    t: float,
-    max_bytes: int = _DENSE_BYTES,
-) -> DataFrame | None:
-    """All exact-Jaccard pairs via packed bitmaps + blocked GEMM.
-    ``tok_b=None`` = self mode (id_a < id_b); else R-S mode. Returns
-    None when the corpus exceeds the byte guard (caller falls back to
-    the sparse prefix path). The broadcast is the PACKED bit matrix
-    (vocab/8 bytes per doc); each task unpacks it to float32 once and
-    streams its Arrow batches through one sgemm per batch."""
-    import numpy as np
-    import pandas as pd
-
-    spark = tok_a.sparkSession
-    sc = spark.sparkContext
-    toks = [r["token"] for r in dfreq.select("token").collect()]
-    vocab = len(toks)
-    if vocab == 0:
-        return None
-    idx_map = {tok: i for i, tok in enumerate(toks)}
-    bc_idx = sc.broadcast(idx_map)
-    nbytes = (vocab + 7) // 8
-
-    def to_bits(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            imap = bc_idx.value
-            rows_b = np.zeros((len(pdf), vocab), dtype=bool)
-            for r, lst in enumerate(pdf["toks"]):
-                ix = np.fromiter(
-                    (imap[tk] for tk in lst), dtype=np.int64, count=len(lst)
-                )
-                rows_b[r, ix] = True
-            out = np.packbits(rows_b, axis=1)
-            yield pd.DataFrame(
-                {"id": pdf["id"], "bits": [row.tobytes() for row in out]}
-            )
-
-    def id_t(side: DataFrame) -> str:
-        # each corpus keeps its own id type (cross mode may mix them)
-        return side.schema["id"].dataType.simpleString()
-
-    def bits_of(tok: DataFrame) -> DataFrame:
-        return (
-            tok.groupBy(F.col("id"))
-            .agg(F.collect_list("token").alias("toks"))
-            .mapInPandas(to_bits, schema=f"id {id_t(tok)}, bits binary")
-        )
-
-    bits_a = bits_of(tok_a).persist()
-    index_side = bits_a if tok_b is None else bits_of(tok_b).persist()
-    # byte guard covers the per-worker unpacked float32 matrix; probed
-    # with a bounded count so an over-cap index side never reaches the
-    # driver
-    cap = min(max_bytes // (vocab * 4), 2**31 - 2)  # limit() takes an int
-    if index_side.limit(cap + 1).count() > cap:
-        bits_a.unpersist()
-        if tok_b is not None:
-            index_side.unpersist()
-        return None
-    rows = index_side.collect()
-    n_idx = len(rows)
-    ids_np = np.array([r["id"] for r in rows])
-    m_packed = (
-        np.frombuffer(b"".join(r["bits"] for r in rows), dtype=np.uint8)
-        .reshape(n_idx, nbytes)
-        if n_idx
-        else np.zeros((0, nbytes), dtype=np.uint8)
-    )
-    bc_m = sc.broadcast((ids_np, m_packed))
-    self_mode = tok_b is None
-
-    def screen(batches):
-        ids_m, mp = bc_m.value
-        m32 = np.unpackbits(mp, axis=1, count=vocab).astype(np.float32)
-        nb = m32.sum(axis=1).astype(np.int64)
-        for pdf in batches:
-            if len(pdf) == 0 or len(ids_m) == 0:
-                continue
-            a_packed = np.frombuffer(
-                b"".join(pdf["bits"]), dtype=np.uint8
-            ).reshape(len(pdf), nbytes)
-            a32 = np.unpackbits(a_packed, axis=1, count=vocab).astype(
-                np.float32
-            )
-            na = a32.sum(axis=1).astype(np.int64)
-            inter = (a32 @ m32.T).astype(np.int64)
-            union = na[:, None] + nb[None, :] - inter
-            jac = np.where(union > 0, inter / np.maximum(union, 1), 0.0)
-            mask = jac >= t
-            ids_a_batch = pdf["id"].to_numpy()
-            if self_mode:
-                mask &= ids_a_batch[:, None] < ids_m[None, :]
-            ai, bi = np.nonzero(mask)
-            yield pd.DataFrame(
-                {
-                    "id_a": ids_a_batch[ai],
-                    "id_b": ids_m[bi],
-                    "jaccard": jac[ai, bi],
-                }
-            )
-
-    verified = bits_a.mapInPandas(
-        screen, schema=f"id_a {id_t(bits_a)}, id_b {id_t(index_side)}, jaccard double"
-    ).persist()
-    verified.count()
-    bits_a.unpersist()
-    if tok_b is not None:
-        index_side.unpersist()
-    return verified
 
 
 # Per-token chunk cap for candidate generation: a chunk of C entries
@@ -595,23 +468,22 @@ def similarity_join(
         tok_b = tok_a
         dfreq = tok_a.groupBy("token").agg(F.count(F.lit(1)).alias("df_count"))
 
-    # dense small-vocab fast path (see _dense_jaccard): a tiny token
+    # dense small-vocab fast path (see dense_pairs): a tiny token
     # universe is the prefix filter's degenerate all-pairs regime; one
-    # blocked 0/1 GEMM over packed bitmaps answers it exactly. The
-    # vocab probe is one count over the already-cached token tables.
-    if dense_max_vocab and dfreq.count() <= dense_max_vocab:
-        dense = _dense_jaccard(
-            tok_a,
-            tok_b if cross else None,
-            dfreq,
-            t,
-            max_bytes=dense_max_bytes,
-        )
-        if dense is not None:
-            tok_a.unpersist()
-            if cross:
-                tok_b.unpersist()
-            return dense
+    # 0/1 GEMM per batch over packed bitmaps answers it exactly.
+    dense = dense_pairs(
+        JACCARD,
+        tok_a,
+        tok_b if cross else None,
+        dfreq.select("token"),
+        t,
+        dense_max_vocab,
+        dense_max_bytes,
+    )
+    if dense is not None:
+        tok_a.unpersist()
+        tok_b.unpersist()  # a no-op in self mode
+        return dense
 
     ordered_a = _ordered(tok_a, dfreq).persist()
     ordered_a.count()  # materialize, then drop the token-table cache

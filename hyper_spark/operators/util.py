@@ -67,6 +67,15 @@ def _group_codes(batch: pa.RecordBatch, cols: Sequence[str]) -> tuple[np.ndarray
     return first, code
 
 
+def arrow_schema(spark, schema: StructType) -> pa.Schema:
+    """The Arrow schema of the batches a ``mapInArrow`` returning
+    ``schema`` yields in this session."""
+    large = spark.conf.get(
+        "spark.sql.execution.arrow.useLargeVarTypes", "false"
+    ).lower() == "true"
+    return to_arrow_schema(schema, prefers_large_types=large)
+
+
 def grow(a: np.ndarray, n: int) -> np.ndarray:
     """``a`` with room for at least ``n`` rows; new rows are zero."""
     if n <= len(a):
@@ -100,10 +109,7 @@ def keyed_partials(
     batch."""
     keys = list(keys)
     schema = StructType([df.schema[k] for k in keys] + list(fields))
-    large = df.sparkSession.conf.get(
-        "spark.sql.execution.arrow.useLargeVarTypes", "false"
-    ).lower() == "true"
-    out_schema = to_arrow_schema(schema, prefers_large_types=large)
+    out_schema = arrow_schema(df.sparkSession, schema)
 
     def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         fold = new_fold()

@@ -513,6 +513,31 @@ def test_knn_ivf_recall(spark, sf_correct):
         assert len(e & a) / 10 >= 0.6, qi  # probing half the cells
 
 
+def test_knn_skips_null_vectors(spark, sf_correct):
+    """A NULL vector cannot be scored: knn_brute and knn_ivf skip it and
+    answer as on the rows without it."""
+    emb = spark.read.parquet(f"{sf_correct}/embeddings.parquet").select(
+        "vec_id", "embedding"
+    )
+    mat = np.stack(emb.toPandas()["embedding"].to_numpy()).astype(np.float64)
+    with_null = emb.unionByName(
+        spark.createDataFrame([(-1, None)], emb.schema)
+    ).repartition(4)
+    queries = mat[:3]
+
+    def ranked(df):
+        return sorted((r["query_id"], r["rank"], r["vec_id"]) for r in df.collect())
+
+    assert ranked(knn_brute(with_null, queries, k=5)) == ranked(
+        knn_brute(emb, queries, k=5)
+    )
+    cents = mat[::50]
+    got = ranked(knn_ivf(with_null, queries, k=5, centroids=cents))
+    assert got == ranked(knn_ivf(emb, queries, k=5, centroids=cents))
+    trained = ranked(knn_ivf(with_null, queries, k=5, n_cells=4, n_probe=4))
+    assert len(trained) == 15 and all(v != -1 for _, _, v in trained)
+
+
 # --------------------------------------------------------------- text analysis
 
 

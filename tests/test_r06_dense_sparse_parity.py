@@ -96,6 +96,59 @@ def test_cosjoin_dense_matches_sparse(spark, corpus):
     sparse.unpersist()
 
 
+def _null_id_corpus(spark):
+    texts = [
+        "alpha bravo charlie delta echo",
+        "alpha bravo charlie delta foxtrot",
+        "alpha bravo charlie golf hotel",
+        "india juliet kilo lima mike",
+        "india juliet kilo lima mike november",
+        "alpha bravo charlie delta echo",
+    ]
+    ids = [1, 2, 3, 4, 5, None]
+    return spark.createDataFrame(list(zip(ids, texts)), "doc_id bigint, text string")
+
+
+@pytest.mark.parametrize(
+    "join,val,cross",
+    [
+        (similarity_join, "jaccard", False),
+        (similarity_join, "jaccard", True),
+        (cosine_similarity_join, "cosine", False),
+    ],
+    ids=["ssjoin-self", "ssjoin-cross", "cosjoin-self"],
+)
+def test_dense_null_ids_match_sparse(spark, join, val, cross):
+    """A NULL-id doc pairs with nothing on the dense path, as on the
+    sparse one (in cross mode each side holds a NULL id)."""
+    df = _null_id_corpus(spark)
+    kw = {"threshold": 0.5, "tokens": "words"}
+    if cross:
+        kw["other"] = df
+    dense = join(df, **kw)
+    sparse = join(df, dense_max_vocab=0, **kw)
+    pairs = _pairs(dense, val)
+    assert pairs and pairs == _pairs(sparse, val)
+    dense.unpersist()
+    sparse.unpersist()
+
+
+def test_dense_leaves_nothing_cached(spark, corpus):
+    """Once the result is unpersisted, a dense self, dense cross and
+    dense cosine call leave no persisted RDD behind."""
+    jsc = spark.sparkContext._jsc
+    right = corpus.filter(F.col("doc_id") % 3 == 0)
+    calls = [
+        lambda: similarity_join(corpus, threshold=0.5),
+        lambda: similarity_join(corpus, threshold=0.5, other=right),
+        lambda: cosine_similarity_join(corpus, threshold=0.8, tokens="words"),
+    ]
+    for call in calls:
+        before = jsc.getPersistentRDDs().size()
+        call().unpersist()
+        assert jsc.getPersistentRDDs().size() == before
+
+
 def _spy_collects(monkeypatch, df):
     """Record (columns, rows returned) of every DataFrame.collect."""
     seen = []
@@ -114,7 +167,7 @@ def _spy_collects(monkeypatch, df):
 @pytest.mark.parametrize(
     "join,val,vocab_col,index_col,width",
     [
-        (similarity_join, "jaccard", "token", "bits", 4),
+        (similarity_join, "jaccard", "token", "vec", 4),
         (cosine_similarity_join, "cosine", "tok", "vec", 8),
     ],
     ids=["ssjoin", "cosjoin"],
