@@ -35,18 +35,20 @@ Two state contracts, chosen explicitly via ``state=``:
   shards (512 KiB) and 1024 shards: 512 MiB of state covers ~0.5M
   docs/shard ≈ 500M documents at the configured fpp — and n_shards is
   the linear scale-out knob.
+
+Both modes fold in the shared ``streaming/stateful.py::stateful_fold``
+with no timeout; the bloom mode's ``shard`` grouping column is projected
+away after it.
 """
 
 from __future__ import annotations
 
-from typing import Any, Iterator, Tuple
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from hyper_spark.functions.text import fingerprint_col
+from hyper_spark.streaming.stateful import stateful_fold
 
 __all__ = ["streaming_dedup"]
 
@@ -75,38 +77,19 @@ def streaming_dedup(
         fingerprint_col(F.col(text_col)).alias("fingerprint"),
         F.col(id_col),
     )
-
-    output_schema = (
-        f"fingerprint string, {id_field.name} {id_field.dataType.simpleString()}"
-    )
+    id_fields = [f"{id_field.name} {id_field.dataType.simpleString()}"]
 
     if state == "exact":
 
-        def update(
-            key: Tuple[Any, ...],
-            pdfs: Iterator[pd.DataFrame],
-            group_state: GroupState,
-        ) -> Iterator[pd.DataFrame]:
-            if group_state.exists:
-                for _ in pdfs:  # drain: all duplicates
-                    pass
-                return
-            first = None
-            for pdf in pdfs:
-                if len(pdf):
-                    cand = pdf[id_col].min()
-                    first = cand if first is None else min(first, cand)
-            if first is None:
-                return
-            group_state.update((True,))
-            yield pd.DataFrame({"fingerprint": [key[0]], id_col: [first]})
+        def first_arrival(seen, pdfs):
+            ids = [pdf[id_col].min() for pdf in pdfs if len(pdf)]
+            if seen or not ids:  # a tombstone: every arrival is a duplicate
+                return seen, None
+            return (True,), {id_col: [min(ids)]}
 
-        return prepared.groupBy("fingerprint").applyInPandasWithState(
-            update,
-            outputStructType=output_schema,
-            stateStructType="seen boolean",
-            outputMode=output_mode,
-            timeoutConf=GroupStateTimeout.NoTimeout,
+        return stateful_fold(
+            prepared, ["fingerprint"], F.lit(True), [F.col(id_col)],
+            "seen boolean", id_fields, first_arrival, output_mode,
         )
 
     # ---- bloom mode: shard-keyed, one bitmap per shard -----------------
@@ -115,22 +98,9 @@ def streaming_dedup(
     probe = BloomFilter.from_expected(capacity_per_shard, fpp)
     m_bits, k = probe.m_bits, probe.k
 
-    # the shard hash must NOT reuse the bloom's md5 position scheme —
-    # correlated shard/bit hashes would concentrate collisions; xxhash64
-    # of the fingerprint string is independent and JVM-computed. NULL
-    # fingerprints hash to one shard like any value (xxhash64 of NULL is
-    # the seed) and dedup to one winner inside it.
-    sharded = prepared.withColumn(
-        "shard", F.pmod(F.xxhash64("fingerprint"), F.lit(n_shards))
-    )
-
-    def update_bloom(
-        key: Tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        group_state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if group_state.exists:
-            blob, n_added = group_state.get
+    def admit(stored, pdfs):
+        if stored:
+            blob, n_added = stored
             bf = BloomFilter.from_bytes(m_bits, k, bytes(blob), n=int(n_added))
         else:
             bf = BloomFilter(m_bits, k)
@@ -149,14 +119,16 @@ def streaming_dedup(
                 bf.add(fkey)
                 out_fps.append(None if pd.isna(fp) else fp)
                 out_ids.append(did)
-        group_state.update((bytearray(bf.to_bytes()), bf.n))
-        if out_fps:
-            yield pd.DataFrame({"fingerprint": out_fps, id_col: out_ids})
+        rows = {"fingerprint": out_fps, id_col: out_ids} if out_fps else None
+        return (bytearray(bf.to_bytes()), bf.n), rows
 
-    return sharded.groupBy("shard").applyInPandasWithState(
-        update_bloom,
-        outputStructType=output_schema,
-        stateStructType="bits binary, n bigint",
-        outputMode=output_mode,
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    # the shard hash must NOT reuse the bloom's md5 position scheme —
+    # correlated shard/bit hashes would concentrate collisions; xxhash64
+    # of the fingerprint string is independent and JVM-computed. NULL
+    # fingerprints hash to one shard like any value (xxhash64 of NULL is
+    # the seed) and dedup to one winner inside it.
+    return stateful_fold(
+        prepared.withColumn("shard", F.pmod(F.xxhash64("fingerprint"), F.lit(n_shards))),
+        ["shard"], F.lit(True), [F.col("fingerprint"), F.col(id_col)],
+        "bits binary, n bigint", ["fingerprint string", *id_fields], admit, output_mode,
+    ).drop("shard")

@@ -32,7 +32,7 @@ from hyper_spark.kernel.hll import (
     estimate_from_registers,
 )
 from hyper_spark.streaming.quantiles_window_stream import quantile_fold
-from hyper_spark.streaming.stateful import EventWindow, stateful_fold
+from hyper_spark.streaming.stateful import EventTime, stateful_fold
 
 __all__ = [
     "streaming_sketch_by",
@@ -149,10 +149,10 @@ def streaming_windowed_sketch_by(
         df, keys, F.col(col).isNotNull(), [idx.alias("idx"), rho.alias("rho")],
         "registers binary", _HLL_FIELDS + ["final boolean"],
         _hll_fold(p, state_encoding, final=[False]), output_mode,
-        close=lambda state: _hll_rows(
+        close=lambda state, _wm: (None, _hll_rows(
             p, decode_register_blob(p, state[0], state_encoding), final=[True]
-        ),
-        window=EventWindow(ts_col, window, watermark, slide),
+        )),
+        event_time=EventTime(ts_col, watermark, window, slide),
     )
 
 

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from hyper_spark.operators.quantiles import _CLASSES, _KINDS, _q_name
-from hyper_spark.streaming.stateful import EventWindow, stateful_fold
+from hyper_spark.streaming.stateful import EventTime, stateful_fold
 
 __all__ = ["streaming_windowed_quantiles"]
 
@@ -83,6 +83,6 @@ def streaming_windowed_quantiles(
         df, keys, F.col(col).isNotNull(), [F.col(col).cast("double").alias("__v")],
         "state binary", fields, lambda state, pdfs: (fold(state, pdfs)[0], None),
         output_mode,
-        close=lambda state: rows(load(state)),
-        window=EventWindow(ts_col, window, watermark),
+        close=lambda state, _wm: (None, rows(load(state))),
+        event_time=EventTime(ts_col, watermark, window),
     )

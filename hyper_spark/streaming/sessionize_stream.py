@@ -12,6 +12,15 @@ extend or bridge it anymore. State is then dropped, so per-key state is
 bounded by the number of sessions still inside the watermark horizon
 (≈ gap/watermark-delay worth of activity), never by stream length.
 
+The fold runs in the shared ``streaming/stateful.py::stateful_fold``:
+this module supplies the interval merge, the key's deadline (its
+earliest open session's last event + gap, + 1 ms) and the close, which
+emits the sessions the watermark has passed (last + gap <= watermark)
+and keeps the rest. Event
+times reach the merge as epoch micros computed JVM-side, and session
+bounds leave it tz-aware, so a fall-back hour in the session time zone
+is no different from any other hour.
+
 Batch parity: after a final watermark flush, the emitted sessions are
 exactly the batch ``sessionize`` partition of the same rows (same gap
 rule; order-insensitive because merging is commutative) — the oracle
@@ -21,13 +30,14 @@ sessionization.
 
 from __future__ import annotations
 
-from typing import Any, Iterator, Sequence, Tuple
+from typing import Sequence
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from hyper_spark.streaming.stateful import EventTime, stateful_fold
 
 __all__ = ["streaming_sessionize"]
 
@@ -36,29 +46,30 @@ def _merge_runs(
     starts: np.ndarray, lasts: np.ndarray, counts: np.ndarray, gap: float
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Merge (start, last, count) runs whose gaps are <= gap. Inputs need
-    not be sorted; output sorted by start. Pure numpy, no Python loop
-    over rows — only over merged runs."""
+    not be sorted; output sorted by start. Pure numpy, no Python loop:
+    over the start-sorted runs the running max of ``lasts`` is always
+    the current merged run's last, so a new run begins wherever a start
+    lies more than ``gap`` past the running max before it."""
     order = np.argsort(starts, kind="stable")
     s, l, c = starts[order], lasts[order], counts[order]
-    out_s, out_l, out_c = [], [], []
-    cur_s, cur_l, cur_c = s[0], l[0], c[0]
-    for i in range(1, len(s)):
-        if s[i] - cur_l <= gap:
-            cur_l = max(cur_l, l[i])
-            cur_c += c[i]
-        else:
-            out_s.append(cur_s)
-            out_l.append(cur_l)
-            out_c.append(cur_c)
-            cur_s, cur_l, cur_c = s[i], l[i], c[i]
-    out_s.append(cur_s)
-    out_l.append(cur_l)
-    out_c.append(cur_c)
+    reach = np.maximum.accumulate(l)
+    heads = np.flatnonzero(np.r_[True, s[1:] - reach[:-1] > gap])
+    return s[heads], np.maximum.reduceat(l, heads), np.add.reduceat(c, heads)
+
+
+def _runs(state: tuple) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    starts, lasts, counts = state
     return (
-        np.asarray(out_s, dtype=np.float64),
-        np.asarray(out_l, dtype=np.float64),
-        np.asarray(out_c, dtype=np.int64),
+        np.asarray(starts, dtype=np.float64),
+        np.asarray(lasts, dtype=np.float64),
+        np.asarray(counts, dtype=np.int64),
     )
+
+
+def _utc(seconds: np.ndarray) -> pd.DatetimeIndex:
+    # tz-aware, so pyspark need not re-localize a wall time (which it
+    # cannot do right inside a fall-back hour)
+    return pd.to_datetime((seconds * 1e9).astype("int64"), utc=True)
 
 
 def streaming_sessionize(
@@ -79,92 +90,43 @@ def streaming_sessionize(
     Structured Streaming: nothing advances the watermark past them); for
     a terminating replay, append a sentinel row far in the future to
     flush. Default output_mode is 'append' because every emitted row is
-    final by construction."""
+    final by construction. Rows with a NULL ``ts_col`` are skipped."""
     keys = list(keys)
     if not keys:
         raise ValueError("streaming sessionization needs at least one key")
-    session_tz = df.sparkSession.conf.get("spark.sql.session.timeZone")
-    prepared = df.withWatermark(ts_col, watermark).select(*keys, F.col(ts_col))
 
-    out_fields = [
-        f"{df.schema[k].name} {df.schema[k].dataType.simpleString()}" for k in keys
-    ] + [
-        "session_start timestamp",
-        "session_end timestamp",
-        "n_events bigint",
-    ]
-    output_schema = ", ".join(out_fields)
-    state_schema = "starts array<double>, lasts array<double>, counts array<bigint>"
+    def fold(state, pdfs):
+        # epoch seconds from the JVM's epoch micros, as ns / 1e9
+        ts = [pdf["__us"].to_numpy(dtype=np.int64) * 1000 / 1e9 for pdf in pdfs if len(pdf)]
+        runs = _runs(state) if state else (np.empty(0), np.empty(0), np.empty(0, np.int64))
+        if ts:
+            ts = np.concatenate(ts)
+            runs = [np.concatenate(p) for p in zip(runs, (ts, ts, np.ones(len(ts), np.int64)))]
+        if not len(runs[0]):
+            return None, None
+        return tuple(r.tolist() for r in _merge_runs(*runs, gap)), None
 
-    def _epoch(series: pd.Series) -> np.ndarray:
-        s = pd.to_datetime(series)
-        try:
-            s = s.dt.tz_localize(session_tz)
-        except TypeError:  # already tz-aware
-            pass
-        return (s.astype("int64") / 1e9).to_numpy()
-
-    def update(
-        key: Tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            st, lt, ct = state.get
-            starts = np.asarray(st, dtype=np.float64)
-            lasts = np.asarray(lt, dtype=np.float64)
-            counts = np.asarray(ct, dtype=np.int64)
-        else:
-            starts = np.empty(0)
-            lasts = np.empty(0)
-            counts = np.empty(0, dtype=np.int64)
-
-        new_ts = []
-        if not state.hasTimedOut:
-            for pdf in pdfs:
-                if len(pdf):
-                    new_ts.append(_epoch(pdf[ts_col]))
-        if new_ts:
-            ts = np.concatenate(new_ts)
-            starts = np.concatenate([starts, ts])
-            lasts = np.concatenate([lasts, ts])
-            counts = np.concatenate([counts, np.ones(len(ts), dtype=np.int64)])
-        if len(starts) == 0:
-            if state.exists:
-                state.remove()
-            return
-        starts, lasts, counts = _merge_runs(starts, lasts, counts, gap)
-
-        # close every session the watermark has passed (last + gap <= wm:
-        # no in-watermark row can extend or bridge it anymore)
-        wm = state.getCurrentWatermarkMs() / 1000.0
-        closed = lasts + gap <= wm
-        if closed.any():
-            out = {k: [key[i]] * int(closed.sum()) for i, k in enumerate(keys)}
-            tz_start = pd.to_datetime((starts[closed] * 1e9).astype("int64")).tz_localize("UTC")
-            tz_end = pd.to_datetime((lasts[closed] * 1e9).astype("int64")).tz_localize("UTC")
-            out["session_start"] = tz_start.tz_convert(session_tz).tz_localize(None)
-            out["session_end"] = tz_end.tz_convert(session_tz).tz_localize(None)
-            out["n_events"] = counts[closed]
-            yield pd.DataFrame(out)
+    def close(state, watermark_ms):
+        # every session the watermark has passed (last + gap <= wm): no
+        # in-watermark row can extend or bridge it anymore
+        starts, lasts, counts = _runs(state)
+        closed = lasts + gap <= watermark_ms / 1000.0
+        if not closed.any():
+            return state, None
         keep = ~closed
-        if keep.any():
-            state.update(
-                (
-                    [float(x) for x in starts[keep]],
-                    [float(x) for x in lasts[keep]],
-                    [int(x) for x in counts[keep]],
-                )
-            )
-            # wake up when the earliest remaining session becomes closable
-            state.setTimeoutTimestamp(int((lasts[keep].min() + gap) * 1000) + 1)
-        else:
-            state.remove()
+        kept = (starts[keep].tolist(), lasts[keep].tolist(), counts[keep].tolist())
+        return kept if keep.any() else None, {
+            "session_start": _utc(starts[closed]),
+            "session_end": _utc(lasts[closed]),
+            "n_events": counts[closed],
+        }
 
-    return prepared.groupBy(*keys).applyInPandasWithState(
-        update,
-        outputStructType=output_schema,
-        stateStructType=state_schema,
-        outputMode=output_mode,
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return stateful_fold(
+        df, keys, F.col(ts_col).isNotNull(), [F.unix_micros(F.col(ts_col)).alias("__us")],
+        "starts array<double>, lasts array<double>, counts array<bigint>",
+        ["session_start timestamp", "session_end timestamp", "n_events bigint"],
+        fold, output_mode, close=close,
+        # wake up when the earliest open session becomes closable
+        deadline=lambda state: int((min(state[1]) + gap) * 1000) + 1,
+        event_time=EventTime(ts_col, watermark),
     )

@@ -47,7 +47,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from hyper_spark.streaming.stateful import EventWindow, stateful_fold
+from hyper_spark.streaming.stateful import EventTime, stateful_fold
 
 __all__ = ["streaming_sliding_tuple_entries"]
 
@@ -110,8 +110,8 @@ def kmin_admissions(
         "entries binary",
         ["h bigint", "summary double", "k int", "hash_fn string"],
         lambda state, pdfs: _admit(state, pdfs, k), output_mode,
-        window=EventWindow(
-            ts_col, grain, watermark, names=("__ws", "__we"), emit=("bucket_ts",)
+        event_time=EventTime(
+            ts_col, watermark, grain, names=("__ws", "__we"), emit=("bucket_ts",)
         ),
     )
 

@@ -1,24 +1,33 @@
-"""One stateful fold for every streaming sketch.
+"""One stateful fold for every stream operator.
 
 A sketch is a mergeable state, so its streaming form is the batch state
 folded once per micro-batch: per group key, read the stored state, fold
 the batch's rows into it, store it back and emit rows. ``stateful_fold``
 owns everything around the fold — the ``applyInPandasWithState`` call,
 the output schema built from the key fields, the state read and write,
-and the key columns in front of every emitted row — so a family supplies
-only its state schema, its value fields, ``fold(state, pdfs) → (state,
-rows)`` and, when windowed, ``close(state) → rows``.
+the key columns in front of every emitted row and the event-time
+deadlines — so a family supplies only its state schema, its value
+fields, ``fold(state, pdfs) → (state, rows)`` and, when it closes on
+event time, ``close(state, watermark_ms) → (state, rows)``.
 
-Windowed operators group by ``(*keys, start, end)`` of an event-time
-window and close a window's state when the watermark passes its end: at
-that point Spark has already dropped every row that could still belong
-to it, so the close is lossless. The window end arrives in the key
-tz-naive, rendered in the session time zone, and is localized here
-before taking epoch millis (otherwise the deadline shifts by the zone's
-offset: early west of UTC, late east). A window whose deadline the
-watermark has already reached when a batch folds (possible on replays;
-``setTimeoutTimestamp`` raises on a past deadline) closes inline.
-Non-windowed operators keep their state forever (``NoTimeout``).
+Deadlines. With ``event_time`` the stream is watermarked on its
+timestamp column and every key carries one event-time deadline (epoch
+millis), stored as its timeout. Each family has its own rule: an
+event-time window's deadline is its end, read from the batch, and the
+window closes once the watermark reaches it; gap sessions and
+transitions pass ``deadline(state)`` (last event plus the gap or the
+close delay, + 1 ms), and their ``close`` itself picks what the
+watermark has passed. One close path serves both ways a key comes due:
+Spark times it out once the watermark passes its deadline, and a batch
+that folds when the watermark has already passed it (possible on
+replays; ``setTimeoutTimestamp`` raises on a past deadline) closes
+inline. ``close`` may keep part of the state (a session store keeps its
+still-open sessions); the kept state's next deadline is stored with it.
+Without ``event_time`` state is kept forever (``NoTimeout``).
+
+Every epoch is computed JVM-side. Pandas gets timestamps tz-naive in
+the session time zone, which cannot be mapped back to an instant inside
+a fall-back hour (``AmbiguousTimeError``).
 
 The grouping columns, the state schema, the output mode and the timeout
 conf are the checkpoint contract: a query restarting on stored state
@@ -35,28 +44,42 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-__all__ = ["EventWindow", "stateful_fold"]
+__all__ = ["EventTime", "stateful_fold"]
 
 Rows = Optional[dict]
-Fold = Callable[[Optional[tuple], Iterator[pd.DataFrame]], Tuple[tuple, Rows]]
-Close = Callable[[tuple], Rows]
+State = Optional[tuple]
+Fold = Callable[[State, Iterator[pd.DataFrame]], Tuple[State, Rows]]
+Close = Callable[[tuple, int], Tuple[State, Rows]]
 
 
 @dataclass(frozen=True)
-class EventWindow:
-    """An event-time window over ``ts_col``, grouped as the columns
-    ``names`` (start, end) after the keys and emitted as ``emit``, a
-    renamed prefix of them. The watermarked ``ts_col`` rides along into
-    the stateful operator's child plan: extracting ``window.start``
-    strips the watermark metadata, and Spark then rejects
-    ``EventTimeTimeout``."""
+class EventTime:
+    """Event time on ``ts_col``, watermarked ``watermark`` behind the
+    latest event. With ``window`` the groups are also event-time
+    windows, grouped as the columns ``names`` (start, end) after the
+    keys and emitted as ``emit``, a renamed prefix of them. The
+    watermarked ``ts_col`` rides along into the stateful operator's
+    child plan: extracting ``window.start`` strips the watermark
+    metadata, and Spark then rejects ``EventTimeTimeout``."""
 
     ts_col: str
-    length: str
     watermark: str
+    window: str | None = None
     slide: str | None = None
     names: Tuple[str, str] = ("window_start", "window_end")
     emit: Tuple[str, ...] = ("window_start", "window_end")
+
+
+def _drop(state: tuple, watermark_ms: int) -> Tuple[State, Rows]:
+    return None, None
+
+
+def _first_end(pdfs: Iterator[pd.DataFrame], ends: list) -> Iterator[pd.DataFrame]:
+    """Pass ``pdfs`` through, noting the window end of the first row."""
+    for pdf in pdfs:
+        if len(pdf) and not ends:
+            ends.append(int(pdf["__end"].iat[0]))
+        yield pdf
 
 
 def stateful_fold(
@@ -68,32 +91,42 @@ def stateful_fold(
     fields: Sequence[str],
     fold: Fold,
     output_mode: str,
-    close: Close = lambda state: None,
-    window: EventWindow | None = None,
+    close: Close = _drop,
+    deadline: Callable[[tuple], int] | None = None,
+    event_time: EventTime | None = None,
 ) -> DataFrame:
     """Fold ``df``'s rows passing ``where`` into one state per group:
-    DataFrame[*keys, *window.emit, *fields].
+    DataFrame[*keys, *event_time.emit (windowed only), *fields].
 
     ``values`` are the columns ``fold`` reads from each pandas batch;
     ``fold(state, pdfs)`` gets the stored state tuple (``None`` for a
-    new group) and returns the state to store and the rows to emit (a
-    dict of equal-length value columns, or ``None``); ``close(state)``
-    gives the rows a window emits when it closes (none by default)."""
+    new group) and returns the state to store (``None`` stores none)
+    and the rows to emit (a dict of equal-length value columns, or
+    ``None``). ``deadline(state)`` is a non-windowed family's next
+    deadline in epoch millis. ``close(state, watermark_ms)`` returns the
+    state to keep and the rows to emit (by default it drops the state
+    and emits nothing); it runs when a window's end or a timeout comes
+    due, and after every fold of a family with a ``deadline``."""
     keys = list(keys)
     cols, group_cols = [*keys], [*keys]
     out_names = [df.schema[k].name for k in keys]
     out_fields = [f"{n} {df.schema[n].dataType.simpleString()}" for n in out_names]
-    if window is not None:
-        df = df.withWatermark(window.ts_col, window.watermark)
-        win = F.window(F.col(window.ts_col), window.length, window.slide)
-        cols += [win["start"].alias(window.names[0]), win["end"].alias(window.names[1])]
-        group_cols += window.names
-        values = [*values, F.col(window.ts_col)]
-        out_names += window.emit
-        out_fields += [f"{name} timestamp" for name in window.emit]
-        session_tz = df.sparkSession.conf.get("spark.sql.session.timeZone")
+    window = event_time is not None and event_time.window is not None
+    if event_time is not None:
+        df = df.withWatermark(event_time.ts_col, event_time.watermark)
+        values = [*values, F.col(event_time.ts_col)]
+    if window:
+        win = F.window(F.col(event_time.ts_col), event_time.window, event_time.slide)
+        cols += [win["start"].alias(event_time.names[0]), win["end"].alias(event_time.names[1])]
+        group_cols += event_time.names
+        values.append(F.unix_millis(win["end"]).alias("__end"))
+        out_names += event_time.emit
+        out_fields += [f"{name} timestamp" for name in event_time.emit]
     if not group_cols:
         raise ValueError("streaming sketches need at least one group key")
+
+    def due(state: State) -> Optional[int]:
+        return None if state is None or deadline is None else deadline(state)
 
     def emit(key: Tuple[Any, ...], rows: Rows) -> Iterator[pd.DataFrame]:
         if rows is not None:
@@ -106,23 +139,24 @@ def stateful_fold(
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
         if state.hasTimedOut:
-            stored = state.get
-            state.remove()
-            yield from emit(key, close(stored))
-            return
-        new, rows = fold(state.get if state.exists else None, pdfs)
-        state.update(new)
+            new, rows, at = state.get, None, state.oldTimeoutTimestamp
+        else:
+            ends: list = []
+            new, rows = fold(
+                state.get if state.exists else None,
+                _first_end(pdfs, ends) if window else pdfs,
+            )
+            at = ends[0] if window else due(new)
         closing = None
-        if window is not None:
-            end = pd.Timestamp(key[len(keys) + 1])
-            if end.tz is None:
-                end = end.tz_localize(session_tz)
-            deadline = int(end.value // 10**6)
-            if state.getCurrentWatermarkMs() >= deadline:
-                state.remove()
-                closing = close(new)
-            else:
-                state.setTimeoutTimestamp(deadline)
+        if at is not None and (deadline is not None or state.getCurrentWatermarkMs() >= at):
+            new, closing = close(new, state.getCurrentWatermarkMs())
+            at = due(new)
+        if new is not None:
+            state.update(new)
+            if at is not None:
+                state.setTimeoutTimestamp(at)
+        elif state.exists:
+            state.remove()
         yield from emit(key, rows)
         yield from emit(key, closing)
 
@@ -137,7 +171,7 @@ def stateful_fold(
             outputMode=output_mode,
             timeoutConf=(
                 GroupStateTimeout.EventTimeTimeout
-                if window
+                if event_time is not None
                 else GroupStateTimeout.NoTimeout
             ),
         )

@@ -31,7 +31,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hyper_spark.streaming.stateful import EventWindow, stateful_fold
+from hyper_spark.streaming.stateful import EventTime, stateful_fold
 
 __all__ = ["streaming_windowed_topk"]
 
@@ -82,9 +82,9 @@ def streaming_windowed_topk(
         vs = list(summary)
         return (vs, [summary[v][0] for v in vs], [summary[v][1] for v in vs]), None
 
-    def close(state):
+    def close(state, _wm):
         top = sorted(zip(*state), key=lambda t: (-t[1], t[0]))[:k]
-        return {
+        return None, {
             "value": [t[0] for t in top],
             "est_count": [t[1] for t in top],
             "err_bound": [t[2] for t in top],
@@ -96,5 +96,5 @@ def streaming_windowed_topk(
         "vals array<string>, counts array<bigint>, errs array<bigint>",
         ["value string", "est_count bigint", "err_bound bigint", "rank int"],
         fold, output_mode, close=close,
-        window=EventWindow(ts_col, window, watermark),
+        event_time=EventTime(ts_col, watermark, window),
     )

@@ -38,19 +38,43 @@ Output rows are per-key pair counts [key, from_state, to_state, n] —
 final by construction (append mode); a downstream
 ``groupBy(from_state, to_state).sum(n)`` reproduces the batch
 ``transitions`` counts exactly (pytest-asserted parity incl. bounds).
+
+Both modes are one fold in the shared
+``streaming/stateful.py::stateful_fold``, which sets the key's deadline
+(last event + ``close_after``, + 1 ms) and runs the close that emits the
+pairs. They keep their two stored state layouts: the exact mode stores
+only the buffer, the bounded mode the buffer plus the folded counter.
 """
 
 from __future__ import annotations
 
 from collections import Counter
-from typing import Any, Iterator, Tuple
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from hyper_spark.streaming.stateful import EventTime, stateful_fold
 
 __all__ = ["streaming_transitions"]
+
+_BUFFER = "orders array<double>, states array<string>, last_ts double"
+_FOLDED = (
+    ", ffrom array<string>, fto array<string>, fn array<long>, "
+    "folded_last string, first_state string, has_folded boolean, "
+    "fmax_order double"
+)
+
+
+def _load(state: tuple | None) -> tuple:
+    """A stored state of either layout, or none, as (orders, states,
+    last_ts, counter, folded_last, first_state, fmax); nothing folded
+    is (…, Counter(), None, None, -inf)."""
+    orders, states, last_ts, *folded = state or ([], [], float("-inf"))
+    if folded and folded[5]:  # has_folded
+        ffrom, fto, fn, folded_last, first_state, _, fmax = folded
+        counter = Counter(dict(zip(zip(ffrom, fto), fn)))
+        return list(orders), list(states), last_ts, counter, folded_last, first_state, fmax
+    return list(orders), list(states), last_ts, Counter(), None, None, float("-inf")
 
 
 def streaming_transitions(
@@ -77,117 +101,59 @@ def streaming_transitions(
     far-future sentinel row to flush, as with streaming_sessionize."""
     if max_buffer is not None and max_buffer < 4:
         raise ValueError(f"max_buffer must be >= 4, got {max_buffer}")
-    prepared = (
-        df.withWatermark(ts_col, watermark)
-        .filter(F.col(state_col).isNotNull())
-        .select(
-            F.col(key).cast("string").alias("__k"),
-            F.col(ts_col),
-            # epoch seconds computed JVM-side: the pandas path would
-            # need per-batch tz localization (what stateful_fold does
-            # for a window end)
-            F.col(ts_col).cast("timestamp").cast("double").alias("__t"),
-            F.col(order_col).cast("double").alias("__o"),
-            F.col(state_col).cast("string").alias("__s"),
-        )
-    )
-    output_schema = (
-        f"{key} string, from_state string, to_state string, n bigint"
-    )
-    state_schema = "orders array<double>, states array<string>, last_ts double"
+    bounded = max_buffer is not None
 
-    def emit(k, orders, states) -> pd.DataFrame:
-        seq = [s for _, s in sorted(zip(orders, states))]
-        pairs: Counter = Counter(zip(seq, seq[1:]))
-        if include_bounds and seq:
-            pairs[(start_state, seq[0])] += 1
-            pairs[(seq[-1], end_state)] += 1
-        items = sorted(pairs.items())
-        return pd.DataFrame(
-            {
-                key: [k[0]] * len(items),
-                "from_state": [a for (a, _), _n in items],
-                "to_state": [b for (_, b), _n in items],
-                "n": [n for _pair, n in items],
-            }
+    def fold_oldest(orders, states, counter, folded_last, first_state):
+        """Fold the oldest entries of the sorted buffer, all but its
+        newest max_buffer // 2, into the pair counter; the fold
+        frontier's order becomes the horizon."""
+        seq = sorted(zip(orders, states))
+        cut, rest = seq[: len(seq) - max_buffer // 2], seq[len(seq) - max_buffer // 2:]
+        folded = [s for _, s in cut]
+        chain = ([folded_last] if folded_last is not None else []) + folded
+        counter.update(zip(chain, chain[1:]))
+        return (
+            [o for o, _ in rest], [s for _, s in rest], counter, folded[-1],
+            folded[0] if first_state is None else first_state, cut[-1][0],
         )
 
-    def update(
-        k: Tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            orders, states, _ = state.get
-            state.remove()
-            if states:
-                yield emit(k, orders, states)
-            return
-
-        if state.exists:
-            orders, states, last_ts = state.get
-            orders, states = list(orders), list(states)
-        else:
-            orders, states, last_ts = [], [], float("-inf")
+    def fold(state, pdfs):
+        orders, states, last_ts, counter, folded_last, first_state, fmax = _load(state)
         for pdf in pdfs:
+            if bounded:
+                # the order horizon: arrivals whose order precedes the fold
+                # frontier are dropped, as the watermark drops late event time
+                pdf = pdf[pdf["__o"] > fmax]
             if not len(pdf):
                 continue
             orders.extend(float(o) for o in pdf["__o"])
             states.extend(str(s) for s in pdf["__s"])
             last_ts = max(last_ts, float(pdf["__t"].max()))
-        if states:
-            deadline_ms = int((last_ts + close_after) * 1000) + 1
-            wm = state.getCurrentWatermarkMs()
-            if wm >= deadline_ms:
-                # a straggler for an already-expired key (or a batch
-                # whose watermark raced past the deadline): a timeout
-                # in the past is illegal — close the key NOW
-                state.remove()
-                yield emit(k, orders, states)
-            else:
-                state.update((orders, states, last_ts))
-                state.setTimeoutTimestamp(deadline_ms)
-        return
-
-    if max_buffer is None:
-        return prepared.groupBy("__k").applyInPandasWithState(
-            update,
-            outputStructType=output_schema,
-            stateStructType=state_schema,
-            outputMode=output_mode,
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-
-    # ---------------------------------------------- bounded-state mode
-    keep = max_buffer // 2
-    bounded_schema = (
-        "orders array<double>, states array<string>, last_ts double, "
-        "ffrom array<string>, fto array<string>, fn array<long>, "
-        "folded_last string, first_state string, has_folded boolean, "
-        "fmax_order double"
-    )
-
-    def fold(orders, states, counter, folded_last, first_state, fmax):
-        """Fold the oldest len-keep entries of the sorted buffer into the
-        pair counter; the fold frontier's order becomes the horizon."""
-        seq = sorted(zip(orders, states))
-        cut, rest = seq[: len(seq) - keep], seq[len(seq) - keep:]
-        folded = [s for _, s in cut]
-        if first_state is None:
-            first_state = folded[0]
-        chain = ([folded_last] if folded_last is not None else []) + folded
-        counter.update(zip(chain, chain[1:]))
+            if bounded and len(orders) > max_buffer:
+                orders, states, counter, folded_last, first_state, fmax = fold_oldest(
+                    orders, states, counter, folded_last, first_state
+                )
+        if not (states or counter):
+            return None, None
+        if not bounded:
+            return (orders, states, last_ts), None
+        items = sorted(counter.items())
         return (
-            [o for o, _ in rest],
-            [s for _, s in rest],
-            counter,
-            folded[-1],
-            first_state,
-            cut[-1][0],
-        )
+            orders, states, last_ts,
+            [a for (a, _b), _n in items], [b for (_a, b), _n in items], [n for _p, n in items],
+            folded_last if folded_last is not None else "",
+            first_state if first_state is not None else "",
+            folded_last is not None,
+            fmax if fmax != float("-inf") else -1.0e308,
+        ), None
 
-    def emit_bounded(k, counter, folded_last, first_state, orders, states):
-        pairs = Counter(counter)
+    def deadline(state):
+        return int((state[2] + close_after) * 1000) + 1
+
+    def close(state, watermark_ms):
+        if watermark_ms < deadline(state):
+            return state, None
+        orders, states, _, pairs, folded_last, first_state, _ = _load(state)
         seq = [s for _, s in sorted(zip(orders, states))]
         chain = ([folded_last] if folded_last is not None else []) + seq
         pairs.update(zip(chain, chain[1:]))
@@ -195,90 +161,25 @@ def streaming_transitions(
             pairs[(start_state, first_state if first_state is not None else chain[0])] += 1
             pairs[(chain[-1], end_state)] += 1
         items = sorted(pairs.items())
-        return pd.DataFrame(
-            {
-                key: [k[0]] * len(items),
-                "from_state": [a for (a, _), _n in items],
-                "to_state": [b for (_, b), _n in items],
-                "n": [n for _pair, n in items],
-            }
-        )
+        return None, {
+            "from_state": [a for (a, _), _n in items],
+            "to_state": [b for (_, b), _n in items],
+            "n": [n for _pair, n in items],
+        }
 
-    def unpack(state):
-        (orders, states, last_ts, ffrom, fto, fn,
-         folded_last, first_state, has_folded, fmax) = state.get
-        counter = Counter(dict(zip(zip(ffrom, fto), fn)))
-        if not has_folded:
-            folded_last, first_state, fmax = None, None, float("-inf")
-        return (
-            list(orders), list(states), last_ts, counter,
-            folded_last, first_state, fmax,
-        )
-
-    def update_bounded(
-        k: Tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            orders, states, _, counter, folded_last, first_state, _ = unpack(state)
-            state.remove()
-            if states or counter:
-                yield emit_bounded(k, counter, folded_last, first_state, orders, states)
-            return
-
-        if state.exists:
-            (orders, states, last_ts, counter,
-             folded_last, first_state, fmax) = unpack(state)
-        else:
-            orders, states, last_ts = [], [], float("-inf")
-            counter, folded_last, first_state, fmax = Counter(), None, None, float("-inf")
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            # the order horizon: arrivals whose order precedes the fold
-            # frontier are dropped, as the watermark drops late event time
-            pdf = pdf[pdf["__o"] > fmax]
-            if not len(pdf):
-                continue
-            orders.extend(float(o) for o in pdf["__o"])
-            states.extend(str(s) for s in pdf["__s"])
-            last_ts = max(last_ts, float(pdf["__t"].max()))
-            if len(orders) > max_buffer:
-                orders, states, counter, folded_last, first_state, fmax = fold(
-                    orders, states, counter, folded_last, first_state, fmax
-                )
-        if states or counter:
-            deadline_ms = int((last_ts + close_after) * 1000) + 1
-            wm = state.getCurrentWatermarkMs()
-            if wm >= deadline_ms:
-                state.remove()
-                yield emit_bounded(
-                    k, counter, folded_last, first_state, orders, states
-                )
-            else:
-                items = sorted(counter.items())
-                state.update(
-                    (
-                        orders,
-                        states,
-                        last_ts,
-                        [a for (a, _b), _n in items],
-                        [b for (_a, b), _n in items],
-                        [n for _p, n in items],
-                        folded_last if folded_last is not None else "",
-                        first_state if first_state is not None else "",
-                        folded_last is not None,
-                        fmax if fmax != float("-inf") else -1.0e308,
-                    )
-                )
-                state.setTimeoutTimestamp(deadline_ms)
-        return
-
-    return prepared.groupBy("__k").applyInPandasWithState(
-        update_bounded,
-        outputStructType=output_schema,
-        stateStructType=bounded_schema,
-        outputMode=output_mode,
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
+    return stateful_fold(
+        df.withColumn("__k", F.col(key).cast("string")), ["__k"],
+        F.col(state_col).isNotNull(),
+        [
+            # epoch seconds computed JVM-side, never from the tz-naive
+            # wall times pandas gets
+            F.col(ts_col).cast("timestamp").cast("double").alias("__t"),
+            F.col(order_col).cast("double").alias("__o"),
+            F.col(state_col).cast("string").alias("__s"),
+        ],
+        _BUFFER + _FOLDED if bounded else _BUFFER,
+        ["from_state string", "to_state string", "n bigint"],
+        fold, output_mode, close=close,
+        deadline=deadline,
+        event_time=EventTime(ts_col, watermark),
+    ).withColumnRenamed("__k", key)

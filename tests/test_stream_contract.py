@@ -8,20 +8,34 @@ analyzed ``FlatMapGroupsInPandasWithState`` node on a ``rate`` stream
 (no query is started) and pinned to the values the operators had
 before they shared one core. The output fields are pinned too, with the
 quantile probe names.
+
+The five operators that kept their own ``applyInPandasWithState`` call
+longest (sessionize, transitions in both state layouts, dedup in both
+state modes) are pinned the same way, except that their output is the
+fields of the DataFrame they return: the node may carry a grouping
+column the operator projects away, or name its key column before a
+rename. A last test keeps ``stateful_fold`` the library's only
+``applyInPandasWithState`` call.
 """
 
 from __future__ import annotations
+
+import ast
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
 from hyper_spark.streaming import (
     streaming_cms_by,
+    streaming_dedup,
     streaming_quantiles_by,
+    streaming_sessionize,
     streaming_sketch_by,
     streaming_sliding_theta_entries,
     streaming_sliding_tuple_entries,
     streaming_theta_by,
+    streaming_transitions,
     streaming_windowed_quantiles,
     streaming_windowed_sketch_by,
     streaming_windowed_topk,
@@ -91,6 +105,43 @@ CONTRACT = {
     ),
 }
 
+_PAIRS = ["g string", "from_state string", "to_state string", "n bigint"]
+_EXACT = ["orders array<double>", "states array<string>", "last_ts double"]
+
+# operator → (build, grouping, returned fields, state fields, mode, timeout)
+FOLDED = {
+    "streaming_sessionize": (
+        lambda s: streaming_sessionize(s, ["g"], "ts", gap=60.0),
+        _G,
+        ["g string", "session_start timestamp", "session_end timestamp",
+         "n_events bigint"],
+        ["starts array<double>", "lasts array<double>", "counts array<bigint>"],
+        "Append", "EventTimeTimeout",
+    ),
+    "streaming_transitions": (
+        lambda s: streaming_transitions(s, "g", "ts", "v", "g"),
+        [("__k", "string")], _PAIRS, _EXACT, "Append", "EventTimeTimeout",
+    ),
+    "streaming_transitions_max_buffer": (
+        lambda s: streaming_transitions(s, "g", "ts", "v", "g", max_buffer=8),
+        [("__k", "string")], _PAIRS,
+        _EXACT + ["ffrom array<string>", "fto array<string>", "fn array<bigint>",
+                  "folded_last string", "first_state string", "has_folded boolean",
+                  "fmax_order double"],
+        "Append", "EventTimeTimeout",
+    ),
+    "streaming_dedup": (
+        lambda s: streaming_dedup(s, "g", "v"),
+        [("fingerprint", "string")], ["fingerprint string", "v bigint"],
+        ["seen boolean"], "Append", "NoTimeout",
+    ),
+    "streaming_dedup_bloom": (
+        lambda s: streaming_dedup(s, "g", "v", state="bloom", n_shards=4),
+        [("shard", "bigint")], ["fingerprint string", "v bigint"],
+        ["bits binary", "n bigint"], "Append", "NoTimeout",
+    ),
+}
+
 
 @pytest.fixture(scope="module")
 def rate(spark):
@@ -151,6 +202,40 @@ def test_stateful_node_contract(rate, name):
     ]
     assert node.outputMode().toString() == mode
     assert node.timeout().toString() == timeout
+
+
+@pytest.mark.parametrize("name", sorted(FOLDED))
+def test_folded_node_contract(rate, name):
+    build, grouping, returned, state, mode, timeout = FOLDED[name]
+    out = build(rate)
+    node = _stateful_node(out)
+    assert [
+        (a.name(), a.dataType().simpleString())
+        for a in _attrs(node.groupingAttributes())
+    ] == grouping
+    assert [f"{f.name} {f.dataType.simpleString()}" for f in out.schema] == returned
+    assert [
+        (f"{f.name()} {f.dataType().simpleString()}", f.nullable(), f.dataType().json())
+        for f in node.stateType().fields()
+    ] == [
+        (f, True, _ddl_json(rate, f.split(" ", 1)[1])) for f in state
+    ]
+    assert node.outputMode().toString() == mode
+    assert node.timeout().toString() == timeout
+
+
+def test_only_the_core_calls_apply_in_pandas_with_state():
+    """Every stateful stream operator folds through
+    ``streaming/stateful.py::stateful_fold``: no other library module
+    names ``applyInPandasWithState``."""
+    root = Path(__file__).resolve().parents[1] / "hyper_spark"
+    callers = sorted(
+        str(path.relative_to(root))
+        for path in root.rglob("*.py")
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Attribute) and node.attr == "applyInPandasWithState"
+    )
+    assert set(callers) == {"streaming/stateful.py"}, callers
 
 
 def test_stream_quantile_names_and_checks(rate):
