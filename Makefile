@@ -10,7 +10,7 @@ bench:
 	$(PY) bench.py
 
 scaling:
-	$(PY) tools/bench_scaling.py 16.0 8
+	$(PY) tools/bench_scaling_executors.py 16.0 8
 
 correctness:
 	$(PY) tools/check_correctness.py

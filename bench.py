@@ -9,8 +9,8 @@ Prints ONE JSON line:
 The flagship number is ``turns_per_sec``: end-to-end HLL sketch-build
 throughput (scan → JVM hash → two-level mergeable aggregation →
 estimate) over the synthetic transcripts table at the same SF.
-Scaling evidence across parallelism levels lives in
-``tools/bench_scaling.py`` → ``BENCH/BASELINE.md``.
+Scaling evidence (N vs 4N executors) lives in
+``tools/bench_scaling_executors.py`` → ``BENCH/BASELINE.md``.
 """
 
 from __future__ import annotations

@@ -21,7 +21,10 @@ partial aggregates — the reference README's own map/reduce deployment,
 Workers start their JVMs, signal READY, and wait for GO; the measured
 window is GO → all partials written (a standing cluster's steady-state,
 not JVM boot). N=2 workers (8 cores) vs 4N=8 workers (32 cores), same
-input, same per-worker thread count. Usage:
+input, same per-worker thread count. The input is the transcripts
+parquet cached at ``.data/transcripts_sf<sf>``, written first by one
+worker session when it is missing. ``make scaling`` runs sf16 with 8
+reps; the result goes to ``BENCH/scaling_executors.json``. Usage:
 
     python tools/bench_scaling_executors.py [sf] [reps]
 """
@@ -31,6 +34,7 @@ from __future__ import annotations
 import glob
 import json
 import os
+import shutil
 import subprocess
 import sys
 import tempfile
@@ -41,13 +45,10 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 WORKER = r'''
 import json, os, sys, time
 sys.path.insert(0, __REPO__)
-worker_id = int(sys.argv[1])
-cores = int(sys.argv[2])
-ctrl_dir = sys.argv[3]
-files = json.load(open(os.path.join(ctrl_dir, f"slice_{worker_id}.json")))
+task, cores, ctrl_dir = sys.argv[1], int(sys.argv[2]), sys.argv[3]
 from pyspark.sql import SparkSession, functions as F
 spark = (SparkSession.builder.master(f"local[{cores}]")
-    .appName(f"executor-{worker_id}")
+    .appName(f"executor-{task}")
     .config("spark.sql.shuffle.partitions", str(cores))
     .config("spark.driver.memory", "6g")
     .config("spark.driver.extraJavaOptions",
@@ -56,6 +57,16 @@ spark = (SparkSession.builder.master(f"local[{cores}]")
     .config("spark.ui.showConsoleProgress", "false")
     .getOrCreate())
 spark.sparkContext.setLogLevel("ERROR")
+if task == "write":
+    # the transcripts table, generated once and cached on disk
+    from hyper_spark.packaging import distribute
+    from hyper_spark.sources.transcripts import write_transcripts
+    distribute(spark)
+    write_transcripts(spark, sys.argv[4], sf=float(sys.argv[5]))
+    spark.stop()
+    sys.exit()
+worker_id = int(task)
+files = json.load(open(os.path.join(ctrl_dir, f"slice_{worker_id}.json")))
 from hyper_spark.functions.hashing import hll_prepare
 from hyper_spark.operators.hll_agg import collect_sketches_from_registers
 
@@ -117,14 +128,32 @@ def _wait_quiet(threshold: float = 6.0, max_wait: float = 300.0) -> None:
         time.sleep(5.0)
 
 
+def worker_script(ctrl: str) -> str:
+    script = os.path.join(ctrl, "worker.py")
+    with open(script, "w") as f:
+        f.write(WORKER.replace("__REPO__", repr(REPO)))
+    return script
+
+
+def prepare_transcripts(data_dir: str, sf: float) -> None:
+    """Generate the transcripts parquet at ``data_dir`` in one worker
+    session (the ``write`` task), outside any measured window."""
+    ctrl = tempfile.mkdtemp(prefix="exec_scale_write_")
+    try:
+        subprocess.run(
+            [sys.executable, worker_script(ctrl), "write", "4", ctrl, data_dir, str(sf)],
+            check=True,
+        )
+    finally:
+        shutil.rmtree(ctrl, ignore_errors=True)
+
+
 def run_cluster(n_workers: int, cores: int, files: list[str], reps: int) -> dict:
     sys.path.insert(0, REPO)
     from hyper_spark.kernel.hll import HllSketch
 
     ctrl = tempfile.mkdtemp(prefix=f"exec_scale_{n_workers}_")
-    script = os.path.join(ctrl, "worker.py")
-    with open(script, "w") as f:
-        f.write(WORKER.replace("__REPO__", repr(REPO)))
+    script = worker_script(ctrl)
     # deal files round-robin (sizes are near-uniform)
     slices = [files[i::n_workers] for i in range(n_workers)]
     for i, sl in enumerate(slices):
@@ -167,6 +196,7 @@ def run_cluster(n_workers: int, cores: int, files: list[str], reps: int) -> dict
     open(os.path.join(ctrl, "stop"), "w").close()
     for p in procs:
         p.wait(timeout=60)
+    shutil.rmtree(ctrl, ignore_errors=True)
     import statistics
 
     return {
@@ -182,12 +212,11 @@ def run_cluster(n_workers: int, cores: int, files: list[str], reps: int) -> dict
 
 def main(sf: float = 16.0, reps: int = 5) -> None:
     data_dir = os.path.join(REPO, ".data", f"transcripts_sf{sf}")
+    if not os.path.exists(os.path.join(data_dir, "_SUCCESS")):
+        prepare_transcripts(data_dir, sf)
     files = sorted(glob.glob(os.path.join(data_dir, "*.parquet")))
-    if not files:
-        raise SystemExit(f"no transcripts at {data_dir}; run tools/bench_scaling.py first")
     r2 = run_cluster(2, 4, files, reps)
     r8 = run_cluster(8, 4, files, reps)
-    rows = None
     speedup = r2["sec"] / r8["sec"]
     med_speedup = r2["median_sec"] / r8["median_sec"]
     result = {

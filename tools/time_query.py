@@ -1,17 +1,23 @@
-"""Time named bench queries with the exact bench.py protocol (best-of-2
-fresh plans, clearCache between reps) without running the whole bench.
-Measurement-only tooling; bench.py stays frozen.
+"""Time named bench.py queries at a steady state without running the
+whole bench. Measurement-only tooling; bench.py stays frozen.
 
     python tools/time_query.py ssjoin_prefix_docs cosine_join_docs
     python tools/time_query.py --base HEAD^ --rounds 10 ssjoin_prefix_docs cosine_join_docs
 
+One process builds bench.py's session and queries, then calls each
+query 5 times with ``clearCache`` between calls. The first call pays
+the session's warm-up (codegen, broadcasts, the worker's imports), so a
+query's time is the median of calls 2-5; every call's time is printed
+too. The data and the cpu count come from bench.py's
+``SPARK_GRAFT_SF_DIR`` and ``SPARK_GRAFT_CPUS``.
+
 With ``--base`` the queries run interleaved against a base commit,
 extracted with ``tools/perf_ab.py``'s ``extract`` into a temporary
-directory: each round times both sides, each in a fresh process, the
-base first in odd rounds and this checkout first in even ones. It
-prints every round's pair, then per query the medians, how many rounds
-the change won and the base's spread (interquartile range / median),
-the figure a gain must clear.
+directory: each round times both sides, each in a fresh process with
+its own ``tools/time_query.py``, the base first in odd rounds and this
+checkout first in even ones. It prints every round's pair, then per
+query the medians, how many rounds the change won and the base's spread
+(interquartile range / median), the figure a gain must clear.
 """
 
 from __future__ import annotations
@@ -28,6 +34,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+CALLS = 5
+
 
 def time_queries(names: list[str]) -> dict:
     import bench
@@ -38,35 +46,24 @@ def time_queries(names: list[str]) -> dict:
 
     distribute(spark)
 
-    sf_dir = bench.SF_DIR
-    warm = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    warm.count()
-    from hyper_spark.operators.hll_agg import sketch_by
-
-    sketch_by(
-        warm.repartition(bench.CPUS), [], "l_orderkey", 10, strategy="partial"
-    ).count()
-
-    queries = bench.bench_queries(spark, sf_dir)
-    timings = {}
+    queries = bench.bench_queries(spark, bench.SF_DIR)
+    timings, calls_by = {}, {}
     for name in names:
         if name not in queries:
             print(f"unknown query {name}", file=sys.stderr)
             continue
-        reps = []
-        while len(reps) < 2 or (len(reps) == 2 and max(reps) > 1.5 * min(reps)):
+        calls = []
+        for _ in range(CALLS):
             t0 = time.perf_counter()
-            df = queries[name]()
-            n = df.count()
-            reps.append(time.perf_counter() - t0)
+            n = queries[name]().count()
+            calls.append(round(time.perf_counter() - t0, 3))
             spark.catalog.clearCache()
-        timings[name] = round(min(reps), 3)
-        print(
-            f"# {name}: {timings[name]:.3f}s best of {[round(r, 2) for r in reps]} ({n} rows)",
-            file=sys.stderr,
-        )
+        timings[name] = round(statistics.median(calls[1:]), 3)
+        calls_by[name] = calls
+        print(f"# {name}: {timings[name]:.3f}s median of calls 2-{CALLS} {calls} ({n} rows)",
+              file=sys.stderr)
     spark.stop()
-    return timings
+    return {**timings, "calls": calls_by}
 
 
 def interleaved(names: list[str], base_rev: str, rounds: int) -> dict:
